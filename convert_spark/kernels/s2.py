@@ -522,7 +522,9 @@ def _loops_contain_point(verts: np.ndarray, p: np.ndarray) -> np.ndarray:
     out-and-back slits degenerate bboxes collapse to) are re-decided by
     ``_exact_contains_scalar`` in exact rational arithmetic. This
     replaces the former blanket ``tri < 1e-300 -> contains nothing``
-    guess with an exact decision at every ambiguous site."""
+    guess with an exact decision at every ambiguous site. Chains of one
+    repeated vertex are the exception: their exact answer (False) is
+    known without rationals, so they never reach the scalar path."""
     n, kp1, _ = verts.shape
     a = verts[:, :-1, :]
     b = verts[:, 1:, :]
@@ -566,8 +568,14 @@ def _loops_contain_point(verts: np.ndarray, p: np.ndarray) -> np.ndarray:
     ).any(axis=1) | (np.abs(dets_sum) <= band * (kp1 - 1))
     crossings = crossing.sum(axis=1)
     even = (crossings % 2) == 0
-    inside = np.where(cen_inside, even, ~even) & ~maybe_degenerate
-    uncertain = np.flatnonzero(ties | maybe_degenerate)
+    # A chain whose vertices are all equal (a single-point bbox) has every
+    # cross product exactly zero, so the exact path would find no
+    # reference plane and return False: decide it here without rationals.
+    # Equal doubles are equal rationals (+0.0 == -0.0 included); a NaN
+    # vertex compares unequal and keeps the exact path's behaviour.
+    point = (verts == verts[:, :1, :]).all(axis=(1, 2))
+    inside = np.where(cen_inside, even, ~even) & ~maybe_degenerate & ~point
+    uncertain = np.flatnonzero((ties | maybe_degenerate) & ~point)
     for i in uncertain:
         inside[i] = _exact_contains_scalar(verts[i], p)
     return inside

@@ -143,10 +143,13 @@ def merge_tile_datasets(
     without re-aggregating history. bbox extrema and counts are
     decomposable (min/max/sum over the stored partials + the new batch's
     partials), and every derived field (center, DEM z, S2 covering) is a
-    function of the merged bbox alone — so each increment costs
-    O(|touched tiles| + |new points|), independent of how many points
-    built ``prev``. Deletions are out of scope (min/max are not
-    subtractable); the reference pipeline is append-only.
+    function of the merged bbox alone — so an increment never re-reads
+    the points that built ``prev``. It is NOT O(|touched tiles|): every
+    tile of ``prev``, touched or not, goes through the union, the
+    re-aggregation and the derived-field UDFs again, so an increment
+    costs O(|prev tiles| + |new points|) and its output is the whole
+    state. Deletions are out of scope (min/max are not subtractable);
+    the reference pipeline is append-only.
 
     ``prev`` is a ``tile_datasets`` output (or a previous merge);
     returns the same schema, equal to ``tile_datasets`` over the full

@@ -26,7 +26,9 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class SnapshotLog:
@@ -103,6 +105,38 @@ class SnapshotLog:
         return files
 
 
+def _write_counted(df: DataFrame, path: str, partition_by: list[str]) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written, counted by
+    an Observation attached directly above the write: the count rides in
+    the write's own result stage (where Spark applies each task's metric
+    update exactly once), so no separate count job runs."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return obs.get["rows"]
+
+
+def _durable(spark: SparkSession, df: DataFrame, path: str, partition_by: list[str]) -> DataFrame:
+    """The written parquet read back with the schema the write produced —
+    data columns, then partition columns — instead of inferring it from
+    the footers (a schema-inference job per read). Partition columns keep
+    their built type; the file source makes every field nullable."""
+    data = [f for f in df.schema.fields if f.name not in partition_by]
+    schema = T.StructType(data + [df.schema[c] for c in partition_by])
+    return spark.read.schema(schema).parquet(path)
+
+
+def _stage_meta(rows: int, wall: float, **extra) -> dict:
+    return {
+        "rows": rows,
+        "wall_s": round(wall, 3),
+        "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
+        **extra,
+    }
+
+
 def run_stage(
     spark: SparkSession,
     log: SnapshotLog,
@@ -120,6 +154,10 @@ def run_stage(
     and the stage re-executes rather than silently returning old data).
     Returns the stage's DataFrame read back from the committed parquet
     either way (downstream stages always consume the durable copy).
+
+    A fresh stage is ONE write action: the committed ``rows`` is observed
+    during the write and the durable copy is read with the written schema,
+    so no job runs after the write finishes.
     """
     path = log.stage_path(stage)
     snap = log.committed(stage)
@@ -127,26 +165,20 @@ def run_stage(
         return spark.read.parquet(path)
     t0 = time.time()
     df = build()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    out = spark.read.parquet(path)
-    rows = out.count()
-    wall = time.time() - t0
+    partition_by = partition_by or []
+    rows = _write_counted(df, path, partition_by)
     log.commit(
         stage,
-        {
-            "rows": rows,
-            "wall_s": round(wall, 3),
-            "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
-            "lineage": inputs or [],
-            "partition_by": partition_by or [],
-            "params": params or {},
-            "files": log._manifest(stage),
-        },
+        _stage_meta(
+            rows,
+            time.time() - t0,
+            lineage=inputs or [],
+            partition_by=partition_by,
+            params=params or {},
+            files=log._manifest(stage),
+        ),
     )
-    return out
+    return _durable(spark, df, path, partition_by)
 
 
 def run_stage_partitioned(
@@ -173,6 +205,10 @@ def run_stage_partitioned(
     the same column so the filter prunes at the scan instead of rescanning
     the full input per group (partition pruning; check PartitionFilters in
     explain).
+
+    Each group's ``rows`` is observed during its write (see ``run_stage``);
+    a fresh stage commits their sum. A stage that resumes earlier group
+    commits counts what is on disk instead (one extra job, resume only).
     """
     path = log.stage_path(stage)
     snap = log.committed(stage)
@@ -187,47 +223,34 @@ def run_stage_partitioned(
         ]
     done = log.partitions_committed(stage, params or {})
     missing = [v for v in partition_values if str(v) not in done]
+    written = 0
     # dynamic overwrite: a group write replaces ONLY its own partition dirs
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        from pyspark.sql import functions as F
-
         for i in range(0, len(missing), chunk_size):
             group = missing[i : i + chunk_size]
             tg = time.time()
-            part = df.filter(F.col(partition_col).isin(group))
-            part.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-            rows = spark.read.parquet(path).filter(F.col(partition_col).isin(group)).count()
-            wall = time.time() - tg
-            log.partition_commit(
-                stage,
-                group,
-                {
-                    "rows": rows,
-                    "wall_s": round(wall, 3),
-                    "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
-                    "params": params or {},
-                },
-            )
+            rows = _write_counted(df.filter(F.col(partition_col).isin(group)), path, [partition_col])
+            written += rows
+            log.partition_commit(stage, group, _stage_meta(rows, time.time() - tg, params=params or {}))
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    out = spark.read.parquet(path)
-    rows = out.count()
-    wall = time.time() - t0
+    out = _durable(spark, df, path, [partition_col])
+    resumed = sorted(set(map(str, partition_values)) - set(map(str, missing)))
+    rows = out.count() if resumed else written
     log.commit(
         stage,
-        {
-            "rows": rows,
-            "wall_s": round(wall, 3),
-            "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
-            "lineage": inputs or [],
-            "partition_by": [partition_col],
-            "params": params or {},
-            "partitions": sorted(log.partitions_committed(stage, params or {})),
-            "resumed_partitions": sorted(set(map(str, partition_values)) - set(map(str, missing))),
-            "files": log._manifest(stage),
-        },
+        _stage_meta(
+            rows,
+            time.time() - t0,
+            lineage=inputs or [],
+            partition_by=[partition_col],
+            params=params or {},
+            partitions=sorted(log.partitions_committed(stage, params or {})),
+            resumed_partitions=resumed,
+            files=log._manifest(stage),
+        ),
     )
     return out
 
@@ -241,8 +264,6 @@ def run_pipeline(spark: SparkSession, root: str, n_pages: int, zoom: int = 12) -
     PartitionFilters at the pages scan — a crash-resume reads ONLY the
     missing partitions' input, never a full rescan per group
     (tests/test_plans.py::TestPerPartitionResume)."""
-    from pyspark.sql import functions as F
-
     from .. import datagen
     from ..operators import extract, tiles
 

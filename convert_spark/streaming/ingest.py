@@ -16,7 +16,8 @@ files to completion synchronously (tests/test_platform.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import PAGES_SCHEMA
@@ -108,13 +109,29 @@ def foreach_batch_pipeline(pages: DataFrame, out_dir: str, zoom: int = 10):
     return pages.writeStream.foreachBatch(handle)
 
 
+def _observed_rows(obs: Observation) -> int | None:
+    """The ``rows`` an Observation counted, or None when its node is not in
+    the executed plan: adaptive execution replaces a subtree whose shuffle
+    wrote no rows by an empty relation, and an Observation below that
+    shuffle is dropped with it (its metrics come back as an empty row)."""
+    try:
+        return obs.get["rows"]
+    except Py4JJavaError as e:  # the JVM asserts the row has a schema
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        return None
+
+
 def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, metrics: bool = True):
     """Streaming maintenance of the per-tile dataset table (the daily-crawl
     shape, continuously): each micro-batch of new pages runs the SAME batch
     stages (extract -> normalize -> tile) and folds into the previous
-    state via ``tiles.merge_tile_datasets`` — O(|touched tiles| + |batch|)
-    per epoch, history never re-aggregated (q_tile_incremental pins
-    merge == full recompute).
+    state via ``tiles.merge_tile_datasets`` (q_tile_incremental pins
+    merge == full recompute). History's POINTS are never re-read, but the
+    fold is not O(|touched tiles|): every epoch re-finalizes (DEM z, S2
+    covering) and rewrites EVERY state tile, touched or not, so an epoch
+    costs O(|state tiles| + |batch|) and its write volume grows with the
+    state, not with the batch.
 
     Epoch commit protocol (resumable, idempotent under foreachBatch's
     replay-last-epoch semantics): state for epoch E is written to
@@ -128,6 +145,17 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
     (ADVICE r7: folding vE into itself would double-count the batch and
     overwrite the very directory being read). Prior versions stay until
     vacuumed, which also gives snapshot reads of any epoch.
+
+    Each epoch is one write action: ``rows_in`` and ``n_tiles`` are
+    Observations on that write, and the previous version is read with the
+    state schema from analysis, so no count or schema-inference job runs.
+    ``n_tiles`` is observed directly above the write (its result stage,
+    where each task's update applies once). ``rows_in`` is observed on the
+    input batch, BELOW the epoch's shuffle: a retried map stage re-applies
+    its update, so it can over-count. It is a log metric, never an output.
+    When adaptive execution prunes that observation (a batch that yields
+    no points) the handler counts the batch instead, one job after the
+    write.
 
     ``metrics=True`` (default) additionally commits one snapshot record
     per epoch through plans.snapshots.SnapshotLog — input rows, wall
@@ -160,13 +188,22 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
-        n_in = batch_df.count()
-        mentions = extract.extract_mentions(batch_df)
+        seen, written = Observation(), Observation()
+        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("rows"))
+        mentions = extract.extract_mentions(batch)
         tiled = tiles.with_tile(extract.normalize_points(mentions), zoom)
+        fresh = tiles.tile_datasets(tiled)
         prev_v = _base_version(int(epoch_id))
-        prev = None if prev_v is None else batch_df.sparkSession.read.parquet(f"{state_dir}/v{prev_v}")
-        out = tiles.tile_datasets(tiled) if prev is None else tiles.merge_tile_datasets(prev, tiled)
-        out.write.mode("overwrite").parquet(f"{state_dir}/v{epoch_id}")
+        if prev_v is None:
+            out = fresh
+        else:
+            # the state schema comes from analysis of the fresh plan: no
+            # footer-inference job on the previous version
+            prev = batch_df.sparkSession.read.schema(fresh.schema).parquet(f"{state_dir}/v{prev_v}")
+            out = tiles.merge_tile_datasets(prev, tiled)
+        out.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
+            f"{state_dir}/v{epoch_id}"
+        )
         (Path(state_dir) / "_LATEST").write_text(str(epoch_id))
         if metrics:
             wall = time.time() - t0
@@ -174,12 +211,14 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
                 {"path": p.name, "bytes": p.stat().st_size}
                 for p in sorted(Path(f"{state_dir}/v{epoch_id}").glob("part-*"))
             ]
-            n_tiles = batch_df.sparkSession.read.parquet(f"{state_dir}/v{epoch_id}").count()
+            n_in = _observed_rows(seen)
+            if n_in is None:
+                n_in = batch_df.count()
             SnapshotLog(f"{state_dir}/_log").commit(
                 f"epoch-{epoch_id}",
                 {
                     "rows_in": n_in,
-                    "n_tiles": n_tiles,
+                    "n_tiles": written.get["rows"],
                     "wall_s": round(wall, 3),
                     "rows_per_s": round(n_in / wall, 1) if wall > 0 else None,
                     "lineage": ["pages-stream"] + ([f"v{prev_v}"] if prev_v is not None else []),

@@ -123,7 +123,7 @@ def main() -> None:
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        rollup = run_stage(
+        run_stage(
             spark,
             log,
             "tile_poly_rollup",
@@ -171,13 +171,15 @@ def main() -> None:
         inputs=["tiled", "tile_datasets"],
         params=p,
     )
+    # the summary counts are the committed snapshots' rows: no re-count job
+    snaps = {s["stage"]: s for s in log._snapshots()}
     print(
         json.dumps(
             {
-                "stages": {s["stage"]: {"rows": s["rows"], "rows_per_sec": s["rows_per_sec"]} for s in log._snapshots()},
-                "tiles": datasets.count(),
-                "pip_rows": tagged.count(),
-                "rollup_tiles": rollup.count(),
+                "stages": {name: {"rows": s["rows"], "rows_per_sec": s["rows_per_sec"]} for name, s in snaps.items()},
+                "tiles": snaps["tile_datasets"]["rows"],
+                "pip_rows": snaps["pip_tagged"]["rows"],
+                "rollup_tiles": snaps["tile_poly_rollup"]["rows"],
                 "output": args.output,
             }
         )

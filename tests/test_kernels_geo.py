@@ -803,3 +803,117 @@ class TestS2PolarAdversarial:
             for i in range(len(verts)):
                 exact = self._exact_contains(verts[i], pole)
                 assert bool(got[i]) == exact, (i, corners[i].tolist())
+
+
+class TestS2SinglePointFastPath:
+    """``_loops_contain_point`` decides chains of one repeated vertex (the
+    corners of a single-point bbox) as "contains nothing" without the
+    rational path. Equivalence against the shape it replaced, where every
+    such chain went to ``_exact_contains_scalar``: identical tokens on a
+    corpus that is mostly single-point boxes, identical to the scalar
+    reference twin, and no single-point chain reaching the rational path."""
+
+    N = 1200
+
+    @classmethod
+    def _corpus(cls):
+        """Seeded EPSG:3857 bboxes: >= half single-point (lx == rx,
+        ly == uy), then sub-metre, 1e-9 m, polar, antimeridian and NaN
+        boxes, and ordinary ones."""
+        rng = np.random.RandomState(2024)
+        n = cls.N
+        x, y = mercator.to3857(rng.uniform(-179.9, 179.9, n), rng.uniform(-84, 84, n))
+        w = np.zeros(n)
+        h = np.zeros(n)
+        kind = rng.permutation(["point"] * (n * 3 // 5) + ["submetre", "nano", "wide"] * (n // 5 + 1))[:n]
+        w[kind == "submetre"] = rng.uniform(0.01, 0.99, (kind == "submetre").sum())
+        h[kind == "submetre"] = rng.uniform(0.0, 0.99, (kind == "submetre").sum())
+        w[kind == "nano"] = 1e-9
+        h[kind == "nano"] = rng.choice([0.0, 1e-9], size=(kind == "nano").sum())
+        w[kind == "wide"] = rng.uniform(1e3, 3e6, (kind == "wide").sum())
+        h[kind == "wide"] = rng.uniform(1e3, 3e6, (kind == "wide").sum())
+        lx, ly = x, y
+        rx, uy = x + w, y + h
+        extra = []
+        half = 20037508.342789244  # EPSG:3857 half-extent (lon 180)
+        for py in (3e7, -3e7, 6e7, -6e7):  # polar: lat ~89 and ~89.99
+            extra += [(0.0, py, 0.0, py), (1e5, py, 1e5, py), (-1e3, py, 1e3, py + 0.5)]
+        for ax in (half, -half, half - 1e-9):  # antimeridian
+            extra += [(ax, 1e6, ax, 1e6), (ax - 0.3, -2e6, ax, -2e6 + 0.3), (-half, 0.0, half, 1e3)]
+        extra += [(0.0, 0.0, 0.0, 0.0), (-0.0, 0.0, 0.0, -0.0)]  # origin, signed zeros
+        nan = float("nan")
+        extra += [(nan, 1.0, 1.0, 1.0), (1.0, nan, 1.0, 1.0), (nan, nan, nan, nan), (2.0, 2.0, 2.0, nan)]
+        e = np.asarray(extra, dtype=np.float64)
+        out = [np.concatenate([c, e[:, j]]) for j, c in enumerate((lx, ly, rx, uy))]
+        single = (out[0] == out[2]) & (out[1] == out[3])
+        assert single.mean() >= 0.5
+        return out
+
+    @staticmethod
+    def _rational_path(fast):
+        """The replaced shape: the same decision, with every single-point
+        chain re-decided by ``_exact_contains_scalar``."""
+
+        def contain(verts, p):
+            inside = fast(verts, p)
+            for i in np.flatnonzero((verts == verts[:, :1, :]).all(axis=(1, 2))):
+                inside[i] = s2._exact_contains_scalar(verts[i], p)
+            return inside
+
+        return contain
+
+    @staticmethod
+    def _counting_exact(calls):
+        exact = s2._exact_contains_scalar
+
+        def counted(verts_row, p):
+            calls.append(bool((verts_row == verts_row[0]).all()))
+            return exact(verts_row, p)
+
+        return counted
+
+    @pytest.mark.parametrize("elev", ["dem", "flat"])
+    def test_tokens_equal_rational_path(self, monkeypatch, elev):
+        from convert_spark.kernels import dem as demk
+
+        elev_fn = demk.get_elev if elev == "dem" else (lambda x, y: np.zeros_like(x))
+        lx, ly, rx, uy = self._corpus()
+        fast_calls, rational_calls = [], []
+        with monkeypatch.context() as m:
+            m.setattr(s2, "_exact_contains_scalar", self._counting_exact(fast_calls))
+            fast = s2.s2covering_tokens_batch(lx, ly, rx, uy, elev_fn)
+        with monkeypatch.context() as m:
+            m.setattr(s2, "_loops_contain_point", self._rational_path(s2._loops_contain_point))
+            m.setattr(s2, "_exact_contains_scalar", self._counting_exact(rational_calls))
+            rational = s2.s2covering_tokens_batch(lx, ly, rx, uy, elev_fn)
+        assert fast == rational
+        # the corpus exercises the replaced branch, and the fast path never takes it
+        assert sum(rational_calls) > self.N // 2
+        assert not any(fast_calls)
+
+    def test_tokens_equal_scalar_reference(self):
+        import s2_reference_impl as ref
+
+        from convert_spark.kernels import dem as demk
+
+        lx, ly, rx, uy = self._corpus()
+        got = s2.s2covering_tokens_batch(lx, ly, rx, uy, demk.get_elev)
+        for i in range(lx.size):
+            assert got[i] == ref.covering_tokens_s(lx[i], ly[i], rx[i], uy[i]), (i, lx[i], ly[i], rx[i], uy[i])
+
+    def test_containment_equal_rational_path_per_row(self):
+        """Per chain, both poles, including raw corners the covering never
+        builds: the OriginPoint chain (all-zero corners), signed zeros and
+        a NaN chain (unequal to itself, so it is not a single point)."""
+        rng = np.random.RandomState(5)
+        base = rng.uniform(-50, 50, (400, 1, 3))
+        corners = np.repeat(base, 4, axis=1)
+        corners[200:, 1:, :] += rng.choice([0.0, 1e-12, 1e-3], size=(200, 3, 3))
+        special = np.array([[[0.0, 0.0, 0.0]] * 4, [[0.0, -0.0, 1.0], [-0.0, 0.0, 1.0]] * 2])
+        pts = s2._normalize_points(np.concatenate([corners, special]))
+        verts = np.concatenate([pts, pts[:, :1, :]], axis=1)
+        rational = self._rational_path(s2._loops_contain_point)
+        for pole in (np.array([0.0, 0.0, 1.0]), np.array([0.0, 0.0, -1.0])):
+            np.testing.assert_array_equal(s2._loops_contain_point(verts, pole), rational(verts, pole))
+            nan_chain = np.full((1, 5, 3), np.nan)
+            np.testing.assert_array_equal(s2._loops_contain_point(nan_chain, pole), rational(nan_chain, pole))
