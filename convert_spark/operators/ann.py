@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import spread
+
 _SEED = 42
 
 
@@ -100,20 +102,6 @@ MAX_BROADCAST_ROWS = 100_000
 def _hyperplanes(dim: int, n_bits: int, seed: int = _SEED) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.normal(size=(n_bits, dim)).astype(np.float64)
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """At least default-parallelism partitions ahead of the signature /
-    assignment UDF passes: small test-scale vector tables scan as O(1)
-    splits, which pinned the Arrow matmul stages to one or two cores.
-    No-op (no exchange) when the input already has enough partitions —
-    the production case (round 8; same contract as queries._spread)."""
-    from ..session import num_partitions
-
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if num_partitions(df) >= p:
-        return df
-    return df.repartition(p)
 
 
 def _collect_small(df: DataFrame, what: str, max_rows: int = MAX_BROADCAST_ROWS):
@@ -357,17 +345,16 @@ def salt_hot_keys(
     return q2, r2, keys + ["__salt"]
 
 
-def _dot_expr(a, b, dim: int | None = None):
-    """Sequential left-to-right fold dot product (``dim`` accepted for
-    call-site symmetry, unused). An unrolled left-associated 64-term
-    getItem sum was measured 5x SLOWER than this fold at sf1.0 (the
-    giant expression defeats codegen), so the HOF form IS the fast
-    path; it also fixes the exact fp summation order the KAT twins pin
-    (tests/sketch_reference_impl.cosine_s)."""
+def _dot_expr(a, b):
+    """Sequential left-to-right fold dot product. An unrolled
+    left-associated 64-term getItem sum was measured 5x SLOWER than this
+    fold at sf1.0 (the giant expression defeats codegen), so the HOF form
+    IS the fast path; it also fixes the exact fp summation order the KAT
+    twins pin (tests/sketch_reference_impl.cosine_s)."""
     return F.aggregate(F.zip_with(a, b, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm_expr(v, dim: int | None = None):
+def _norm_expr(v):
     """sqrt(dot(v, v)) — precompute ONCE per vector before a candidate
     join: evaluating it per candidate pair triples the rerank's JVM work
     (the dominant cost of the bucketed paths at scale). The value is
@@ -375,10 +362,23 @@ def _norm_expr(v, dim: int | None = None):
     return F.sqrt(_dot_expr(v, v))
 
 
-def _cosine_expr(a: str, b: str, dim: int | None = None):
-    return _dot_expr(F.col(a), F.col(b)) / (
-        _norm_expr(F.col(a)) * _norm_expr(F.col(b))
+def _rerank_topk(pairs: DataFrame, qp: DataFrame, rp: DataFrame, k: int, id_q: str,
+                 id_r: str, cached: list[DataFrame]) -> DataFrame:
+    """The shared tail of the approximate top-k paths: candidate id pairs
+    (``id_q``, ``id_r``) re-join their vectors (``qp``: id_q + q_emb,
+    ``rp``: id_r + r_emb, each normed once per vector), exact cosine
+    rerank, window top-k (6dp rounding, ref-id tiebreak — the brute
+    baseline's contract); ``cached`` live as long as the result."""
+    q_vecs = qp.withColumn("q_n", _norm_expr(F.col("q_emb")))  # norm once per vector
+    r_vecs = rp.withColumn("r_n", _norm_expr(F.col("r_emb")))
+    cand = pairs.join(q_vecs, id_q).join(r_vecs, id_r)
+    sim = _dot_expr(F.col("q_emb"), F.col("r_emb")) / (F.col("q_n") * F.col("r_n"))
+    ranked = cand.withColumn("sim_r", F.round(sim, 6)).withColumn(
+        "rank",
+        F.row_number().over(Window.partitionBy(id_q).orderBy(F.col("sim_r").desc(), F.col(id_r).asc())),
     )
+    out = ranked.filter(F.col("rank") <= k).select(id_q, id_r, "sim_r", "rank")
+    return scope_caches(out, *cached)
 
 
 def neardup_lsh(
@@ -430,7 +430,7 @@ def neardup_lsh(
     # instead). Persisting a private projection, not the caller's
     # DataFrame, means the operator never mutates the input's cache state
     # or collides with a caller-chosen storage level (ADVICE r5).
-    corpus = _ensure_parallelism(
+    corpus = spread(
         vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
     ).persist()
     keyed = (
@@ -442,7 +442,7 @@ def neardup_lsh(
         .select(F.col(id_col), "band", "bucket")
         .persist()
     )
-    vecs = corpus.withColumn("__n", _norm_expr(F.col("__v"), dim))  # norm once per vector
+    vecs = corpus.withColumn("__n", _norm_expr(F.col("__v")))  # norm once per vector
     a = keyed.select(F.col(id_col).alias("a_id"), "band", "bucket")
     b = keyed.select(F.col(id_col).alias("b_id"), "band", "bucket")
     join_keys = ["band", "bucket"]
@@ -481,7 +481,7 @@ def neardup_lsh(
         vecs.select(F.col(id_col).alias("b_id"), F.col("__v").alias("b_v"), F.col("__n").alias("b_n")),
         "b_id",
     )
-    sim = _dot_expr(F.col("a_v"), F.col("b_v"), dim) / (F.col("a_n") * F.col("b_n"))
+    sim = _dot_expr(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n"))
     out = (
         cand.withColumn("sim_r", F.round(sim, 6))
         .filter(F.col("sim_r") >= threshold)
@@ -519,10 +519,10 @@ def ann_lsh_topk(
     # it, so none of them can run at raw-scan parallelism (the embeddings
     # parquet arrives as 1-2 row groups: the ref-side norm+exchange stage
     # measured 9.9 s CPU on TWO tasks at 10x bench scale)
-    qp = _ensure_parallelism(
+    qp = spread(
         queries.select(F.col(id_q), F.col(vec_col).cast("array<double>").alias("q_emb"))
     )
-    rp = _ensure_parallelism(
+    rp = spread(
         refs.select(F.col(id_r), F.col(vec_col).cast("array<double>").alias("r_emb"))
     )
     q = with_lsh_keys(qp, "q_emb", dim, bands, bits_per_band).select(
@@ -531,8 +531,6 @@ def ann_lsh_topk(
     r = with_lsh_keys(rp, "r_emb", dim, bands, bits_per_band).select(
         F.col(id_r), "band", "bucket"
     )
-    q_vecs = qp.withColumn("q_n", _norm_expr(F.col("q_emb"), dim))  # norm once per vector
-    r_vecs = rp.withColumn("r_n", _norm_expr(F.col("r_emb"), dim))
     join_keys = ["band", "bucket"]
     cached = []
     if bucket_cap:
@@ -542,21 +540,13 @@ def ann_lsh_topk(
         r = r.persist()
         cached.append(r)
         q, r, join_keys = salt_hot_keys(q, r, join_keys, bucket_cap, id_r)
-    cand = (
+    pairs = (
         q.join(r, join_keys, "inner")
         .filter(F.col(id_q) != F.col(id_r))
         .select(id_q, id_r)
         .dropDuplicates([id_q, id_r])
-        .join(q_vecs, id_q)
-        .join(r_vecs, id_r)
     )
-    sim = _dot_expr(F.col("q_emb"), F.col("r_emb"), dim) / (F.col("q_n") * F.col("r_n"))
-    ranked = cand.withColumn("sim_r", F.round(sim, 6)).withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy(id_q).orderBy(F.col("sim_r").desc(), F.col(id_r).asc())),
-    )
-    out = ranked.filter(F.col("rank") <= k).select(id_q, id_r, "sim_r", "rank")
-    return scope_caches(out, *cached)
+    return _rerank_topk(pairs, qp, rp, k, id_q, id_r, cached)
 
 
 def _spherical_kmeans(mat: np.ndarray, k: int, iters: int = 8, seed: int = _SEED) -> np.ndarray:
@@ -715,18 +705,16 @@ def ivf_topk(
     # ONE spread projection per side (round 8, cf. ann_lsh_topk): the
     # assignment UDFs, the interpreted norm folds and the rerank vector
     # branches all build on it instead of re-reading the 1-2-row-group scan
-    rp = _ensure_parallelism(
+    rp = spread(
         refs.select(F.col(id_r), F.col(vec_col).cast("array<double>").alias("r_emb"))
     )
-    qp = _ensure_parallelism(
+    qp = spread(
         queries.select(F.col(id_q), F.col(vec_col).cast("array<double>").alias("q_emb"))
     )
     r = rp.withColumn("centroid", nearest_centroid(F.col("r_emb"))).select(id_r, "centroid")
-    r_vecs = rp.withColumn("r_n", _norm_expr(F.col("r_emb")))  # norm once per vector
     q = qp.withColumn("probes", probe_centroids(F.col("q_emb"))).select(
         id_q, F.explode("probes").alias("centroid")
     )
-    q_vecs = qp.withColumn("q_n", _norm_expr(F.col("q_emb")))
     join_keys = ["centroid"]
     cached = []
     if bucket_cap:
@@ -736,17 +724,5 @@ def ivf_topk(
         r = r.persist()
         cached.append(r)
         q, r, join_keys = salt_hot_keys(q, r, join_keys, bucket_cap, id_r)
-    cand = (
-        q.join(r, join_keys, "inner")
-        .filter(F.col(id_q) != F.col(id_r))
-        .select(id_q, id_r)
-        .join(q_vecs, id_q)
-        .join(r_vecs, id_r)
-    )
-    sim = _dot_expr(F.col("q_emb"), F.col("r_emb")) / (F.col("q_n") * F.col("r_n"))
-    ranked = cand.withColumn("sim_r", F.round(sim, 6)).withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy(id_q).orderBy(F.col("sim_r").desc(), F.col(id_r).asc())),
-    )
-    out = ranked.filter(F.col("rank") <= k).select(id_q, id_r, "sim_r", "rank")
-    return scope_caches(out, *cached)
+    pairs = q.join(r, join_keys, "inner").filter(F.col(id_q) != F.col(id_r)).select(id_q, id_r)
+    return _rerank_topk(pairs, qp, rp, k, id_q, id_r, cached)

@@ -22,6 +22,8 @@ Scale notes (100 TB thinking):
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -225,10 +227,12 @@ def _salt_replicate(df: DataFrame, n_salt: int, salt_col: str) -> DataFrame:
     broadcasts the BIG side instead — a 720 MiB 6M-row broadcast build
     measured 4-5x the whole q_salted_join at sf1.0, and a 128 MiB ref-side
     broadcast in the kNN probe. Explode keeps the estimate proportional to
-    the real fan-out; the emitted rows are identical."""
+    the real fan-out; the emitted rows are identical. The salt values come
+    from ``sequence(0, n_salt - 1)``, not an array of n_salt literals, so
+    the expression stays constant-size for any caller-supplied n_salt."""
     if n_salt < 1:
         raise ValueError(f"n_salt must be >= 1, got {n_salt}")
-    return df.withColumn(salt_col, F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
+    return df.withColumn(salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
 
 
 def _ring_candidates(q: DataFrame, r: DataFrame, ring: int, zoom: int, query_id: str,
@@ -367,7 +371,6 @@ def knn_join(
     ref_id: str = "ref_id",
     n_salt: int = 0,
     round_stats: list | None = None,
-    probe_ring: int | None = 1,
 ) -> DataFrame:
     """kNN join with cell-ring expansion and RING DOUBLING for stragglers
     (SURVEY.md §2.5; north_star "kNN-matched with cell-ring expansion").
@@ -378,194 +381,103 @@ def knn_join(
     candidate refs — queries in sparse regions widen, queries in dense
     regions stay narrow. Fewer than k rows come back only when even
     max_ring holds fewer than k refs. max_ring=None (or == ring) is the
-    fixed-ring special case.
+    fixed-ring special case. Output: (query_id, ref_id, dist2, rank).
 
     Contract (oracle-checkable): R(q) is a pure function of candidate
     counts, so the DuckDB oracle re-states the identical schedule in SQL.
     Distance is planar-equirectangular on (lat, lon) degrees, ties broken
     by ref id.
 
-    Scale path: per round, only the STRAGGLER queries (those whose current
-    ring held < k candidates) re-join at the doubled radius — the number
-    of rounds is logarithmic in max_ring/ring and each round's join input
-    shrinks. At 100 TB, run zoom high enough that a cell holds O(k) refs;
-    the doubling bounds the fanout a wide fixed ring would pay everywhere.
+    Execution: one list of steps ``(zoom, ring, squared prune bound or
+    None)`` run by one round body. Every step joins the still-unanswered
+    queries to the refs of their ring cells (_ring_candidates) and ranks
+    them; a non-final step keeps the queries it answers and passes the
+    rest (the stragglers) on, so each step's join input shrinks and the
+    number of rounds is logarithmic in max_ring/ring. The final step
+    ranks whatever its ring holds and stays lazy. The steps are:
 
-    ``probe_ring`` (default 1; None disables; only active when
-    probe_ring < ring): a cascaded ring-1 density probe (zoom+2, then
-    zoom) that answers dense queries from a 3x3 tile neighborhood
-    whenever their k-th probe distance is provably smaller than any
-    candidate outside the probe ring (_prune_bound_at) — a pure
-    optimization, output identical row-for-row; sparse stragglers fall
-    through to the exact schedule.
+    * when ring > 1, a ring-1 DENSITY PROBE at zoom+2 (capped at 30),
+      then at ``zoom``, for as long as _prune_bound_at gives a bound B.
+      A probe answers a query only when its ring held k candidates AND
+      its k-th distance^2 is strictly below B^2: every candidate outside
+      the probe ring is then provably farther than every kept row (a
+      ring-1 neighborhood at a deeper-or-equal zoom is a subset of the
+      operator-zoom ring), so the rows and ranks are exactly the
+      schedule's — a pure optimization;
+    * the doubling schedule ``ring, 2*ring, ..., max_ring``; a step
+      answers a query when its ring held >= k candidates.
+
+    ``round_stats`` (optional list) receives one ``(ring, n_stragglers)``
+    tuple per non-final step that ran; ``n_salt`` > 0 salts every step's
+    candidate join (see _ring_candidates for why that is not the default).
+    At 100 TB, run zoom high enough that a cell holds O(k) refs.
     """
     from ..functions import exprs
 
-    max_ring = ring if max_ring is None else max_ring
-    q = (
-        queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
-        .withColumn("q_tx", exprs.tile_x(F.col("q_lon"), zoom))
-        .withColumn("q_ty", exprs.tile_y(F.col("q_lat"), zoom))
-    )
-    r = (
-        refs.select(ref_id, F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon"))
-        .withColumn("r_tx", exprs.tile_x(F.col("r_lon"), zoom))
-        .withColumn("r_ty", exprs.tile_y(F.col("r_lat"), zoom))
-        .withColumn("r_cell", exprs.morton_cell(F.col("r_tx"), F.col("r_ty"), zoom))
-    )
+    q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
+    r = refs.select(ref_id, F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon"))
+
+    steps = []
+    ext = _latlon_extremes(q, r) if ring > 1 else None
+    for pz in dict.fromkeys((min(zoom + 2, 30), zoom)) if ext is not None else ():
+        bound = _prune_bound_at(ext, pz)
+        if bound is None:
+            break
+        steps.append((pz, 1, bound * bound))
+    rings = [ring]
+    while max_ring is not None and rings[-1] < max_ring:
+        rings.append(min(max(2 * rings[-1], 1), max_ring))
+    steps += [(zoom, rg, None) for rg in rings]
 
     # squared distance via explicit multiply: `** 2` compiles to Math.pow,
     # which is not exactly-rounded — the oracle's (a-b)*(a-b) then disagrees
     # at 1-ulp level and flips near-tie rankings
-    def ranked_topk(cand: DataFrame) -> DataFrame:
-        dlat = F.col("q_lat") - F.col("r_lat")
-        dlon = F.col("q_lon") - F.col("r_lon")
-        out = cand.withColumn("dist", dlat * dlat + dlon * dlon).withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(ref_id).asc())
-            ),
+    dlat = F.col("q_lat") - F.col("r_lat")
+    dlon = F.col("q_lon") - F.col("r_lon")
+    w_rank = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(ref_id).asc())
+    w_q = Window.partitionBy(query_id)
+    remaining, rounds = q, []
+    for i, (z, rg, b2) in enumerate(steps):
+        qz = remaining.withColumn("q_tx", exprs.tile_x(F.col("q_lon"), z)).withColumn(
+            "q_ty", exprs.tile_y(F.col("q_lat"), z)
         )
-        return out.filter(F.col("rn") <= k).select(
-            query_id, ref_id, F.col("dist").alias("dist2"), F.col("rn").alias("rank")
-        )
-
-    remaining = q
-    rounds: list[DataFrame] = []
-
-    # Density-probe CASCADE: answer dense queries from a ring-1 (3x3
-    # cell) neighborhood — first at zoom+2 (cells 4x smaller per axis,
-    # ~16x fewer candidates), then at the operator zoom — and run the
-    # (much wider) ring schedule only for the true stragglers. Provably
-    # result-identical: a ring-1 neighborhood at any deeper-or-equal
-    # zoom is a SUBSET of the operator-zoom candidate set (a zoom+dz
-    # neighbor cell lies within 2^-dz of the query's own operator-zoom
-    # cell), and every candidate OUTSIDE a probe's ring sits at Chebyshev
-    # tile distance >= 2 AT THAT PROBE ZOOM, hence at planar distance^2
-    # >= B^2 (_prune_bound_at); a query whose k-th probe distance is
-    # strictly below B^2 therefore already holds its exact global top-k,
-    # with identical ranks (no outside candidate can sort before any
-    # kept row, so ties/tiebreaks are untouched). At dense scale this
-    # replaces the (2*ring+1)^2-cell candidate join (289 cells/query at
-    # ring 8) with a 9-cell probe whose dominant cost — the local sort
-    # feeding the WindowGroupLimit rank pushdown — shrinks with the
-    # probe's candidate volume.
-    if probe_ring is not None and 0 < probe_ring < ring:
-        ext = _latlon_extremes(q, r)
-        deep = min(zoom + 2, 30)
-        probe_zooms = ([] if ext is None else ([deep] if deep != zoom else []) + [zoom])
-        for pz in probe_zooms:
-            bound = _prune_bound_at(ext, pz)
-            if bound is None:
-                break
-            b2 = bound * bound
-            if pz == zoom:
-                qz, rz = remaining, r
-            else:
-                qz = (
-                    remaining.select(query_id, "q_lat", "q_lon")
-                    .withColumn("q_tx", exprs.tile_x(F.col("q_lon"), pz))
-                    .withColumn("q_ty", exprs.tile_y(F.col("q_lat"), pz))
-                )
-                rz = (
-                    r.select(ref_id, "r_lat", "r_lon")
-                    .withColumn("r_tx", exprs.tile_x(F.col("r_lon"), pz))
-                    .withColumn("r_ty", exprs.tile_y(F.col("r_lat"), pz))
-                    .withColumn("r_cell", exprs.morton_cell(F.col("r_tx"), F.col("r_ty"), pz))
-                )
-            cand = _ring_candidates(qz, rz, probe_ring, pz, query_id, n_salt=n_salt)
-            dlat = F.col("q_lat") - F.col("r_lat")
-            dlon = F.col("q_lon") - F.col("r_lon")
-            w_rank = Window.partitionBy(query_id).orderBy(
-                F.col("dist").asc(), F.col(ref_id).asc()
-            )
-            w_q = Window.partitionBy(query_id)
-            topk = (
-                cand.withColumn("dist", dlat * dlat + dlon * dlon)
-                .withColumn("rn", F.row_number().over(w_rank))
-                # rank filter directly above row_number -> WindowGroupLimit
-                # partial prunes to top-k per query BEFORE the exchange
-                .filter(F.col("rn") <= k)
-                # max(rn) == k <=> the probe ring held >= k candidates;
-                # max(dist) = the k-th probe distance (same partitioning
-                # and an already-satisfied sort: no extra exchange)
-                .withColumn("__mx", F.max("rn").over(w_q))
-                .withColumn("__dk", F.max("dist").over(w_q))
-                .withColumn("__ok", (F.col("__mx") == k) & (F.col("__dk") < F.lit(b2)))
-                .select(
-                    query_id,
-                    ref_id,
-                    F.col("dist").alias("dist2"),
-                    F.col("rn").alias("rank"),
-                    "__ok",
-                )
-                .localCheckpoint(eager=True)
-            )
-            rounds.append(topk.filter(F.col("__ok")).drop("__ok"))
-            sat = topk.filter(F.col("__ok")).select(query_id).distinct()
-            remaining = remaining.join(sat, query_id, "left_anti").localCheckpoint(eager=True)
-            n_pruned_stragglers = remaining.count()
-            if round_stats is not None:
-                round_stats.append((probe_ring, n_pruned_stragglers))
-            if n_pruned_stragglers == 0:
-                out = rounds[0]
-                for extra in rounds[1:]:
-                    out = out.unionByName(extra)
-                return out
-
-    cur = ring
-    while True:
-        cand = _ring_candidates(remaining, r, cur, zoom, query_id, n_salt=n_salt)
-        if cur >= max_ring:
-            rounds.append(ranked_topk(cand))  # last round: rank whatever exists
-            break
-        # Each non-final round runs the big candidate join EXACTLY ONCE, in
-        # ONE job: rank AND per-query candidate count share the same window
-        # shuffle (same partition key — one exchange, one sort), and only
-        # the <= k x n_queries result rows are eagerly localCheckpoint-ed.
-        # Satisfied queries' rows ARE this round's output; stragglers'
-        # rows are discarded (the doubled ring re-ranks a superset). The
-        # loop is driven off the straggler count — a second, tiny job over
-        # the checkpointed rows + an anti-join, never re-touching the join.
-        # Checkpoint-block lifetime: the returned union's plan references
-        # these RDDs, so Spark's ContextCleaner unpersists them once the
-        # caller drops the result (JVM GC) — bounded per call and
-        # result-scoped, the same lifecycle CacheScope gives the
-        # similarity paths' persists.
-        dlat = F.col("q_lat") - F.col("r_lat")
-        dlon = F.col("q_lon") - F.col("r_lon")
-        w_rank = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(ref_id).asc())
-        w_cnt = Window.partitionBy(query_id)
+        rz = r.withColumn("r_cell", exprs.cell_of(F.col("r_lat"), F.col("r_lon"), z))
         topk = (
-            cand.withColumn("dist", dlat * dlat + dlon * dlon)
+            _ring_candidates(qz, rz, rg, z, query_id, n_salt=n_salt)
+            .withColumn("dist", dlat * dlat + dlon * dlon)
             .withColumn("rn", F.row_number().over(w_rank))
-            .withColumn("__n", F.count(F.lit(1)).over(w_cnt))
+            # rank filter directly above row_number -> WindowGroupLimit
+            # partial prunes to top-k per query BEFORE the exchange
             .filter(F.col("rn") <= k)
-            .select(
-                query_id,
-                ref_id,
-                F.col("dist").alias("dist2"),
-                F.col("rn").alias("rank"),
-                (F.col("__n") >= k).alias("__sat"),
-            )
-            .localCheckpoint(eager=True)
         )
-        rounds.append(topk.filter(F.col("__sat")).drop("__sat"))
-        sat = topk.filter(F.col("__sat")).select(query_id).distinct()
-        # checkpoint the straggler set: without it the next round's
-        # candidate join AND the count below would each re-execute the
-        # full upstream queries lineage plus the growing anti-join chain
-        remaining = remaining.join(sat, query_id, "left_anti").localCheckpoint(eager=True)
+        cols = [query_id, ref_id, F.col("dist").alias("dist2"), F.col("rn").alias("rank")]
+        if i == len(steps) - 1:
+            rounds.append(topk.select(*cols))  # last step: rank whatever exists
+            break
+        # max(rn) == k <=> the ring held >= k candidates; max(dist) is the
+        # k-th distance (same partitioning, an already-satisfied sort: no
+        # extra exchange). Only the <= k x n_queries ranked rows are
+        # checkpointed, so the candidate join runs exactly once per step;
+        # answered queries' rows ARE this step's output. The checkpoint
+        # blocks live as long as the returned union's plan references them
+        # (the JVM ContextCleaner releases them with the result).
+        done = F.max("rn").over(w_q) == k
+        if b2 is not None:
+            done = done & (F.max("dist").over(w_q) < F.lit(b2))
+        topk = topk.select(*cols, done.alias("__ok")).localCheckpoint(eager=True)
+        answered = topk.filter(F.col("__ok")).drop("__ok")
+        rounds.append(answered)
+        # checkpoint the straggler set: without it the next step's join and
+        # the count below would each re-run the whole anti-join chain
+        remaining = remaining.join(
+            answered.select(query_id).distinct(), query_id, "left_anti"
+        ).localCheckpoint(eager=True)
         n_stragglers = remaining.count()
         if round_stats is not None:
-            round_stats.append((cur, n_stragglers))
-        if n_stragglers == 0:  # trivial job over the checkpointed rows
+            round_stats.append((rg, n_stragglers))
+        if n_stragglers == 0:
             break
-        cur = min(cur * 2, max_ring)
-    out = rounds[0]
-    for extra in rounds[1:]:
-        out = out.unionByName(extra)
-    return out
+    return reduce(DataFrame.unionByName, rounds)
 
 
 def range_join(

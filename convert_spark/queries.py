@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from .functions import exprs, udfs
 from .operators import joins, tiles
-from .session import num_partitions
+from .session import spread
 
 # --- shared derivations -------------------------------------------------------
 
@@ -74,34 +74,14 @@ def _load(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(n)
 
 
-def _spread(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Ensure at least default-parallelism partitions ahead of a
-    per-row-expensive stage (signature/codec UDFs, heavy regex): the
-    small test-scale parquets scan as O(1) partitions, which would pin
-    that stage to one core. No-op — no shuffle added — when the scan
-    already provides enough partitions, which is the production case
-    (a 100 TB table arrives in thousands of splits).
-
-    Test-scale cost (accepted, documented so bench readers don't chase
-    it): the partition-count probe materializes the plan (session.
-    num_partitions — the cheap JVM-side variant, round 8) and, when it
-    fires, adds one real exchange — at sf0.01/0.1 this can visibly
-    shift sub-second walls (e.g. q_fingerprint 0.34->0.66 s on the
-    round-5 VM). The production shape is unchanged; see bench.py."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if num_partitions(df) >= p:
-        return df
-    return df.repartition(p, *key_cols) if key_cols else df.repartition(p)
-
-
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # _spread: the lineitem parquet arrives in O(row groups) splits (6 at
+    # spread: the lineitem parquet arrives in O(row groups) splits (6 at
     # sf1.0), which pinned every _points consumer's expensive stage
     # (mercator/tile exprs, PIP Arrow UDF) to that many cores; the
     # repartition moves 24 B/row ahead of the heavy work and is a no-op
     # at production split counts (round 8, guide §2/§6)
     _load(spark, sf_dir, "lineitem")
-    return _spread(spark.sql(_PTS_SQL))
+    return spread(spark.sql(_PTS_SQL))
 
 
 def _gen_barrier(df: DataFrame) -> DataFrame:
@@ -125,7 +105,7 @@ def _okeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffling 8 B/row BEFORE the expensive Project is the production
     split-count shape (round 8, guide §2/§6)."""
     _load(spark, sf_dir, "orders")
-    return _spread(spark.table("orders").select("o_orderkey"))
+    return spread(spark.table("orders").select("o_orderkey"))
 
 
 # --- geo: projection / normalization ------------------------------------------
@@ -174,7 +154,7 @@ SQL_TO4326 = (
 # (0, 1, or 2) exercises the no-mention drop and the posexplode fan-out.
 def _pages_text_expr(div: str, str_t: str) -> str:
     """The text CASE expression alone (over o_orderkey), so the Spark
-    side can build it on a _spread base; _pages_text_sql wraps it
+    side can build it on a spread base; _pages_text_sql wraps it
     byte-identically to the pre-r8 oracle text."""
 
     def coord(cd: str) -> str:
@@ -536,7 +516,7 @@ def _pages_links_sql(str_t: str) -> str:
 
 
 def _link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of _pages_links_sql on the _spread key base."""
+    """Spark twin of _pages_links_sql on the spread key base."""
     return _okeys(spark, sf_dir).select(
         F.col("o_orderkey").alias("page_id"),
         F.expr(_urls_expr("string")).alias("url"),
@@ -1277,12 +1257,12 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query radius selection (smallest schedule radius holding >= k
     candidates) in SQL."""
     _load(spark, sf_dir, "customer", "orders")
-    # _spread (round 8): customer/orders arrive in O(row-group) splits, which
+    # spread (round 8): customer/orders arrive in O(row-group) splits, which
     # pinned the probe's query-side explode+morton stage to ONE task (1.7 s)
     # and the ref-side trig+join+rank stage to the row-group count (9.4 s CPU
     # at 5-way); no-op at production split counts
-    q = _spread(spark.sql(_QPTS_SQL))
-    r = _spread(spark.sql(_RPTS_SQL))
+    q = spread(spark.sql(_QPTS_SQL))
+    r = spread(spark.sql(_RPTS_SQL))
     out = joins.knn_join(q, r, k=_KNN_K, zoom=_KNN_ZOOM, ring=_KNN_RING, max_ring=_KNN_MAX_RING)
     return out.select("query_id", "ref_id", "rank")
 
@@ -1326,8 +1306,8 @@ def q_knn_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline the doubling schedule is measured against in bench.py (the
     doubling run must stay within ~1.5x of this on the same VM)."""
     _load(spark, sf_dir, "customer", "orders")
-    q = _spread(spark.sql(_QPTS_SQL))  # same _spread rationale as q_knn
-    r = _spread(spark.sql(_RPTS_SQL))
+    q = spread(spark.sql(_QPTS_SQL))  # same spread rationale as q_knn
+    r = spread(spark.sql(_RPTS_SQL))
     out = joins.knn_join(q, r, k=_KNN_K, zoom=_KNN_ZOOM, ring=_KNN_MAX_RING, max_ring=_KNN_MAX_RING)
     return out.select("query_id", "ref_id", "rank")
 
@@ -1722,7 +1702,7 @@ def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels.textkit.quality_features' weighted-clip formula — now
     oracle-checked end to end, not just the individual ratios)."""
     _load(spark, sf_dir, "documents")
-    d = _spread(spark.table("documents"), "doc_id")
+    d = spread(spark.table("documents"), "doc_id")
     q = _quality_cols("text")
     n_words, punct_ratio, stop_ratio, score = (
         q["n_words"], q["punct_ratio"], q["stop_ratio"], q["score"]
@@ -1779,7 +1759,7 @@ def q_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     word key and the corpus total is one broadcast scalar."""
     _load(spark, sf_dir, "documents")
     words = (
-        _spread(spark.table("documents").select("doc_id", "text"), "doc_id")
+        spread(spark.table("documents").select("doc_id", "text"), "doc_id")
         .select("doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"))
         .filter(F.col("w") != "")
     )
@@ -2014,7 +1994,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _load(spark, sf_dir, "documents")
     toks = (
-        _spread(spark.table("documents").select("doc_id", "source", "text"), "doc_id")
+        spread(spark.table("documents").select("doc_id", "source", "text"), "doc_id")
         .select(
             "doc_id",
             "source",
@@ -2073,7 +2053,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ann import scope_caches
 
     _load(spark, sf_dir, "documents")
-    d = _spread(spark.table("documents").select("doc_id", "text"), "doc_id").withColumn("keys", udfs.lsh_keys(F.col("text")))
+    d = spread(spark.table("documents").select("doc_id", "text"), "doc_id").withColumn("keys", udfs.lsh_keys(F.col("text")))
     # compute the exploded band keys ONCE across the self-join's branches:
     # both would otherwise re-run the signature UDF (measured 1.7x on the
     # whole query). persist(), not an eager localCheckpoint — building the
@@ -2097,13 +2077,13 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash per document (rows-only; kernel-unit-tested)."""
     _load(spark, sf_dir, "documents")
-    return _spread(spark.table("documents").select("doc_id", "text"), "doc_id").select("doc_id", udfs.simhash64(F.col("text")).alias("simhash"))
+    return spread(spark.table("documents").select("doc_id", "text"), "doc_id").select("doc_id", udfs.simhash64(F.col("text")).alias("simhash"))
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint (rows-only; kernel-unit-tested)."""
     _load(spark, sf_dir, "documents")
-    return _spread(spark.table("documents").select("doc_id", "text"), "doc_id").select("doc_id", udfs.fingerprint64(F.col("text")).alias("fp"))
+    return spread(spark.table("documents").select("doc_id", "text"), "doc_id").select("doc_id", udfs.fingerprint64(F.col("text")).alias("fp"))
 
 
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2123,7 +2103,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Multi-char non-ASCII markers (none today) would fall back to
     substring-count arithmetic (length - length(replace))."""
     _load(spark, sf_dir, "documents")
-    d = _spread(spark.table("documents"), "doc_id").withColumn("lt", F.lower(F.col("text")))
+    d = spread(spark.table("documents"), "doc_id").withColumn("lt", F.lower(F.col("text")))
 
     def cnt(words):
         pat = "\\\\b(" + "|".join(words) + ")\\\\b"
@@ -2221,7 +2201,7 @@ def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     _load(spark, sf_dir, "embeddings")
     e = spark.table("embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
-    r = _spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
+    r = spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
     return brute_topk_broadcast(q, r, k=5)
 
 
@@ -2252,7 +2232,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     _load(spark, sf_dir, "embeddings")
     e = spark.table("embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
-    r = _spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
+    r = spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
     topk = ann_lsh_topk(q, r, k=3, bands=24, bits_per_band=4)
     return carry_scope(topk.select("query_id", "ref_id", "rank"), topk)
 
@@ -2268,7 +2248,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     _load(spark, sf_dir, "embeddings")
     e = spark.table("embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
-    r = _spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
+    r = spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
     topk = ivf_topk(q, r, k=3, n_centroids=16, n_probe=6)
     return carry_scope(topk.select("query_id", "ref_id", "rank"), topk)
 
@@ -2318,7 +2298,7 @@ def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, emb) corpus with planted near-duplicates — the Spark twin of
     _NEARDUP_CORPUS_SQL (same joins, same double arithmetic order)."""
     _load(spark, sf_dir, "embeddings")
-    # NOT _spread here: the corpus is a union whose planted branches are
+    # NOT spread here: the corpus is a union whose planted branches are
     # join outputs (already at shuffle parallelism), and a repartition
     # barrier on `e` blocks the broadcast shape of those joins — measured
     # +3s at sf0.1 for no UDF-parallelism gain (the signature pass runs

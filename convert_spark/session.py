@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def num_partitions(df) -> int:
@@ -23,6 +23,27 @@ def num_partitions(df) -> int:
         return df._jdf.queryExecution().toRdd().getNumPartitions()
     except Exception:
         return df.rdd.getNumPartitions()
+
+
+def spread(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Ensure at least default-parallelism partitions ahead of a
+    per-row-expensive stage (signature/codec UDFs, heavy regex, vector
+    norm folds): the small test-scale parquets scan as O(1) partitions,
+    which would pin that stage to one core. No-op — no shuffle added —
+    when the scan already provides enough partitions, which is the
+    production case (a 100 TB table arrives in thousands of splits).
+    ``key_cols`` hash-partition the spread instead of round-robin.
+
+    Test-scale cost (accepted, documented so bench readers don't chase
+    it): the partition-count probe materializes the plan
+    (``num_partitions`` — the cheap JVM-side variant, round 8) and, when
+    it fires, adds one real exchange — at sf0.01/0.1 this can visibly
+    shift sub-second walls (e.g. q_fingerprint 0.34->0.66 s on the
+    round-5 VM). The production shape is unchanged; see bench.py."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if num_partitions(df) >= p:
+        return df
+    return df.repartition(p, *key_cols) if key_cols else df.repartition(p)
 
 
 def get_session(
