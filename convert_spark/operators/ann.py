@@ -35,7 +35,6 @@ path — identical candidates, bounded per-reducer group size.
 from __future__ import annotations
 
 import math
-import weakref
 
 import numpy as np
 import pandas as pd
@@ -43,55 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.checkpoints import hold
 from ..session import spread
 
 _SEED = 42
 
-
-class CacheScope:
-    """Explicit lifecycle for the persisted intermediates of the bucketed
-    similarity paths: the cache lives exactly as long as the RESULT
-    DataFrame object. ``attach(result)`` registers a GC finalizer on the
-    result (CPython refcounting -> fires deterministically once the
-    caller's terminal action drops its reference, the driver/bench/test
-    usage pattern) and stores itself as ``result._cache_scope`` so
-    callers can release eagerly (``result._cache_scope.release()``) or
-    carry the scope onto a derived DataFrame (``carry_scope``). Without
-    this, every neardup/ann call parked a signature table in executor
-    storage for the rest of the session (round-3 verdict, "unbounded
-    persist lifetimes")."""
-
-    def __init__(self, *cached: DataFrame) -> None:
-        self._cached = list(cached)
-        self._fin: weakref.finalize | None = None
-
-    def release(self) -> None:
-        cached, self._cached = self._cached, []
-        for df in cached:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — py4j gone at interpreter exit
-                pass
-
-    def attach(self, result: DataFrame) -> DataFrame:
-        if self._fin is not None:
-            self._fin.detach()
-        self._fin = weakref.finalize(result, CacheScope.release, self)
-        result._cache_scope = self
-        return result
-
-
-def scope_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie ``cached`` persisted DataFrames' lifetime to ``result``."""
-    return CacheScope(*cached).attach(result)
-
-
-def carry_scope(result: DataFrame, upstream: DataFrame) -> DataFrame:
-    """Move an upstream result's cache scope onto a DataFrame derived
-    from it (detaches the upstream finalizer first, so dropping the
-    upstream object no longer releases the cache)."""
-    scope = getattr(upstream, "_cache_scope", None)
-    return scope.attach(result) if scope is not None else result
 
 # Hard ceiling for any driver-side collect of a "small" side. Broadcast
 # shapes are only valid when the broadcast side is genuinely bounded; a
@@ -378,7 +333,7 @@ def _rerank_topk(pairs: DataFrame, qp: DataFrame, rp: DataFrame, k: int, id_q: s
         F.row_number().over(Window.partitionBy(id_q).orderBy(F.col("sim_r").desc(), F.col(id_r).asc())),
     )
     out = ranked.filter(F.col("rank") <= k).select(id_q, id_r, "sim_r", "rank")
-    return scope_caches(out, *cached)
+    return hold(out, *cached)
 
 
 def neardup_lsh(
@@ -425,20 +380,18 @@ def neardup_lsh(
     # The input may itself be a COMPUTED corpus (joins/UDFs), and the slim
     # plan reads it three times (signature pass + both rerank vector
     # branches) — persist a PRIVATE (id, vec) projection for the
-    # operator's lifetime (CacheScope releases with the result; at
-    # cluster scale the materialized corpus is a storage-backed artifact
-    # instead). Persisting a private projection, not the caller's
-    # DataFrame, means the operator never mutates the input's cache state
-    # or collides with a caller-chosen storage level (ADVICE r5).
+    # operator's lifetime (at cluster scale the materialized corpus is a
+    # storage-backed artifact instead). Persisting a private projection,
+    # not the caller's DataFrame, means the operator never mutates the
+    # input's cache state or collides with a caller-chosen storage level
+    # (ADVICE r5).
     corpus = spread(
         vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
     ).persist()
     keyed = (
         with_lsh_keys(corpus, "__v", dim, bands, bits_per_band)
         # one signature pass shared by both self-join branches AND the
-        # hot-bucket count; released by CacheScope when the result
-        # DataFrame is dropped, so sessions no longer accumulate
-        # signature tables call over call.
+        # hot-bucket count
         .select(F.col(id_col), "band", "bucket")
         .persist()
     )
@@ -487,8 +440,7 @@ def neardup_lsh(
         .filter(F.col("sim_r") >= threshold)
         .select("a_id", "b_id", "sim_r")
     )
-    # the signature + corpus caches live as long as the result (CacheScope)
-    return scope_caches(out, keyed, corpus)
+    return hold(out, keyed, corpus)
 
 
 def ann_lsh_topk(
@@ -536,7 +488,7 @@ def ann_lsh_topk(
     if bucket_cap:
         # persist the keyed refs: salting's bucket-size count is an extra
         # full pass that would otherwise re-run the signature UDF matmul
-        # over every ref (released by CacheScope when the result dies)
+        # over every ref
         r = r.persist()
         cached.append(r)
         q, r, join_keys = salt_hot_keys(q, r, join_keys, bucket_cap, id_r)
@@ -719,8 +671,7 @@ def ivf_topk(
     cached = []
     if bucket_cap:
         # persist the assigned refs: the salting count pass would otherwise
-        # re-run the nearest_centroid UDF over every ref (released by
-        # CacheScope when the result dies)
+        # re-run the nearest_centroid UDF over every ref
         r = r.persist()
         cached.append(r)
         q, r, join_keys = salt_hot_keys(q, r, join_keys, bucket_cap, id_r)

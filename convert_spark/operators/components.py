@@ -162,30 +162,25 @@ def connected_components(
     # action; a nondeterministic upstream could even diverge from the edge
     # snapshot). NULL ids carry no edge semantics and are dropped on both
     # paths.
-    # Checkpoint storage is O(1) in rounds: each round's checkpoint
-    # releases the superseded generation (plans/checkpoints.py) — a
-    # 50-round run over a TB-scale edge list would otherwise hold fifty
-    # generations in executor storage. pairs_c and the FINAL edges stay
-    # persisted: the returned membership derives from both lazily.
-    from ..plans.checkpoints import eager_checkpoint, release
+    # Checkpoint storage is O(1) in rounds: each round releases the
+    # superseded generation (plans/checkpoints.py).
+    from ..plans.checkpoints import release
 
-    spark = pairs.sparkSession
-    pairs_c, _ = eager_checkpoint(pairs.select(F.col(a), F.col(b)))
+    pairs_c = pairs.select(F.col(a), F.col(b)).localCheckpoint(eager=True)
     all_nodes = (
         pairs_c.select(F.col(a).alias("node"))
         .unionByName(pairs_c.select(F.col(b).alias("node")))
         .filter(F.col("node").isNotNull())
         .distinct()
     )
-    edges, edge_ids = eager_checkpoint(_canon_edges(pairs_c, a, b))
+    edges = _canon_edges(pairs_c, a, b).localCheckpoint(eager=True)
     fp = _edge_fingerprint(edges)
     converged = False
     for rnd in range(max_rounds):
-        edges2, new_ids = eager_checkpoint(_small_star(_large_star(edges)))
+        edges2 = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         fp2 = _edge_fingerprint(edges2)
+        release(edges)
         edges = edges2
-        release(spark, edge_ids)  # superseded generation
-        edge_ids = new_ids
         if round_stats is not None:
             round_stats.append((rnd + 1, fp2[0]))
         if fp2 == fp:

@@ -55,41 +55,42 @@ def pagerank_integer(
     warm recurrence is exactly the cold one — same integer spec, so a
     warm run is hash-gateable too (q_pagerank_incremental).
 
-    Checkpoint storage is O(1) in rounds: each iteration's checkpoint
-    releases the superseded one (plans/checkpoints.py), and the fixed
-    inputs (nodes/edges/sinks) are released once the loop ends — the
-    returned DataFrame owns exactly ONE persistent checkpoint (its own
-    final ranks)."""
-    from ..plans.checkpoints import eager_checkpoint, release
+    Checkpoint storage is O(1) in rounds: each iteration releases the
+    superseded ranks (plans/checkpoints.py), and the fixed inputs
+    (edges/nodes/sinks) are released once the loop ends — the returned
+    DataFrame owns exactly ONE checkpoint (its own final ranks)."""
+    from ..plans.checkpoints import release
 
     if iters < 1:
         # with iters=0 the returned frame would still derive from the
         # nodes checkpoint that the final release() frees — evaluating
         # it later reads released checkpoint storage (ADVICE r7)
         raise ValueError("pagerank_integer requires iters >= 1")
-    spark = edges.sparkSession
     # checkpoint the (possibly expensive) edge input ONCE: nodes, outw,
     # e_o and sinks all derive from it — without this an upstream like
     # the link-extraction regex pipeline re-evaluates 3-4x (measured
     # 88s -> the q_pagerank_incremental bench row before this line)
-    e, e_ids = eager_checkpoint(
-        edges.select(
-            F.col(src).cast("string").alias("src"),
-            F.col(dst).cast("string").alias("dst"),
-            F.col(weight).cast("long").alias("w"),
-        )
-    )
-    nodes, nodes_ids = eager_checkpoint(
-        e.select(F.col("src").alias("d")).unionByName(e.select(F.col("dst").alias("d"))).distinct()
+    e = edges.select(
+        F.col(src).cast("string").alias("src"),
+        F.col(dst).cast("string").alias("dst"),
+        F.col(weight).cast("long").alias("w"),
+    ).localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("src").alias("d"))
+        .unionByName(e.select(F.col("dst").alias("d")))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
-        release(spark, nodes_ids | e_ids)
-        return spark.createDataFrame([], "d string, r long")
+        release(nodes, e)
+        return edges.sparkSession.createDataFrame([], "d string, r long")
     outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    e_o, e_o_ids = eager_checkpoint(e.join(outw, "src"))  # (src, dst, w, ow)
-    sinks, sinks_ids = eager_checkpoint(
-        nodes.join(outw, nodes["d"] == outw["src"], "left_anti").select("d")
+    e_o = e.join(outw, "src").localCheckpoint(eager=True)  # (src, dst, w, ow)
+    sinks = (
+        nodes.join(outw, nodes["d"] == outw["src"], "left_anti")
+        .select("d")
+        .localCheckpoint(eager=True)
     )
     base = (SCALE * (damp_den - damp_num)) // damp_den // n
     if init_ranks is None:
@@ -99,7 +100,6 @@ def pagerank_integer(
         r = nodes.join(prev, "d", "left").select(
             "d", F.coalesce("r_prev", F.lit(SCALE // n).cast("long")).alias("r")
         )
-    r_ids: set[int] = set()
     for _ in range(iters):
         # the dangling share is a broadcast 1-row aggregate INSIDE the
         # round's plan — zero driver traffic, one Spark job per round
@@ -113,7 +113,7 @@ def pagerank_integer(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        r, new_ids = eager_checkpoint(
+        r_next = (
             nodes.join(contrib, nodes["d"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -122,8 +122,9 @@ def pagerank_integer(
                     f"{base}L + (({damp_num}L * (coalesce(contrib, 0L) + ds)) div {damp_den}L)"
                 ).alias("r"),
             )
+            .localCheckpoint(eager=True)
         )
-        release(spark, r_ids)  # superseded generation
-        r_ids = new_ids
-    release(spark, e_ids | nodes_ids | e_o_ids | sinks_ids)  # final r is self-contained
+        release(r)
+        r = r_next
+    release(e, nodes, e_o, sinks)  # final r is self-contained
     return r

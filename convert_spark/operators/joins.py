@@ -238,8 +238,8 @@ def _salt_replicate(df: DataFrame, n_salt: int, salt_col: str) -> DataFrame:
 def _ring_candidates(q: DataFrame, r: DataFrame, ring: int, zoom: int, query_id: str,
                      n_salt: int = 0) -> DataFrame:
     """Candidate pairs for one ring radius: queries explode into
-    (2*ring+1)^2 ring cells (a literal offsets array exploded in-stage,
-    no UDF) and equi-join refs on the ring cell — the cross product never
+    (2*ring+1)^2 ring cells (dx and dy offsets exploded in-stage, no
+    UDF) and equi-join refs on the ring cell — the cross product never
     materializes, and the shuffle key is the cell id.
 
     ``n_salt`` > 0 salts the cell join key: queries take
@@ -263,21 +263,21 @@ def _ring_candidates(q: DataFrame, r: DataFrame, ring: int, zoom: int, query_id:
     from ..functions import exprs
 
     n = 1 << zoom
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    # explode a literal offsets array, NOT crossJoin(broadcast(offsets)):
-    # the cross join MULTIPLIES the query side's size estimate by the
-    # offsets table's bytes (~2300x at ring 8), after which the planner
+    # explode the offsets, NOT crossJoin(broadcast(offsets)): the cross
+    # join MULTIPLIES the query side's size estimate by the offsets
+    # table's bytes (~2300x at ring 8), after which the planner
     # broadcasts the REF side instead — a 128 MiB 1.5M-row build measured
     # at 10x scale where the probe's query side is the genuinely small one.
     # Explode keeps the estimate proportional to the real fan-out, so the
-    # planner picks the build side per phase (cf. salted_tile_join).
-    off_arr = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offsets]
-    )
+    # planner picks the build side per phase (cf. salted_tile_join). dx
+    # and dy each explode ``sequence(-ring, ring)``, so the expression
+    # stays constant-size for any ring (cf. _salt_replicate).
+    offs = F.sequence(F.lit(-ring), F.lit(ring))
     qq = (
-        q.withColumn("_off", F.explode(off_arr))
-        .withColumn("n_tx", F.pmod(F.col("q_tx") + F.col("_off.dx"), F.lit(n)))
-        .withColumn("n_ty", F.col("q_ty") + F.col("_off.dy"))
+        q.withColumn("_dx", F.explode(offs))
+        .withColumn("_dy", F.explode(offs))
+        .withColumn("n_tx", F.pmod(F.col("q_tx") + F.col("_dx"), F.lit(n)))
+        .withColumn("n_ty", F.col("q_ty") + F.col("_dy"))
         .filter((F.col("n_ty") >= 0) & (F.col("n_ty") < n))
         .withColumn("r_cell", exprs.morton_cell(F.col("n_tx"), F.col("n_ty"), zoom))
         .select(query_id, "q_lat", "q_lon", "r_cell")
@@ -413,6 +413,7 @@ def knn_join(
     At 100 TB, run zoom high enough that a cell holds O(k) refs.
     """
     from ..functions import exprs
+    from ..plans.checkpoints import release
 
     q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
     r = refs.select(ref_id, F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon"))
@@ -458,9 +459,7 @@ def knn_join(
         # k-th distance (same partitioning, an already-satisfied sort: no
         # extra exchange). Only the <= k x n_queries ranked rows are
         # checkpointed, so the candidate join runs exactly once per step;
-        # answered queries' rows ARE this step's output. The checkpoint
-        # blocks live as long as the returned union's plan references them
-        # (the JVM ContextCleaner releases them with the result).
+        # answered queries' rows ARE this step's output.
         done = F.max("rn").over(w_q) == k
         if b2 is not None:
             done = done & (F.max("dist").over(w_q) < F.lit(b2))
@@ -469,9 +468,11 @@ def knn_join(
         rounds.append(answered)
         # checkpoint the straggler set: without it the next step's join and
         # the count below would each re-run the whole anti-join chain
-        remaining = remaining.join(
+        stragglers = remaining.join(
             answered.select(query_id).distinct(), query_id, "left_anti"
         ).localCheckpoint(eager=True)
+        release(remaining)  # superseded straggler set
+        remaining = stragglers
         n_stragglers = remaining.count()
         if round_stats is not None:
             round_stats.append((rg, n_stragglers))

@@ -629,18 +629,19 @@ def q_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer spec as q_domain_pagerank, so the result is hash-gateable;
     the oracle unrolls both phases as materialized CTE stages."""
     from .operators.graph import pagerank_integer
-    from .plans.checkpoints import eager_checkpoint, release
+    from .plans.checkpoints import release
 
     # materialize the edge pipeline ONCE: both phases consume `ed`, and
     # before round 8 the warm phase re-derived the whole URL-parse +
     # link-extract lineage a second time (guide §5: cut shared lineage)
-    ed, ed_ids = eager_checkpoint(_domain_edges(spark, sf_dir))
+    ed = _domain_edges(spark, sf_dir).localCheckpoint(eager=True)
     hist = ed.filter(F.expr(f"{_PR_SPLIT} <> 0"))
     r_hist = pagerank_integer(hist, iters=6)
     out = pagerank_integer(ed, iters=3, init_ranks=r_hist)
     # both phases checkpointed everything they need eagerly; the final
-    # ranks are self-contained (graph.py), so the edge snapshot can go
-    release(spark, ed_ids)
+    # ranks are self-contained (graph.py), so the edge snapshot and the
+    # historical ranks are superseded
+    release(ed, r_hist)
     return out.select("d", F.col("r").cast("long").alias("r"))
 
 
@@ -1989,8 +1990,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer ride every duplicated candidate row through two shuffles;
     they re-join by doc id once per DEDUPED pair for the exact Jaccard.
     The single tokenization pass is persisted for the operator's
-    lifetime (CacheScope, as in the other similarity paths)."""
-    from .operators.ann import scope_caches
+    lifetime, as in the other similarity paths."""
+    from .plans.checkpoints import hold
 
     _load(spark, sf_dir, "documents")
     toks = (
@@ -2031,7 +2032,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("a_id", "b_id", "jaccard")
     )
-    return scope_caches(out, toks)
+    return hold(out, toks)
 
 
 SQL_NGRAM_JACCARD = """
@@ -2050,7 +2051,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs (rows-only: universal-hash minhash is
     not ANSI SQL; signature math is kernel-unit-tested). Bands that share a
     bucket key yield candidate pairs, deduplicated."""
-    from .operators.ann import scope_caches
+    from .plans.checkpoints import hold
 
     _load(spark, sf_dir, "documents")
     d = spread(spark.table("documents").select("doc_id", "text"), "doc_id").withColumn("keys", udfs.lsh_keys(F.col("text")))
@@ -2059,8 +2060,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole query). persist(), not an eager localCheckpoint — building the
     # DataFrame (for explain/registry enumeration) must stay lazy and must
     # not park blocks in session-local executor storage as a side effect;
-    # the cache materializes at first action, keeps lineage fallback, and
-    # is released by CacheScope when the result DataFrame is dropped.
+    # the cache materializes at first action and keeps lineage fallback.
     # At cluster scale the signature table is a persisted dedup artifact in
     # its own right — write it to reliable storage there.
     e = d.select("doc_id", F.posexplode("keys").alias("band", "key")).persist()
@@ -2071,7 +2071,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    return scope_caches(pairs, e)
+    return hold(pairs, e)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2227,14 +2227,15 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — never a cross product). Seeded hyperplanes make the result
     deterministic; KAT oracle (tests/gen_kats.py), recall vs the brute
     baseline asserted in pytest."""
-    from .operators.ann import ann_lsh_topk, carry_scope
+    from .operators.ann import ann_lsh_topk
+    from .plans.checkpoints import hold
 
     _load(spark, sf_dir, "embeddings")
     e = spark.table("embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
     r = spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
     topk = ann_lsh_topk(q, r, k=3, bands=24, bits_per_band=4)
-    return carry_scope(topk.select("query_id", "ref_id", "rank"), topk)
+    return hold(topk.select("query_id", "ref_id", "rank"), topk)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2243,14 +2244,15 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates — the inverted-file counterpart to q_ann_lsh). Seeded
     deterministic training; KAT oracle (tests/gen_kats.py), recall vs the
     brute baseline asserted in pytest."""
-    from .operators.ann import carry_scope, ivf_topk
+    from .operators.ann import ivf_topk
+    from .plans.checkpoints import hold
 
     _load(spark, sf_dir, "embeddings")
     e = spark.table("embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
     r = spread(e.select(F.col("vec_id").alias("ref_id"), "embedding"), "ref_id")
     topk = ivf_topk(q, r, k=3, n_centroids=16, n_probe=6)
-    return carry_scope(topk.select("query_id", "ref_id", "rank"), topk)
+    return hold(topk.select("query_id", "ref_id", "rank"), topk)
 
 
 # --- embedding near-dup: planted-duplicate corpus ----------------------------
@@ -2666,18 +2668,15 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup+200000}, so transitive closure is exercised. Oracle: DuckDB
     recursive-CTE transitive closure over the exhaustive pair SQL."""
     from .operators import components
-    from .operators.ann import carry_scope, neardup_lsh
+    from .operators.ann import neardup_lsh
 
     corpus = _neardup_corpus(spark, sf_dir)
     nd = neardup_lsh(corpus, threshold=NEARDUP_T)
     pairs = nd.select("a_id", "b_id")
     docs = corpus.select(F.col("id").alias("doc_id"))
     out = components.dedup_canonical(pairs, docs)
-    # keep the signature cache alive through the CC rounds, released with
-    # the final result
-    return carry_scope(
-        out.select("doc_id", "cluster_id", F.col("keep").cast("int").alias("keep")), nd
-    )
+    nd._release()  # CC checkpointed the pairs on entry
+    return out.select("doc_id", "cluster_id", F.col("keep").cast("int").alias("keep"))
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2692,28 +2691,28 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental update reproduces the full recompute row-for-row,
     including cross-batch merges of previously separate clusters."""
     from .operators import components
-    from .operators.ann import carry_scope, neardup_lsh
+    from .operators.ann import neardup_lsh
+    from .plans.checkpoints import release
 
     corpus = _neardup_corpus(spark, sf_dir)
     nd = neardup_lsh(corpus, threshold=NEARDUP_T)
     # materialize the pair set ONCE: the historical and increment filters
     # each consume it, and the band join + dedup + rerank would otherwise
-    # run twice (round 8); the checkpoint is released with nd's CacheScope
-    # lifecycle (the tiny pair table itself stays until GC like any other
-    # localCheckpoint intermediate)
+    # run twice (round 8)
     pairs = nd.select("a_id", "b_id").localCheckpoint(eager=True)
+    nd._release()  # the pair checkpoint supersedes the near-dup caches
     is_new = F.pmod(F.xxhash64("a_id", "b_id", F.lit(3)), F.lit(3)) == 0
     old_pairs = pairs.filter(~is_new)
     new_pairs = pairs.filter(is_new)
     prev = components.connected_components(old_pairs)
     membership = components.incremental_components(prev, new_pairs)
+    release(pairs)  # both CC calls checkpointed their input on entry
     docs = corpus.select(F.col("id").alias("doc_id"))
     out = docs.join(membership, docs["doc_id"] == membership["node"], "left").select(
         "doc_id",
         F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
     )
-    out = out.withColumn("keep", (F.col("doc_id") == F.col("cluster_id")).cast("int"))
-    return carry_scope(out, nd)
+    return out.withColumn("keep", (F.col("doc_id") == F.col("cluster_id")).cast("int"))
 
 
 SQL_DEDUP_CLUSTERS = f"""

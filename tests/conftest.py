@@ -14,3 +14,10 @@ def spark():
 
     s = get_session(cores=8, app_name="convert_spark_tests", shuffle_partitions=8)
     yield s
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids in the SparkContext's persistent-RDD registry (cached and
+    checkpointed RDDs alike) — the storage-leak probe of the lifecycle
+    tests."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())

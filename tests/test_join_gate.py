@@ -1,9 +1,16 @@
-"""The replicated-join queries on the oracle gate at sf0.01.
+"""The replicated-join and iterative-loop queries on the oracle gate at
+sf0.01.
 
-Local replica of the driver's compare for q_knn, q_knn_fixed and
-q_salted_join (the queries on knn_join's step loop and the salted join's
-replication): the Spark query must match its DuckDB oracle on rows,
-columns and the order-insensitive value hash, as in test_source_gate.py.
+Local replica of the driver's compare for:
+
+* q_knn, q_knn_fixed and q_salted_join (knn_join's step loop and the
+  salted join's replication);
+* q_dedup_incremental, q_dedup_clusters, q_pagerank_incremental,
+  q_domain_pagerank and q_robots (the queries that checkpoint, cache and
+  release intermediates through plans/checkpoints.py).
+
+The Spark query must match its DuckDB oracle on rows, columns and the
+order-insensitive value hash, as in test_source_gate.py.
 """
 
 from __future__ import annotations
@@ -20,7 +27,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from gen_kats import SF_DIR  # noqa: E402
 from oracle_harness import TABLES, value_hash  # noqa: E402
 
-GATED = ["q_knn", "q_knn_fixed", "q_salted_join"]
+GATED = [
+    "q_knn", "q_knn_fixed", "q_salted_join",
+    "q_dedup_incremental", "q_dedup_clusters", "q_pagerank_incremental", "q_domain_pagerank", "q_robots",
+]
 
 
 @pytest.fixture(scope="module")

@@ -15,6 +15,8 @@
   the operator zoom), k above the number of refs, and an empty query set.
 * ``salted_tile_join`` with a large ``n_salt``: same rows as ``tile_join``
   and an analyzed plan no larger than at a small ``n_salt``.
+* ``_ring_candidates``: the analyzed plan at ring 64 is no larger than at
+  ring 1 (the offsets come from ``sequence``, not literal arrays).
 """
 
 from __future__ import annotations
@@ -242,3 +244,21 @@ class TestSaltSequence:
             return len(j._jdf.queryExecution().analyzed().toString())
 
         assert plan_len(4096) <= plan_len(8) + 16
+
+
+class TestRingSequence:
+    def test_analyzed_plan_constant_in_ring(self, spark):
+        q = spark.range(20).select(
+            F.col("id").alias("query_id"), F.lit(1.0).alias("q_lat"), F.lit(2.0).alias("q_lon"),
+            (F.col("id") % 7).alias("q_tx"), (F.col("id") % 5).alias("q_ty"),
+        )
+        r = spark.range(20).select(
+            F.col("id").alias("ref_id"), F.lit(1.0).alias("r_lat"), F.lit(2.0).alias("r_lon"),
+            F.col("id").alias("r_cell"),
+        )
+
+        def plan_len(ring):
+            j = joins._ring_candidates(q, r, ring, 10, "query_id")
+            return len(j._jdf.queryExecution().analyzed().toString())
+
+        assert plan_len(64) <= plan_len(1) + 16

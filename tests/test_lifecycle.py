@@ -1,0 +1,65 @@
+"""Lifecycle of materialized intermediates under concurrency and in the
+kNN straggler loop (plans/checkpoints.py: ``release`` and ``hold``).
+
+Each operator releases only the checkpoints it created itself, found
+through the DataFrame's own plan. Three threads sharing one session must
+therefore never free each other's checkpoint storage.
+"""
+
+from __future__ import annotations
+
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
+from conftest import persistent_rdd_ids
+
+CHAIN = [(i, i + 1) for i in range(40)]
+EDGES = [("a", "b", 2), ("b", "a", 1), ("a", "c", 1), ("b", "c", 3), ("c", "sink", 1), ("hub", "a", 5)]
+
+
+class TestConcurrentCheckpoints:
+    def test_three_threads_share_one_session(self, spark):
+        from convert_spark.operators.components import connected_components
+        from convert_spark.operators.graph import pagerank_integer
+
+        start = threading.Barrier(3)
+
+        def work(_):
+            start.wait()  # overlap the three loops as much as possible
+            out = []
+            for _ in range(2):
+                pairs = spark.createDataFrame(CHAIN, "a_id long, b_id long")
+                cc = connected_components(pairs)
+                edges = spark.createDataFrame(EDGES, "src string, dst string, w long")
+                pr = pagerank_integer(edges, iters=6)
+                out.append((cc.count(), {r["component"] for r in cc.collect()}, pr.count()))
+            return out
+
+        with ThreadPoolExecutor(3) as pool:
+            results = list(pool.map(work, range(3)))
+        assert results == [[(41, {0}, 5)] * 2] * 3
+
+
+class TestKnnStragglerStorage:
+    def test_superseded_straggler_sets_are_released(self, spark):
+        """A sparse desert of 60 queries at ring 1 widens several times
+        before the final step: each non-final step keeps its ranked
+        checkpoint (the result reads it), but only the LAST straggler set
+        survives."""
+        from convert_spark.operators.joins import knn_join
+
+        refs = spark.createDataFrame(
+            [(i, 10.0 + 3.0 * (i % 5), 20.0 + 3.0 * (i // 5)) for i in range(25)],
+            "ref_id long, lat double, lon double",
+        )
+        queries = spark.createDataFrame(
+            [(i, 11.0 + 0.2 * (i % 60), 21.0 + 0.1 * (i % 7)) for i in range(60)],
+            "query_id long, lat double, lon double",
+        )
+        pre = persistent_rdd_ids(spark)
+        stats = []
+        out = knn_join(queries, refs, k=4, zoom=10, ring=1, max_ring=64, round_stats=stats)
+        new = persistent_rdd_ids(spark) - pre
+        assert len(stats) >= 2, stats
+        assert len(new) <= len(stats) + 1, (new, stats)
+        assert out.count() == 60 * 4

@@ -94,7 +94,7 @@ class TestPagerankInteger:
         (plans/checkpoints.py — df.unpersist() is a no-op for checkpoint
         storage, probed here): after the loop, exactly the final ranks
         checkpoint survives, regardless of iteration count."""
-        from convert_spark.plans.checkpoints import persistent_rdd_ids
+        from conftest import persistent_rdd_ids
 
         df = spark.createDataFrame(EDGES, "src string, dst string, w long")
         pre = persistent_rdd_ids(spark)
@@ -105,7 +105,7 @@ class TestPagerankInteger:
 
     def test_cc_checkpoint_storage_is_o1_in_rounds(self, spark):
         from convert_spark.operators.components import connected_components
-        from convert_spark.plans.checkpoints import persistent_rdd_ids
+        from conftest import persistent_rdd_ids
 
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(40)], "a_id long, b_id long"

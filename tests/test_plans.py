@@ -96,7 +96,7 @@ class TestCodegen:
         explode+re-aggregate over the tiny pre-aggregated rows) and owns no
         persisted state — nothing is left in the cache afterwards."""
         spark.catalog.clearCache()
-        from convert_spark.plans.checkpoints import persistent_rdd_ids
+        from conftest import persistent_rdd_ids
 
         pre = persistent_rdd_ids(spark)  # other ops' final checkpoints may live
         pts = spark.createDataFrame(

@@ -881,8 +881,9 @@ class TestLoadReaderMemo:
 
 class TestCacheLifecycle:
     """Round-4: the bucketed similarity paths persist signature tables;
-    CacheScope ties each cache's lifetime to the result DataFrame, so a
-    session no longer accumulates executor storage query over query."""
+    ``plans.checkpoints.hold`` ties each cache's lifetime to the result
+    DataFrame, so a session no longer accumulates executor storage query
+    over query. ``release`` frees a cache or a checkpoint at once."""
 
     QUERY_NAMES = ["q_minhash_lsh", "q_ann_lsh", "q_ann_ivf", "q_embed_neardup", "q_dedup_clusters"]
 
@@ -898,7 +899,7 @@ class TestCacheLifecycle:
             df = Q.QUERIES[name](spark, "/root/testdata/sf0.001")
             n = len(df.toPandas())
             assert n >= 0
-            assert not getattr(df, "_cache_scope", None) or True  # scope present or op had no persist
+            assert not getattr(df, "_release", None) or True  # hold present or op had no persist
             del df
             gc.collect()
             assert cm.isEmpty(), f"{name}: cached relations survived result GC"
@@ -907,6 +908,7 @@ class TestCacheLifecycle:
         import gc
 
         from convert_spark.operators import ann
+        from convert_spark.plans.checkpoints import hold
 
         cm = spark._jsparkSession.sharedState().cacheManager()
         spark.catalog.clearCache()
@@ -914,15 +916,62 @@ class TestCacheLifecycle:
         q = emb.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
         r = emb.select(F.col("vec_id").alias("ref_id"), "embedding")
         topk = ann.ann_lsh_topk(q, r, k=3)
-        derived = ann.carry_scope(topk.select("query_id", "ref_id"), topk)
+        derived = hold(topk.select("query_id", "ref_id"), topk)
         del topk  # carry detached the upstream finalizer: cache must survive
         gc.collect()
         derived.count()
         assert not cm.isEmpty(), "cache should be alive while the derived result is referenced"
-        derived._cache_scope.release()  # explicit eager release also works
+        derived._release()  # explicit eager release also works
         assert cm.isEmpty()
         del derived
         gc.collect()
+
+    def test_release_frees_a_checkpoint(self, spark):
+        from conftest import persistent_rdd_ids
+
+        from convert_spark.plans.checkpoints import release
+
+        pre = persistent_rdd_ids(spark)
+        ck = spark.range(100).localCheckpoint(eager=True)
+        (rid,) = persistent_rdd_ids(spark) - pre
+        release(ck)
+        assert rid not in persistent_rdd_ids(spark)
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            ck.count()  # a released checkpoint fails loudly, never silently
+
+    def test_release_frees_a_cache(self, spark):
+        from convert_spark.plans.checkpoints import release
+
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        cached = spark.range(100).withColumn("x", F.col("id") * 2).persist()
+        assert cached.count() == 100
+        assert not cm.isEmpty()
+        release(cached)
+        assert cm.isEmpty()
+
+    def test_release_is_a_noop_on_lazy_and_released_frames(self, spark):
+        from conftest import persistent_rdd_ids
+
+        from convert_spark.plans.checkpoints import release
+
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        pre = persistent_rdd_ids(spark)
+        keep = spark.range(50).localCheckpoint(eager=True)
+        (keep_id,) = persistent_rdd_ids(spark) - pre
+        lazy = keep.filter(F.col("id") % 2 == 0)
+        release(lazy)  # derived from a checkpoint, owns nothing
+        assert keep_id in persistent_rdd_ids(spark)
+        assert lazy.count() == 25
+        ck = spark.range(10).localCheckpoint(eager=True)
+        cached = spark.range(10).persist()
+        cached.count()
+        release(ck, cached)
+        release(ck, cached)  # already released: no error, nothing else freed
+        assert persistent_rdd_ids(spark) - pre == {keep_id}
+        assert cm.isEmpty()
+        assert keep.count() == 50
 
 
 class TestIvfAutoScale:
