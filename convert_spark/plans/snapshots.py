@@ -3,32 +3,43 @@
 north_rule requirement: "checkpoints per-partition progress with lineage
 and throughput metrics to resumable Iceberg commit snapshots". No Iceberg
 runtime jars exist in this sandbox (SURVEY.md §7.0), so this is a minimal
-from-scratch commit protocol with the same shape:
+from-scratch commit protocol with the same shape. A stage writes parquet
+under ``<root>/<stage>/``; ``run_stage`` and ``run_stage_partitioned``
+share one commit body, ``_run``, whose rules are:
 
-* a pipeline writes each stage's output as parquet under
-  ``<root>/<stage>/`` (optionally partitioned),
-* a JSON *snapshot* is committed to ``<root>/_snapshots/snapshot-N.json``
-  AFTER the stage data is fully written (commit-last = atomicity: a crash
-  mid-write leaves no snapshot, so the re-run overwrites and re-commits),
-* each snapshot records: snapshot id, parent id, stage name, row count,
-  wall seconds, rows/sec, input lineage (parent stage names), and the
-  per-partition file manifest (path, size) of what was written,
-* ``run_stage`` skips stages that already have a committed snapshot and
-  returns the committed data — idempotent resume (SURVEY.md §5.3.5).
-
-The log is a driver-side construct (one JSON per stage commit — tiny);
-the data path is plain distributed parquet.
+* **Skip.** A stage whose last snapshot has the same ``params`` (the
+  build's fingerprint) is read back with the schema the snapshot recorded:
+  it returns exactly what a fresh call returns and starts no job.
+* **Stale state.** Otherwise an attempt resumes the partition records of
+  its own ``params``, or clears the stage directory and every partition
+  record of the stage and starts empty.
+* **Groups.** A plain stage is one group, written with static overwrite.
+  A per-partition stage is groups of ``chunk_size`` values, each written
+  with dynamic overwrite (only its own partition directories) and followed
+  by a partition record (``_snapshots/part-<stage>-<key>.json``). The mode
+  is an option of each write, never a session conf.
+* **Rows.** Each group's rows are an Observation on its write (no count
+  job); a per-partition stage commits the sum of its own records.
+* **Commit last.** The snapshot (``_snapshots/snapshot-N.json``: id,
+  parent, rows, wall, rows/sec, lineage, params, built schema, file
+  manifest) is written after the stage's data, so a crash leaves the stage
+  uncommitted.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import re
+import shutil
 import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_PLAIN_VALUE = re.compile(r"[A-Za-z0-9.]+")
 
 
 class SnapshotLog:
@@ -72,28 +83,32 @@ class SnapshotLog:
 
     # --- per-partition progress (north_rule) -------------------------------
 
-    def _partition_records(self, stage: str) -> list[dict]:
-        out = []
-        for p in sorted(self.snap_dir.glob(f"part-{stage}-*.json")):
-            out.append(json.loads(p.read_text()))
-        return out
+    def _records(self, stage: str) -> list[tuple[Path, dict]]:
+        """This stage's partition records, selected by their ``stage`` field."""
+        recs = ((p, json.loads(p.read_text())) for p in sorted(self.snap_dir.glob("part-*.json")))
+        return [(p, rec) for p, rec in recs if rec["stage"] == stage]
 
-    def partitions_committed(self, stage: str, params: dict) -> set[str]:
-        """Partition values (stringified) already committed for this stage
-        under the SAME params fingerprint — stale-params records don't count."""
-        done: set[str] = set()
-        for rec in self._partition_records(stage):
-            if rec.get("params", {}) == params:
-                done.update(map(str, rec["values"]))
-        return done
+    def _partition_records(self, stage: str) -> list[dict]:
+        return [rec for _, rec in self._records(stage)]
 
     def partition_commit(self, stage: str, values: list, meta: dict) -> dict:
+        """The file key is the values joined by ``_`` when each is plain
+        alphanumeric and the join is short, else a digest of the values. A
+        key holds no ``-``, so no two (stage, values) pairs share a file."""
         rec = {"stage": stage, "values": [str(v) for v in values], **meta}
-        key = "_".join(str(v) for v in values)[:80] or "empty"
+        key = "_".join(rec["values"])
+        if len(key) > 80 or not all(map(_PLAIN_VALUE.fullmatch, rec["values"])):
+            key = "~" + hashlib.sha1(json.dumps(rec["values"]).encode()).hexdigest()
         tmp = self.snap_dir / f".part-{stage}-{key}.json.tmp"
         tmp.write_text(json.dumps(rec, indent=1))
         tmp.rename(self.snap_dir / f"part-{stage}-{key}.json")  # atomic
         return rec
+
+    def clear(self, stage: str) -> None:
+        """Empty the stage: its directory and every partition record."""
+        shutil.rmtree(self.root / stage, ignore_errors=True)
+        for p, _ in self._records(stage):
+            p.unlink()
 
     def _manifest(self, stage: str) -> list[dict]:
         base = self.root / stage
@@ -105,27 +120,25 @@ class SnapshotLog:
         return files
 
 
-def _write_counted(df: DataFrame, path: str, partition_by: list[str]) -> int:
-    """Overwrite ``path`` with ``df`` and return the rows written, counted by
-    an Observation attached directly above the write: the count rides in
-    the write's own result stage (where Spark applies each task's metric
-    update exactly once), so no separate count job runs."""
+def _write_counted(df: DataFrame, path: str, partition_by: list[str], mode: str) -> int:
+    """Overwrite ``path`` with ``df`` (``mode``: the write's partition
+    overwrite mode) and return the rows written, counted by an Observation
+    attached directly above the write: the count rides in the write's own
+    result stage (where Spark applies each task's metric update exactly
+    once), so no separate count job runs."""
     obs = Observation()
     writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    writer.option("partitionOverwriteMode", mode).partitionBy(*partition_by).parquet(path)
     return obs.get["rows"]
 
 
-def _durable(spark: SparkSession, df: DataFrame, path: str, partition_by: list[str]) -> DataFrame:
-    """The written parquet read back with the schema the write produced —
-    data columns, then partition columns — instead of inferring it from
-    the footers (a schema-inference job per read). Partition columns keep
+def _durable(spark: SparkSession, schema: T.StructType, path: str, partition_by: list[str]) -> DataFrame:
+    """The written parquet read back with the built ``schema`` — data
+    columns, then partition columns — instead of inferring it from the
+    footers (a schema-inference job per read). Partition columns keep
     their built type; the file source makes every field nullable."""
-    data = [f for f in df.schema.fields if f.name not in partition_by]
-    schema = T.StructType(data + [df.schema[c] for c in partition_by])
-    return spark.read.schema(schema).parquet(path)
+    data = [f for f in schema.fields if f.name not in partition_by]
+    return spark.read.schema(T.StructType(data + [schema[c] for c in partition_by])).parquet(path)
 
 
 def _stage_meta(rows: int, wall: float, **extra) -> dict:
@@ -137,6 +150,45 @@ def _stage_meta(rows: int, wall: float, **extra) -> dict:
     }
 
 
+def _run(spark, log, stage, build, inputs, params, partition_by, partition_values=None, chunk_size=None) -> DataFrame:
+    """The one commit body of both stage runners (rules: module docstring).
+    ``chunk_size=None`` is a plain stage; otherwise the groups are
+    ``chunk_size`` values of ``partition_by[0]``."""
+    path, params = log.stage_path(stage), params or {}
+    snap = log.committed(stage)
+    if snap is not None and snap.get("params", {}) == params and "schema" in snap:
+        return _durable(spark, T.StructType.fromJson(snap["schema"]), path, snap["partition_by"])
+    t0 = time.time()
+    records = log._partition_records(stage)
+    if chunk_size is None or not records or any(r["params"] != params for r in records):
+        log.clear(stage)
+        records = []
+    df = build()
+    groups, mode, extra = [None], "static", {}
+    if chunk_size is not None:
+        col = partition_by[0]
+        if partition_values is None:
+            partition_values = [r[0] for r in df.select(col).distinct().orderBy(col).collect()]
+        done = {v for r in records for v in r["values"]}
+        missing = [v for v in partition_values if str(v) not in done]
+        groups, mode = [missing[i : i + chunk_size] for i in range(0, len(missing), chunk_size)], "dynamic"
+        extra = {
+            "partitions": sorted(done | set(map(str, missing))),
+            "resumed_partitions": sorted(done & set(map(str, partition_values))),
+        }
+    rows = sum(r["rows"] for r in records)
+    for group in groups:
+        tg = time.time()
+        part = df if group is None else df.filter(F.col(col).isin(group))
+        written = _write_counted(part, path, partition_by, mode)
+        rows += written
+        if group is not None:
+            log.partition_commit(stage, group, _stage_meta(written, time.time() - tg, params=params))
+    meta = dict(lineage=inputs or [], partition_by=partition_by, params=params, schema=df.schema.jsonValue())
+    log.commit(stage, _stage_meta(rows, time.time() - t0, **meta, **extra, files=log._manifest(stage)))
+    return _durable(spark, df.schema, path, partition_by)
+
+
 def run_stage(
     spark: SparkSession,
     log: SnapshotLog,
@@ -146,39 +198,11 @@ def run_stage(
     partition_by: list[str] | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Execute (or resume) one checkpointed stage.
-
-    ``build() -> DataFrame`` is only invoked when the stage has no
-    committed snapshot WITH MATCHING ``params`` (the build's parameter
-    fingerprint — a snapshot from a run with different parameters is stale
-    and the stage re-executes rather than silently returning old data).
-    Returns the stage's DataFrame read back from the committed parquet
-    either way (downstream stages always consume the durable copy).
-
-    A fresh stage is ONE write action: the committed ``rows`` is observed
-    during the write and the durable copy is read with the written schema,
-    so no job runs after the write finishes.
-    """
-    path = log.stage_path(stage)
-    snap = log.committed(stage)
-    if snap is not None and snap.get("params", {}) == (params or {}):
-        return spark.read.parquet(path)
-    t0 = time.time()
-    df = build()
-    partition_by = partition_by or []
-    rows = _write_counted(df, path, partition_by)
-    log.commit(
-        stage,
-        _stage_meta(
-            rows,
-            time.time() - t0,
-            lineage=inputs or [],
-            partition_by=partition_by,
-            params=params or {},
-            files=log._manifest(stage),
-        ),
-    )
-    return _durable(spark, df, path, partition_by)
+    """Execute (or resume) one checkpointed stage: ``build()`` written once,
+    ``partitionBy(partition_by)`` when given. ``build`` runs only when no
+    snapshot with matching ``params`` is committed; either way the stage's
+    durable copy is returned (downstream stages always consume it)."""
+    return _run(spark, log, stage, build, inputs, params, partition_by or [])
 
 
 def run_stage_partitioned(
@@ -193,66 +217,14 @@ def run_stage_partitioned(
     chunk_size: int = 4,
 ) -> DataFrame:
     """Execute (or resume) one stage with PER-PARTITION commit granularity
-    (north_rule: "checkpoints per-partition progress").
-
-    The stage output is written partition-group by partition-group, each
-    group its own atomic write + partition-manifest commit
-    (``_snapshots/part-<stage>-<id>.json``). A crash mid-stage loses only
-    the in-flight group: the re-run skips every committed group and
-    recomputes the rest, then commits the stage snapshot. Scale note: each
-    group is one Spark job filtering the built DataFrame on
-    ``partition_col`` — upstream stages should be partitioned/bucketed on
-    the same column so the filter prunes at the scan instead of rescanning
-    the full input per group (partition pruning; check PartitionFilters in
-    explain).
-
-    Each group's ``rows`` is observed during its write (see ``run_stage``);
-    a fresh stage commits their sum. A stage that resumes earlier group
-    commits counts what is on disk instead (one extra job, resume only).
-    """
-    path = log.stage_path(stage)
-    snap = log.committed(stage)
-    if snap is not None and snap.get("params", {}) == (params or {}):
-        return spark.read.parquet(path)
-
-    t0 = time.time()
-    df = build()
-    if partition_values is None:
-        partition_values = [
-            r[0] for r in df.select(partition_col).distinct().orderBy(partition_col).collect()
-        ]
-    done = log.partitions_committed(stage, params or {})
-    missing = [v for v in partition_values if str(v) not in done]
-    written = 0
-    # dynamic overwrite: a group write replaces ONLY its own partition dirs
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for i in range(0, len(missing), chunk_size):
-            group = missing[i : i + chunk_size]
-            tg = time.time()
-            rows = _write_counted(df.filter(F.col(partition_col).isin(group)), path, [partition_col])
-            written += rows
-            log.partition_commit(stage, group, _stage_meta(rows, time.time() - tg, params=params or {}))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    out = _durable(spark, df, path, [partition_col])
-    resumed = sorted(set(map(str, partition_values)) - set(map(str, missing)))
-    rows = out.count() if resumed else written
-    log.commit(
-        stage,
-        _stage_meta(
-            rows,
-            time.time() - t0,
-            lineage=inputs or [],
-            partition_by=[partition_col],
-            params=params or {},
-            partitions=sorted(log.partitions_committed(stage, params or {})),
-            resumed_partitions=resumed,
-            files=log._manifest(stage),
-        ),
-    )
-    return out
+    (north_rule: "checkpoints per-partition progress"): ``build()`` is
+    written ``chunk_size`` values of ``partition_col`` at a time
+    (``partition_values``, default every distinct value), so a crash loses
+    only the in-flight group. Each group is one Spark job filtering the
+    built DataFrame on ``partition_col``: partition or bucket the upstream
+    stage on the same column so the filter prunes at the scan instead of
+    rescanning the input per group (PartitionFilters in explain)."""
+    return _run(spark, log, stage, build, inputs, params, [partition_col], partition_values, chunk_size)
 
 
 def run_pipeline(spark: SparkSession, root: str, n_pages: int, zoom: int = 12) -> dict:

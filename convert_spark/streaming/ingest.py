@@ -122,7 +122,7 @@ def _observed_rows(obs: Observation) -> int | None:
         return None
 
 
-def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, metrics: bool = True):
+def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10):
     """Streaming maintenance of the per-tile dataset table (the daily-crawl
     shape, continuously): each micro-batch of new pages runs the SAME batch
     stages (extract -> normalize -> tile) and folds into the previous
@@ -135,8 +135,9 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
 
     Epoch commit protocol (resumable, idempotent under foreachBatch's
     replay-last-epoch semantics): state for epoch E is written to
-    ``<state_dir>/vE`` FIRST, then the ``_LATEST`` pointer file is updated
-    (commit-last). A crash between the two leaves the pointer at E-1, so
+    ``<state_dir>/vE`` FIRST, then the ``_LATEST`` pointer file is replaced
+    by renaming a temp file (commit-last, atomic: a torn pointer write
+    leaves the old pointer). A crash between the two leaves it at E-1, so
     the replayed epoch re-reads the same previous state, overwrites vE and
     re-commits — same result. A crash AFTER the pointer write but before
     Structured Streaming commits the epoch's offsets replays epoch E with
@@ -157,11 +158,11 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
     no points) the handler counts the batch instead, one job after the
     write.
 
-    ``metrics=True`` (default) additionally commits one snapshot record
-    per epoch through plans.snapshots.SnapshotLog — input rows, wall
-    seconds, rows/sec, tile count, the input-version lineage and the
-    per-file manifest of what the epoch wrote (the north_rule
-    "per-partition lineage + metrics" surface, continuous edition)."""
+    After the pointer, each epoch commits one snapshot record through
+    plans.snapshots.SnapshotLog — input rows, wall seconds, rows/sec, tile
+    count, the input-version lineage and the per-file manifest of what the
+    epoch wrote (the north_rule "per-partition lineage + metrics" surface,
+    continuous edition)."""
     import time
     from pathlib import Path
 
@@ -204,27 +205,28 @@ def foreach_batch_incremental(pages: DataFrame, state_dir: str, zoom: int = 10, 
         out.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
             f"{state_dir}/v{epoch_id}"
         )
-        (Path(state_dir) / "_LATEST").write_text(str(epoch_id))
-        if metrics:
-            wall = time.time() - t0
-            files = [
-                {"path": p.name, "bytes": p.stat().st_size}
-                for p in sorted(Path(f"{state_dir}/v{epoch_id}").glob("part-*"))
-            ]
-            n_in = _observed_rows(seen)
-            if n_in is None:
-                n_in = batch_df.count()
-            SnapshotLog(f"{state_dir}/_log").commit(
-                f"epoch-{epoch_id}",
-                {
-                    "rows_in": n_in,
-                    "n_tiles": written.get["rows"],
-                    "wall_s": round(wall, 3),
-                    "rows_per_s": round(n_in / wall, 1) if wall > 0 else None,
-                    "lineage": ["pages-stream"] + ([f"v{prev_v}"] if prev_v is not None else []),
-                    "manifest": files,
-                },
-            )
+        tmp = Path(state_dir) / "._LATEST.tmp"
+        tmp.write_text(str(epoch_id))
+        tmp.replace(Path(state_dir) / "_LATEST")
+        wall = time.time() - t0
+        files = [
+            {"path": p.name, "bytes": p.stat().st_size}
+            for p in sorted(Path(f"{state_dir}/v{epoch_id}").glob("part-*"))
+        ]
+        n_in = _observed_rows(seen)
+        if n_in is None:
+            n_in = batch_df.count()
+        SnapshotLog(f"{state_dir}/_log").commit(
+            f"epoch-{epoch_id}",
+            {
+                "rows_in": n_in,
+                "n_tiles": written.get["rows"],
+                "wall_s": round(wall, 3),
+                "rows_per_s": round(n_in / wall, 1) if wall > 0 else None,
+                "lineage": ["pages-stream"] + ([f"v{prev_v}"] if prev_v is not None else []),
+                "manifest": files,
+            },
+        )
 
     writer = pages.writeStream.option("checkpointLocation", f"{state_dir}/_chk").foreachBatch(handle)
     # test hook: lets the replay-idempotence tests invoke the epoch

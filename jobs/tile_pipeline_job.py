@@ -111,28 +111,17 @@ def main() -> None:
                 F.count(F.lit(1)).alias("n_poly_hits"),
             )
         )
-        joined = spark.table("job_tiles_b").join(polys_roll, ["cell_id"], "left")
+        # MERGE hints pin the co-bucketed SortMergeJoin the assertion checks
+        # (as bucketing.cobucketed_join(force_sortmerge=True)): broadcast is
+        # also shuffle-free at sandbox scale but does not survive a 100x
+        # right side
+        joined = spark.table("job_tiles_b").hint("merge").join(polys_roll.hint("merge"), ["cell_id"], "left")
         out = joined.na.fill({"n_polys": 0, "n_poly_hits": 0})
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, f"bucketed rollup plan regressed to a shuffle:\n{plan}"
         return out
 
-    # the final join runs co-bucketed; broadcast would also be shuffle-free
-    # at sandbox scale but does NOT survive a 100x right side — pin the
-    # bucketed SortMergeJoin shape the assertion checks
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        run_stage(
-            spark,
-            log,
-            "tile_poly_rollup",
-            bucketed_rollup,
-            inputs=["tiled", "pip_tagged"],
-            params=p,
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
+    run_stage(spark, log, "tile_poly_rollup", bucketed_rollup, inputs=["tiled", "pip_tagged"], params=p)
     datasets = run_stage(
         spark,
         log,

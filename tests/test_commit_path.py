@@ -10,7 +10,12 @@ with the written schema. These tests pin that
   the written parquet has (data columns, then partition columns),
 * a 0-row write still yields its observed count instead of hanging,
 * no job starts after the write finishes (job groups via
-  ``statusTracker()``, which works with the UI off).
+  ``statusTracker()``, which works with the UI off),
+* the stage rules of ``plans.snapshots``: an attempt resumes only its own
+  params' partition records, the overwrite mode never touches the session,
+  a committed stage returns the fresh schema without a job, and partition
+  records are exact per (stage, values),
+* a torn ``_LATEST`` pointer write leaves the previous pointer.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.readwriter import DataFrameWriter
 
 from convert_spark import datagen
@@ -95,6 +101,30 @@ def jobs_after_writes(spark, monkeypatch):
         monkeypatch.setattr(DataFrameWriter, "parquet", original)
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
+
+
+def jobs_started(spark, fn) -> list[int]:
+    """Ids of the jobs ``fn()`` starts, read once the listener bus has
+    delivered every event (the status store is updated asynchronously)."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _GROUP_PROPS}
+    group = f"commit-test-{next(_groups)}-call"
+    sc.setJobGroup(group, "call under test")
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _buckets(spark, n_buckets: int, mult: int, per_bucket: int = 20) -> DataFrame:
+    return (
+        spark.range(0, n_buckets * per_bucket, numPartitions=2)
+        .withColumn("bucket", (F.col("id") % n_buckets).cast("int"))
+        .withColumn("val", F.col("id") * mult)
+    )
 
 
 class TestStageCommit:
@@ -188,6 +218,103 @@ class TestEpochCommit:
         assert last.schema == prev.schema
         assert sorted(last.collect()) == sorted(prev.collect())  # the empty epoch changed nothing
 
+    def test_torn_pointer_write_keeps_previous_pointer(self, spark, tmp_path, monkeypatch):
+        (tmp_path / "landing").mkdir()
+        handle = _epoch_handler(spark, tmp_path)
+        batches = _epoch_batches(spark)
+        handle(batches[0], 0)
+        original = Path.write_text
+
+        def torn(self, data, *args, **kwargs):  # truncates, then fails
+            original(self, "")
+            raise OSError("disk full")
+
+        monkeypatch.setattr(Path, "write_text", torn)
+        with pytest.raises(OSError):
+            handle(batches[1], 1)
+        monkeypatch.setattr(Path, "write_text", original)
+        assert (tmp_path / "_LATEST").read_text() == "0"
+        torn_v1 = sorted(spark.read.parquet(str(tmp_path / "v1")).collect())
+        handle(batches[1], 1)  # the replayed epoch folds onto v0
+        assert SnapshotLog(str(tmp_path / "_log")).latest()["lineage"] == ["pages-stream", "v0"]
+        assert sorted(spark.read.parquet(str(tmp_path / "v1")).collect()) == torn_v1
+
+
+class TestStageRules:
+    """One commit body for both runners: stale state, the overwrite mode,
+    the committed schema and exact partition records."""
+
+    def test_params_change_shrinks_partition_set(self, spark, tmp_path):
+        run_stage_partitioned(spark, SnapshotLog(str(tmp_path)), "st", lambda: _buckets(spark, 4, 2), "bucket",
+                              partition_values=[0, 1, 2, 3], params={"p": 1}, chunk_size=1)
+        log = SnapshotLog(str(tmp_path))
+        out = run_stage_partitioned(spark, log, "st", lambda: _buckets(spark, 2, 3), "bucket",
+                                    partition_values=[0, 1], params={"p": 2}, chunk_size=1)
+        assert out.count() == log.committed("st")["rows"] == 40
+        assert sorted(out.select("id", "bucket", "val").collect()) == sorted(_buckets(spark, 2, 3).collect())
+        assert sorted(p.name for p in (tmp_path / "st").glob("bucket=*")) == ["bucket=0", "bucket=1"]
+        assert [r["params"] for r in log._partition_records("st")] == [{"p": 2}, {"p": 2}]
+
+    def test_session_overwrite_mode_unchanged(self, spark, tmp_path, monkeypatch):
+        key = "spark.sql.sources.partitionOverwriteMode"
+        modes = []
+        original = DataFrameWriter.parquet
+
+        def parquet(self, *args, **kwargs):
+            modes.append(spark.conf.get(key))
+            return original(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        run_stage_partitioned(spark, SnapshotLog(str(tmp_path)), "st", lambda: _numbers(spark, 200), "bucket",
+                              partition_values=[0, 1, 2, 3], chunk_size=2)
+        assert len(modes) == 2 and all(m.lower() == "static" for m in modes), modes
+
+    def test_resumed_schema_equals_fresh(self, spark, tmp_path):
+        build = lambda: spark.range(0, 100).withColumn("g", F.col("id") % 3)  # noqa: E731 (g: bigint)
+        plain = lambda: run_stage(spark, SnapshotLog(str(tmp_path)), "plain", build, partition_by=["g"])  # noqa: E731
+        parted = lambda: run_stage_partitioned(  # noqa: E731
+            spark, SnapshotLog(str(tmp_path)), "parted", build, "g", partition_values=[0, 1, 2]
+        )
+        for run in (plain, parted):
+            fresh = run()
+            assert fresh.schema["g"].dataType == T.LongType()
+            assert run().schema == fresh.schema
+
+    def test_committed_stages_run_no_job(self, spark, tmp_path):
+        def stages():
+            log = SnapshotLog(str(tmp_path))
+            run_stage(spark, log, "plain", lambda: _numbers(spark, 200), partition_by=["tag"])
+            run_stage_partitioned(spark, log, "parted", lambda: _numbers(spark, 200), "bucket",
+                                  partition_values=[0, 1, 2, 3], chunk_size=2)
+
+        stages()
+        assert jobs_started(spark, stages) == []
+
+    def test_record_names_do_not_collide(self, spark, tmp_path):
+        # values sharing their first 80 characters
+        prefix = "x" * 80
+        key = F.concat(F.lit(prefix), (F.col("id") % 2).cast("string"))
+        build = lambda: _numbers(spark, 40).withColumn("key", key)  # noqa: E731
+        log = SnapshotLog(str(tmp_path))
+        run_stage_partitioned(spark, log, "long", build, "key", chunk_size=1)
+        assert sorted(v for r in log._partition_records("long") for v in r["values"]) == [prefix + "0", prefix + "1"]
+        for p in (tmp_path / "_snapshots").glob("snapshot-*.json"):  # the crash before the stage commit
+            p.unlink()
+        log = SnapshotLog(str(tmp_path))
+        out = run_stage_partitioned(spark, log, "long", build, "key", chunk_size=1)
+        snap = log.committed("long")
+        assert snap["resumed_partitions"] == [prefix + "0", prefix + "1"]
+        assert snap["rows"] == out.count() == 40
+
+    def test_records_selected_by_stage_field(self, spark, tmp_path):
+        # stage "st-b"'s records also match the file-name prefix "part-st-"
+        log = SnapshotLog(str(tmp_path))
+        run_stage_partitioned(spark, log, "st-b", lambda: _buckets(spark, 2, 1), "bucket", partition_values=[0, 1])
+        out = run_stage_partitioned(spark, log, "st", lambda: _buckets(spark, 2, 1), "bucket", partition_values=[0, 1])
+        snap = log.committed("st")
+        assert snap["resumed_partitions"] == [] and snap["rows"] == out.count() == 40
+        assert [r["stage"] for r in log._partition_records("st")] == ["st"]
+
 
 class TestNoJobAfterWrite:
     """Job-count guard: a stage commit or an epoch starts no job once its
@@ -221,3 +348,17 @@ class TestNoJobAfterWrite:
             with jobs_after_writes(spark, monkeypatch) as (during, after):
                 handle(batch, epoch)
                 assert during() and after() == [], f"epoch {epoch}"
+
+
+def test_no_session_conf_set():
+    """A session conf set by one stage leaks into every thread of the
+    session: settings ride on the write or the plan (an option, a hint)."""
+    repo = Path(__file__).resolve().parent.parent
+    hits = [
+        f"{p.relative_to(repo)}:{i}"
+        for d in ("convert_spark", "jobs")
+        for p in sorted((repo / d).rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "conf.set(" in line
+    ]
+    assert hits == []
