@@ -17,8 +17,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-SEED = 42
-
 # hot clusters (dense urban tiles — the skew source, FIXTURES.md §1)
 CITIES = np.array(
     [

@@ -96,12 +96,6 @@ def fingerprint64(text: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
-def minhash_sig(text: pd.Series) -> pd.Series:
-    sigs = sk.minhash_signatures(text)
-    return pd.Series(list(sigs))
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
 def lsh_keys(text: pd.Series) -> pd.Series:
     sigs = sk.minhash_signatures(text)
     return pd.Series(list(sk.lsh_band_keys_batch(sigs)))

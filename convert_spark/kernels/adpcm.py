@@ -210,10 +210,6 @@ MS_ADAPT = np.array(
 )
 
 
-def ms_samples_per_block(block_align: int, nch: int) -> int:
-    return 2 + (block_align - 7 * nch) * 2 // nch
-
-
 def _ms_nibbles(body: np.ndarray, nch: int) -> np.ndarray:
     """(nb, data_bytes) -> (nb, nch, n_codes) signed codes in sample
     order: high nibble first, channels rotating nibble-by-nibble."""

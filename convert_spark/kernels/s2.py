@@ -100,12 +100,6 @@ def xyz_to_face_uv(p: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return face.astype(np.int64), u, v
 
 
-def st_to_uv(s: np.ndarray) -> np.ndarray:
-    """Quadratic ST -> UV (the projection the production S2 libs use)."""
-    s = np.asarray(s, dtype=np.float64)
-    return np.where(s >= 0.5, (1.0 / 3.0) * (4 * s * s - 1), (1.0 / 3.0) * (1 - 4 * (1 - s) * (1 - s)))
-
-
 def uv_to_st(u: np.ndarray) -> np.ndarray:
     u = np.asarray(u, dtype=np.float64)
     with np.errstate(invalid="ignore"):
@@ -679,13 +673,6 @@ def _loop_cap_batch(raw_pts: np.ndarray):
     center = np.where(use_mid[:, None], mid_center, pole_center)
     radius = np.where(use_mid, mid_rad, pole_rad)
     return center, radius
-
-
-def loop_cap_bound(points: np.ndarray) -> tuple[np.ndarray, float]:
-    """Bounding cap of one loop (golang/geo Loop.CapBound chain)."""
-    pts = np.asarray(points, dtype=np.float64).reshape(1, -1, 3)
-    center, radius = _loop_cap_batch(pts)
-    return center[0], float(radius[0])
 
 
 def cap_cell_union_bound(center_xyz: np.ndarray, radius_rad: float) -> list[int]:

@@ -30,8 +30,7 @@ import pandas as pd
 # (operators/extract.py MENTION_PATTERN) — both engines must accept the
 # exact same byte sequences for the per-url byte-identical invariant
 # (BASELINE input_hint) to hold across implementations.
-GEO_RE = re.compile(r"geo:(-?[0-9]+\.[0-9]+),(-?[0-9]+\.[0-9]+)")
-LATLON_RE = re.compile(r"lat (-?[0-9]+(?:\.[0-9]+)?) lon (-?[0-9]+(?:\.[0-9]+)?)")
+#
 # single alternation scan: one extractall pass yields all mentions already
 # in document order (no per-match position recovery)
 COMBINED_RE = re.compile(
@@ -84,7 +83,6 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "und", "das", "ist", "nicht", "ein", "mit"),
     "zh": ("的", "是", "了", "在", "和", "有", "我", "不"),
 }
-_WORD_RE = re.compile(r"[a-zA-Z一-鿿]+")
 
 
 def lang_scores(texts: pd.Series) -> pd.DataFrame:

@@ -19,8 +19,10 @@ shuffle-friendly formulation:
 Each round is two groupBy shuffles over the edge list; the edge list
 contracts toward star graphs centered on component minima in
 O(log^2 n) rounds (in practice a handful). No driver-side graph state —
-the edge RDD never leaves the cluster; convergence is detected by an
-edge-set hash (count + xor of edge hashes), not by collecting edges.
+the edge RDD never leaves the cluster. Convergence is observed on the
+round's checkpoint: an edge-set fingerprint (count, xor and sum of edge
+hashes) rides in the job that materializes the round's edges, so a round
+is one action and no edge is collected.
 
 At 100 TB: near-dup graphs are sparse (bounded candidate generation
 upstream) and components are small (duplicate clusters), so the edge list
@@ -33,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.checkpoints import checkpoint, release
 
 
 def _canon_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
@@ -93,35 +97,32 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
-def _edge_fingerprint(edges: DataFrame) -> tuple[int, int, int, int]:
-    """(count, xor, salted xor, wrapped sum) of per-edge hashes:
-    order-independent convergence check in one aggregation job — no edge
+def _checkpoint_edges(edges: DataFrame) -> tuple[DataFrame, tuple[int, int, int, int]]:
+    """The eager checkpoint of ``edges`` and its convergence fingerprint,
+    observed in the checkpoint's own job: (count, xor, salted xor, wrapped
+    sum) of per-edge hashes, an order-independent check with no edge
     collect. Two independent hash streams (plain / salted xxhash64) plus
     the additive sum make a silent collision (two distinct edge sets with
     equal fingerprint declaring convergence early and emitting corrupt
     duplicate memberships) require simultaneous collisions in three
-    decorrelated 64-bit channels."""
-    row = (
-        edges.select(
-            F.xxhash64("u", "v").alias("eh"),
-            F.xxhash64(F.lit(0x5A17), "u", "v").alias("eh2"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(eh)").alias("h"),
-            F.expr("bit_xor(eh2)").alias("h2"),
-            # additive channel folded to 20 bits per term: a raw bigint sum
-            # would overflow (an ERROR under Spark 4 ANSI mode); 30-bit
-            # terms only held to 2^33 (~8.6B) edges — plausible at 100 TB.
-            # 20-bit terms keep the sum in int64 to 2^43 (~8.8T) edges,
-            # and the channel is one of four (count/xor/salted-xor/sum),
-            # so the narrower fold does not meaningfully weaken the
-            # combined collision resistance.
-            F.sum(F.pmod(F.col("eh"), F.lit(1 << 20))).alias("hs"),
-        )
-        .collect()[0]
+    decorrelated 64-bit channels. An empty edge set observes NULL hashes,
+    read as 0."""
+    eh = F.xxhash64("u", "v")
+    edges, m = checkpoint(
+        edges,
+        n=F.count(F.lit(1)),
+        h=F.bit_xor(eh),
+        h2=F.bit_xor(F.xxhash64(F.lit(0x5A17), "u", "v")),
+        # additive channel folded to 20 bits per term: a raw bigint sum
+        # would overflow (an ERROR under Spark 4 ANSI mode); 30-bit
+        # terms only held to 2^33 (~8.6B) edges — plausible at 100 TB.
+        # 20-bit terms keep the sum in int64 to 2^43 (~8.8T) edges,
+        # and the channel is one of four (count/xor/salted-xor/sum),
+        # so the narrower fold does not meaningfully weaken the
+        # combined collision resistance.
+        hs=F.sum(F.pmod(eh, F.lit(1 << 20))),
     )
-    return int(row["n"]), int(row["h"] or 0), int(row["h2"] or 0), int(row["hs"] or 0)
+    return edges, (m["n"], m["h"] or 0, m["h2"] or 0, m["hs"] or 0)
 
 
 def connected_components(
@@ -136,14 +137,13 @@ def connected_components(
 
     ``round_stats``, when given, receives one (round, n_edges) tuple per
     completed large-star/small-star round — the edge counts come from the
-    convergence fingerprint the loop already computes, so the evidence is
-    free (no extra job).
+    convergence fingerprint observed on the round's checkpoint, so the
+    evidence is free (no extra job).
 
     Alternates large-star/small-star until the edge set is stable (a
-    star graph is a fixed point of both). Each round eagerly
-    localCheckpoints the new edge list — lineage would otherwise double
-    per round. Returns the star edges as the membership table, plus the
-    root rows themselves.
+    star graph is a fixed point of both). Each round eagerly checkpoints
+    the new edge list — lineage would otherwise double per round. Returns
+    the star edges as the membership table, plus the root rows themselves.
 
     ``max_rounds`` default: measured worst case is ~log2(diameter)+1
     rounds (bench.py cc_convergence: a 100k-node chain converges in 18
@@ -151,10 +151,10 @@ def connected_components(
     single chain of ~2^48 nodes — far past the 10^12-doc design scale —
     while converged graphs never pay for the headroom.
     """
-    # EAGER localCheckpoint each round: truncates the per-round lineage
-    # doubling. (A lazy checkpoint materialized by the fingerprint action
-    # was measured 5x SLOWER end-to-end — the un-materialized plan is
-    # re-optimized/re-planned by every round built on top of it.)
+    # EAGER checkpoint each round: truncates the per-round lineage
+    # doubling. (A lazy checkpoint materialized by a separate fingerprint
+    # action was measured 5x SLOWER end-to-end — the un-materialized plan
+    # is re-optimized/re-planned by every round built on top of it.)
     # Checkpoint ``pairs`` ONCE up front: it is typically the expensive
     # upstream candidate join, and both the node set and the edge list
     # derive from it — the previous shape materialized that lineage twice
@@ -164,21 +164,17 @@ def connected_components(
     # paths.
     # Checkpoint storage is O(1) in rounds: each round releases the
     # superseded generation (plans/checkpoints.py).
-    from ..plans.checkpoints import release
-
-    pairs_c = pairs.select(F.col(a), F.col(b)).localCheckpoint(eager=True)
+    pairs_c, _ = checkpoint(pairs.select(F.col(a), F.col(b)))
     all_nodes = (
         pairs_c.select(F.col(a).alias("node"))
         .unionByName(pairs_c.select(F.col(b).alias("node")))
         .filter(F.col("node").isNotNull())
         .distinct()
     )
-    edges = _canon_edges(pairs_c, a, b).localCheckpoint(eager=True)
-    fp = _edge_fingerprint(edges)
+    edges, fp = _checkpoint_edges(_canon_edges(pairs_c, a, b))
     converged = False
     for rnd in range(max_rounds):
-        edges2 = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        fp2 = _edge_fingerprint(edges2)
+        edges2, fp2 = _checkpoint_edges(_small_star(_large_star(edges)))
         release(edges)
         edges = edges2
         if round_stats is not None:

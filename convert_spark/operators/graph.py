@@ -21,7 +21,7 @@ deterministic floor losses. Each iteration is one join + one groupBy
 shuffle, executed as ONE Spark job: the dangling-mass scalar is a
 broadcast 1-row aggregate inside the round's plan, so the driver sees
 no data at all. Lineage is truncated per iteration with an eager
-localCheckpoint exactly like the CC loop.
+checkpoint exactly like the CC loop.
 
 Overflow bounds: r <= SCALE = 1e12, weights < 1e6 -> r*w < 1e18 < 2^63.
 """
@@ -59,7 +59,7 @@ def pagerank_integer(
     superseded ranks (plans/checkpoints.py), and the fixed inputs
     (edges/nodes/sinks) are released once the loop ends — the returned
     DataFrame owns exactly ONE checkpoint (its own final ranks)."""
-    from ..plans.checkpoints import release
+    from ..plans.checkpoints import checkpoint, release
 
     if iters < 1:
         # with iters=0 the returned frame would still derive from the
@@ -70,28 +70,24 @@ def pagerank_integer(
     # e_o and sinks all derive from it — without this an upstream like
     # the link-extraction regex pipeline re-evaluates 3-4x (measured
     # 88s -> the q_pagerank_incremental bench row before this line)
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("d"))
-        .unionByName(e.select(F.col("dst").alias("d")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e, _ = checkpoint(
+        edges.select(
+            F.col(src).cast("string").alias("src"),
+            F.col(dst).cast("string").alias("dst"),
+            F.col(weight).cast("long").alias("w"),
+        )
     )
-    n = nodes.count()
+    nodes, m = checkpoint(
+        e.select(F.col("src").alias("d")).unionByName(e.select(F.col("dst").alias("d"))).distinct(),
+        n=F.count(F.lit(1)),
+    )
+    n = m["n"]
     if n == 0:
         release(nodes, e)
         return edges.sparkSession.createDataFrame([], "d string, r long")
     outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    e_o = e.join(outw, "src").localCheckpoint(eager=True)  # (src, dst, w, ow)
-    sinks = (
-        nodes.join(outw, nodes["d"] == outw["src"], "left_anti")
-        .select("d")
-        .localCheckpoint(eager=True)
-    )
+    e_o, _ = checkpoint(e.join(outw, "src"))  # (src, dst, w, ow)
+    sinks, _ = checkpoint(nodes.join(outw, nodes["d"] == outw["src"], "left_anti").select("d"))
     base = (SCALE * (damp_den - damp_num)) // damp_den // n
     if init_ranks is None:
         r = nodes.select("d", F.lit(SCALE // n).cast("long").alias("r"))
@@ -113,7 +109,7 @@ def pagerank_integer(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        r_next = (
+        r_next, _ = checkpoint(
             nodes.join(contrib, nodes["d"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -122,7 +118,6 @@ def pagerank_integer(
                     f"{base}L + (({damp_num}L * (coalesce(contrib, 0L) + ds)) div {damp_den}L)"
                 ).alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
         release(r)
         r = r_next

@@ -314,16 +314,14 @@ def _tile_row_of(lat: float, n: int) -> int:
 
 def _latlon_extremes(q: DataFrame, r: DataFrame) -> tuple[float, float, float, float] | None:
     """(lat_lo, lat_hi, lon_lo, lon_hi) over both sides, or None if either
-    side is empty — two bounded 1-row driver collects."""
-    qa = q.agg(
-        F.min("q_lat"), F.max("q_lat"), F.min("q_lon"), F.max("q_lon")
-    ).collect()[0]
-    ra = r.agg(
-        F.min("r_lat"), F.max("r_lat"), F.min("r_lon"), F.max("r_lon")
-    ).collect()[0]
-    if any(v is None for v in (*qa, *ra)):
+    side is empty — one bounded 1-row driver collect of the two sides'
+    one-row aggregates."""
+    qa = q.agg(F.min("q_lat"), F.max("q_lat"), F.min("q_lon"), F.max("q_lon"))
+    ra = r.agg(F.min("r_lat"), F.max("r_lat"), F.min("r_lon"), F.max("r_lon"))
+    row = qa.crossJoin(ra).collect()[0]
+    if any(v is None for v in row):
         return None
-    return (min(qa[0], ra[0]), max(qa[1], ra[1]), min(qa[2], ra[2]), max(qa[3], ra[3]))
+    return (min(row[0], row[4]), max(row[1], row[5]), min(row[2], row[6]), max(row[3], row[7]))
 
 
 def _prune_bound_at(ext: tuple[float, float, float, float], zoom: int) -> float | None:
@@ -413,7 +411,7 @@ def knn_join(
     At 100 TB, run zoom high enough that a cell holds O(k) refs.
     """
     from ..functions import exprs
-    from ..plans.checkpoints import release
+    from ..plans.checkpoints import checkpoint, release
 
     q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
     r = refs.select(ref_id, F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon"))
@@ -463,17 +461,18 @@ def knn_join(
         done = F.max("rn").over(w_q) == k
         if b2 is not None:
             done = done & (F.max("dist").over(w_q) < F.lit(b2))
-        topk = topk.select(*cols, done.alias("__ok")).localCheckpoint(eager=True)
+        topk, _ = checkpoint(topk.select(*cols, done.alias("__ok")))
         answered = topk.filter(F.col("__ok")).drop("__ok")
         rounds.append(answered)
-        # checkpoint the straggler set: without it the next step's join and
-        # the count below would each re-run the whole anti-join chain
-        stragglers = remaining.join(
-            answered.select(query_id).distinct(), query_id, "left_anti"
-        ).localCheckpoint(eager=True)
+        # checkpoint the straggler set, counted in the checkpoint's own job:
+        # without it the next step's join would re-run the whole anti-join
+        # chain
+        stragglers, m = checkpoint(
+            remaining.join(answered.select(query_id).distinct(), query_id, "left_anti"),
+            n=F.count(F.lit(1)),
+        )
         release(remaining)  # superseded straggler set
-        remaining = stragglers
-        n_stragglers = remaining.count()
+        remaining, n_stragglers = stragglers, m["n"]
         if round_stats is not None:
             round_stats.append((rg, n_stragglers))
         if n_stragglers == 0:

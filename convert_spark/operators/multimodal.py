@@ -70,13 +70,6 @@ FRAME_SCHEMA = "url string, frame_idx int, frame_sha string"
 RESIZE_SCHEMA = "url string, out_w int, out_h int, resized_sha string"
 
 
-def _fake_dims(digest: bytes) -> tuple[int, int, int]:
-    w = 64 + digest[0] % 192
-    h = 64 + digest[1] % 192
-    c = 1 + digest[2] % 3
-    return w, h, c
-
-
 # PNG color type -> channel count (PNG spec, IHDR)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 # JPEG SOF markers that carry frame dimensions (not DHT/DAC/RST/...)
@@ -1209,9 +1202,6 @@ CONTAINER_SCHEMA = (
     "sample_rate int, duration_ms long, n_tracks int"
 )
 
-# ISO-BMFF boxes that are pure containers of child boxes (§ references
-# in 14496-12); stsd is a FullBox with an entry count before children
-_MP4_CONTAINERS = frozenset((b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"udta"))
 _MP4_HANDLER_KIND = {b"vide": "video", b"soun": "audio", b"hint": "hint",
                      b"meta": "meta", b"subt": "subtitle", b"text": "text"}
 

@@ -1,12 +1,26 @@
-"""One lifecycle for materialized intermediates: ``release`` and ``hold``.
+"""One lifecycle for materialized intermediates: ``checkpoint``,
+``release`` and ``hold``.
 
 The engine materializes only where an iterative loop or a multi-reader
 plan needs it, in two forms:
 
-* an eager ``localCheckpoint``, which cuts lineage (the CC, PageRank and
-  kNN loops, shared inputs such as q_pagerank_incremental's edge table);
+* an eager local checkpoint, which cuts lineage (the CC, PageRank and
+  kNN loops, shared inputs such as q_pagerank_incremental's edge table).
+  Every one is taken by ``checkpoint``, the engine's one materialization
+  point;
 * a ``persist()`` cache, which keeps lineage (the similarity paths'
   signature tables and corpora).
+
+``checkpoint`` also returns aggregates of the rows it wrote (a loop's
+convergence fingerprint, a straggler or node count), computed by an
+Observation in the checkpoint's own job, so no second action reads the
+data back. The observation sits at the root of the checkpointed plan:
+there it is in the result stage, where Spark applies each partition's
+update exactly once, and adaptive execution does not prune it when the
+result is empty (an empty input still reports a count of 0 and NULL
+for the other aggregates). An observation below a shuffle is dropped
+with its subtree when that shuffle writes no rows, which is why
+``streaming.ingest``'s ``rows_in`` needs a fallback.
 
 Without a lifecycle both forms pin executor storage until the session
 dies: a 50-round CC over a TB-scale edge list would hold fifty
@@ -29,7 +43,18 @@ from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+
+
+def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly local-checkpoint ``df``; return the checkpoint and the
+    ``metrics`` (name -> aggregate Column over ``df``'s rows) observed at
+    the root of the checkpointed plan, in the checkpoint's own job."""
+    if metrics:
+        obs = Observation()
+        df = df.observe(obs, *(c.alias(name) for name, c in metrics.items()))
+    out = df.localCheckpoint(eager=True)
+    return out, obs.get if metrics else {}
 
 
 def release(*dfs: DataFrame) -> None:

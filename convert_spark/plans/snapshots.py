@@ -19,7 +19,9 @@ share one commit body, ``_run``, whose rules are:
   by a partition record (``_snapshots/part-<stage>-<key>.json``). The mode
   is an option of each write, never a session conf.
 * **Rows.** Each group's rows are an Observation on its write (no count
-  job); a per-partition stage commits the sum of its own records.
+  job); a per-partition stage commits the sum of its own records. A
+  per-partition stage with no partition values writes no group and
+  commits 0 rows over an empty stage directory.
 * **Commit last.** The snapshot (``_snapshots/snapshot-N.json``: id,
   parent, rows, wall, rows/sec, lineage, params, built schema, file
   manifest) is written after the stage's data, so a crash leaves the stage
@@ -184,6 +186,7 @@ def _run(spark, log, stage, build, inputs, params, partition_by, partition_value
         rows += written
         if group is not None:
             log.partition_commit(stage, group, _stage_meta(written, time.time() - tg, params=params))
+    Path(path).mkdir(parents=True, exist_ok=True)  # an empty partition set writes no group
     meta = dict(lineage=inputs or [], partition_by=partition_by, params=params, schema=df.schema.jsonValue())
     log.commit(stage, _stage_meta(rows, time.time() - t0, **meta, **extra, files=log._manifest(stage)))
     return _durable(spark, df.schema, path, partition_by)

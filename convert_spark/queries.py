@@ -629,12 +629,12 @@ def q_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer spec as q_domain_pagerank, so the result is hash-gateable;
     the oracle unrolls both phases as materialized CTE stages."""
     from .operators.graph import pagerank_integer
-    from .plans.checkpoints import release
+    from .plans.checkpoints import checkpoint, release
 
     # materialize the edge pipeline ONCE: both phases consume `ed`, and
     # before round 8 the warm phase re-derived the whole URL-parse +
     # link-extract lineage a second time (guide §5: cut shared lineage)
-    ed = _domain_edges(spark, sf_dir).localCheckpoint(eager=True)
+    ed, _ = checkpoint(_domain_edges(spark, sf_dir))
     hist = ed.filter(F.expr(f"{_PR_SPLIT} <> 0"))
     r_hist = pagerank_integer(hist, iters=6)
     out = pagerank_integer(ed, iters=3, init_ranks=r_hist)
@@ -705,11 +705,12 @@ def q_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-length allow/disallow tie (allow wins), unmatched paths and
     hostless pages (allowed, NULL rule)."""
     from .functions import urls
+    from .plans.checkpoints import checkpoint
 
     pages = q_url_parse(spark, sf_dir).select("page_id", "reg_domain", "path")
     # _gen_barrier: the reg_domain != '' predicate would otherwise push
     # below the parse Projects and re-derive the whole chain per row.
-    # localCheckpoint: `hd` feeds FIVE rule-union branches, each of which
+    # checkpoint: `hd` feeds FIVE rule-union branches, each of which
     # would re-execute the full parse + distinct (measured ~5x the
     # query); the materialized table is ~|domains| rows (round 8).
     doms = (
@@ -718,7 +719,7 @@ def q_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     h = (F.ascii(F.substring("reg_domain", 5, 1)) + F.length("reg_domain")).alias("h")
-    hd = doms.select("reg_domain", h).localCheckpoint(eager=True)
+    hd, _ = checkpoint(doms.select("reg_domain", h))
 
     def rule(rtype: str, prefix: F.Column, cond=None):
         out = hd.select(
@@ -1808,14 +1809,6 @@ union all select doc_id * 10 + 4 as rid,
   from documents where doc_id % 13 = 0
 """
 
-FILTER_RULES = (
-    ("exact_dup", "non-canonical exact copy (md5, min-rid keeps)"),
-    ("too_short", "n_words < 10"),
-    ("too_punct", "punct_ratio > 0.15"),
-    ("low_stopwords", "stop_ratio < 0.05"),
-)
-
-
 def q_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-data filter composition (C4/Gopher-shaped): exact-dup ->
     length -> punctuation -> stopword rules applied IN ORDER, emitting
@@ -2692,14 +2685,14 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     including cross-batch merges of previously separate clusters."""
     from .operators import components
     from .operators.ann import neardup_lsh
-    from .plans.checkpoints import release
+    from .plans.checkpoints import checkpoint, release
 
     corpus = _neardup_corpus(spark, sf_dir)
     nd = neardup_lsh(corpus, threshold=NEARDUP_T)
     # materialize the pair set ONCE: the historical and increment filters
     # each consume it, and the band join + dedup + rerank would otherwise
     # run twice (round 8)
-    pairs = nd.select("a_id", "b_id").localCheckpoint(eager=True)
+    pairs, _ = checkpoint(nd.select("a_id", "b_id"))
     nd._release()  # the pair checkpoint supersedes the near-dup caches
     is_new = F.pmod(F.xxhash64("a_id", "b_id", F.lit(3)), F.lit(3)) == 0
     old_pairs = pairs.filter(~is_new)

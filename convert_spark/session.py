@@ -46,6 +46,15 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(p, *key_cols) if key_cols else df.repartition(p)
 
 
+def _memory_defaults(ram_bytes: int) -> tuple[str, str]:
+    """Default (driver heap, off-heap) sizes for a host with ``ram_bytes``
+    of physical memory: 24g and 16g where three quarters of RAM hold both,
+    else that three-quarter budget split in the same 3:2 ratio, so heap +
+    off-heap stays below RAM."""
+    budget = ram_bytes * 3 // 4 >> 20  # MiB
+    return f"{min(24 << 10, budget * 3 // 5)}m", f"{min(16 << 10, budget * 2 // 5)}m"
+
+
 def get_session(
     cores: int | None = None,
     app_name: str = "convert_spark",
@@ -68,6 +77,7 @@ def get_session(
     else:
         cores_str = str(cores)
     n_parts = shuffle_partitions or (int(cores_str) if cores_str != "*" else (os.cpu_count() or 8))
+    heap, offheap = _memory_defaults(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
 
     builder = (
         SparkSession.builder.master(master or f"local[{cores_str}]")
@@ -83,8 +93,8 @@ def get_session(
         # + off-heap Arrow buffers restore scaling
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_GRAFT_OFFHEAP", "16g"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.memory.offHeap.size", os.environ.get("SPARK_GRAFT_OFFHEAP", offheap))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         # Netty's default direct-arena count starves the Arrow->Python
         # write path at high local thread counts (measured 6x slowdown of
         # pandas stages at local[32]; allocator lock contention). One arena

@@ -8,7 +8,8 @@ with the written schema. These tests pin that
 * every committed count equals a count of what was written,
 * the returned DataFrame has exactly the schema a schema-inferring read of
   the written parquet has (data columns, then partition columns),
-* a 0-row write still yields its observed count instead of hanging,
+* a 0-row write still yields its observed count instead of hanging, and
+  a per-partition stage with no partition value commits 0 rows,
 * no job starts after the write finishes (job groups via
   ``statusTracker()``, which works with the UI off),
 * the stage rules of ``plans.snapshots``: an attempt resumes only its own
@@ -184,6 +185,19 @@ class TestStageCommit:
         _timed(lambda: run_stage_partitioned(spark, log, "groups", empty, "bucket", partition_values=[0, 1]))
         snap = log.committed("groups")
         assert snap["rows"] == 0 and [r["rows"] for r in log._partition_records("groups")] == [0]
+
+    def test_empty_partition_set(self, spark, tmp_path):
+        """No partition value, so no group is written: the stage commits 0
+        rows and returns an empty frame with the built schema; a rerun
+        starts no job."""
+        build = lambda: spark.range(10).filter("id < 0").withColumn("g", F.col("id") % 2)  # noqa: E731
+        run = lambda: run_stage_partitioned(spark, SnapshotLog(str(tmp_path)), "st", build, "g")  # noqa: E731
+        out = _timed(run)
+        assert SnapshotLog(str(tmp_path)).committed("st")["rows"] == 0
+        assert out.schema == T.StructType([T.StructField(f.name, f.dataType) for f in build().schema])
+        assert out.collect() == []
+        assert jobs_started(spark, run) == []
+        assert run().schema == out.schema and run().collect() == []
 
 
 def _epoch_batches(spark):

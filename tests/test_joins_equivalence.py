@@ -10,9 +10,10 @@
   the density probe (a dense cluster, plus a planted query whose probe
   ring holds k refs while a nearer ref sits just outside it), ring
   doubling (a sparse desert, plus a planted query with exactly k-1 refs in
-  its first ring), the antimeridian wrap, near-pole points (probe bound
-  None), zoom 29/30 (the deep probe zoom caps at 30, so at zoom 30 it is
-  the operator zoom), k above the number of refs, and an empty query set.
+  its first ring), a first step that answers every query (0 stragglers),
+  the antimeridian wrap, near-pole points (probe bound None), zoom 29/30
+  (the deep probe zoom caps at 30, so at zoom 30 it is the operator
+  zoom), k above the number of refs, and an empty query set.
 * ``salted_tile_join`` with a large ``n_salt``: same rows as ``tile_join``
   and an analyzed plan no larger than at a small ``n_salt``.
 * ``_ring_candidates``: the analyzed plan at ring 64 is no larger than at
@@ -123,13 +124,22 @@ def case_k_above_refs():
     return _frames(q_lat, q_lon, r_lat, r_lon), dict(k=10, zoom=6, ring=1, max_ring=2)
 
 
+def case_all_answered():
+    """Ring 1 of 1 -> 2 -> 4 holds k refs for every query: the first
+    non-final step answers them all and leaves 0 stragglers."""
+    rng = np.random.Generator(np.random.PCG64(29))
+    q_lat, q_lon = 30 + rng.uniform(2, 4, 20), 10 + rng.uniform(2, 4, 20)
+    r_lat, r_lon = 30 + rng.uniform(0, 6, 300), 10 + rng.uniform(0, 6, 300)
+    return _frames(q_lat, q_lon, r_lat, r_lon), dict(k=3, zoom=6, ring=1, max_ring=4)
+
+
 def case_empty_queries():
     rng = np.random.Generator(np.random.PCG64(28))
     return _frames([], [], rng.uniform(-5, 5, 20), rng.uniform(-5, 5, 20)), dict(k=3, zoom=6, ring=1, max_ring=4)
 
 
 CASES = [case_dense, case_desert, case_antimeridian, case_pole, case_zoom29, case_zoom30,
-         case_k_above_refs, case_empty_queries]
+         case_k_above_refs, case_all_answered, case_empty_queries]
 
 
 def _tiles(spark, pdf, id_col, zoom):
@@ -213,6 +223,10 @@ class TestKnnSchedule:
         r_tiles = _tiles(spark, rs, "ref_id", kw["zoom"])
         _, ref_stats = schedule_reference(qs, rs, q_tiles, r_tiles, **kw)
         assert len(ref_stats) >= 3 and ref_stats[0][1] > ref_stats[1][1] > 0
+        (qs, rs), kw = case_all_answered()
+        stats = []
+        joins.knn_join(spark.createDataFrame(qs), spark.createDataFrame(rs), round_stats=stats, **kw)
+        assert stats == [(1, 0)]
 
 
 class TestSaltSequence:

@@ -1,15 +1,24 @@
 """Lifecycle of materialized intermediates under concurrency and in the
-kNN straggler loop (plans/checkpoints.py: ``release`` and ``hold``).
+kNN straggler loop (plans/checkpoints.py: ``checkpoint``, ``release`` and
+``hold``).
 
 Each operator releases only the checkpoints it created itself, found
 through the DataFrame's own plan. Three threads sharing one session must
 therefore never free each other's checkpoint storage.
+
+Every eager checkpoint goes through ``checkpoint``, and the CC, kNN and
+PageRank loops read their counts from that checkpoint's own job: with
+``DataFrame.count`` and ``DataFrame.collect`` raising, all three still
+return correct output.
 """
 
 from __future__ import annotations
 
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
+
+import pandas as pd
 
 from conftest import persistent_rdd_ids
 
@@ -63,3 +72,57 @@ class TestKnnStragglerStorage:
         assert len(stats) >= 2, stats
         assert len(new) <= len(stats) + 1, (new, stats)
         assert out.count() == 60 * 4
+
+
+class TestLoopsRunNoDriverAction:
+    def test_cc_knn_pagerank_without_count_or_collect(self, spark, monkeypatch):
+        from test_joins_equivalence import _tiles, case_desert, schedule_reference
+        from test_pagerank import _scalar_pagerank
+
+        from convert_spark.operators.components import connected_components
+        from convert_spark.operators.graph import pagerank_integer
+        from convert_spark.operators.joins import knn_join
+
+        (qs, rs), kw = case_desert()
+        kw = dict(kw, max_ring=4)
+        pairs = spark.createDataFrame(CHAIN, "a_id long, b_id long")
+        edges = spark.createDataFrame(EDGES, "src string, dst string, w long")
+        q_df = spark.createDataFrame(qs, "query_id long, lat double, lon double")
+        r_df = spark.createDataFrame(rs, "ref_id long, lat double, lon double")
+
+        def refuse(self, *args, **kwargs):
+            raise AssertionError("driver action inside an iterative loop")
+
+        stats: list = []
+        with monkeypatch.context() as m:
+            for name in ("count", "collect"):  # on the concrete (classic) DataFrame class
+                m.setattr(type(pairs), name, refuse)
+            cc = connected_components(pairs)
+            knn = knn_join(q_df, r_df, round_stats=stats, **kw)
+            pr = pagerank_integer(edges, iters=6)
+
+        assert {(r["node"], r["component"]) for r in cc.collect()} == {(i, 0) for i in range(41)}
+        assert {r["d"]: r["r"] for r in pr.collect()} == _scalar_pagerank(EDGES, iters=6)
+        q_tiles = _tiles(spark, qs, "query_id", kw["zoom"])
+        r_tiles = _tiles(spark, rs, "ref_id", kw["zoom"])
+        ref, ref_stats = schedule_reference(qs, rs, q_tiles, r_tiles, **kw)
+        key = ["query_id", "rank"]
+        got = knn.toPandas().astype(ref.dtypes.to_dict()).sort_values(key).reset_index(drop=True)
+        ref = ref.sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got[ref.columns], ref, check_exact=True)
+        assert stats == ref_stats and len(stats) == 2
+
+
+def test_local_checkpoint_only_in_checkpoints_module():
+    """One materialization point: every eager checkpoint is taken by
+    ``plans.checkpoints.checkpoint``."""
+    repo = Path(__file__).resolve().parent.parent
+    hits = [
+        f"{p.relative_to(repo)}:{i}"
+        for d in ("convert_spark", "jobs")
+        for p in sorted((repo / d).rglob("*.py"))
+        if p != repo / "convert_spark" / "plans" / "checkpoints.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+    assert hits == []

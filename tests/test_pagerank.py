@@ -51,6 +51,11 @@ class TestPagerankInteger:
         b = {r["d"]: r["r"] for r in pagerank_integer(df7, iters=5).collect()}
         assert a == b
 
+    def test_empty_edge_list(self, spark):
+        df = spark.createDataFrame([], "src string, dst string, w long")
+        out = pagerank_integer(df, iters=3)
+        assert out.collect() == [] and out.schema.simpleString() == "struct<d:string,r:bigint>"
+
     def test_mass_approximately_conserved(self, spark):
         df = spark.createDataFrame(EDGES, "src string, dst string, w long")
         total = pagerank_integer(df, iters=8).agg(F.sum("r")).first()[0]

@@ -54,6 +54,31 @@ class TestSnapshots:
         pd.testing.assert_frame_equal(a, b)
 
 
+class TestSessionMemoryDefaults:
+    """Driver heap and off-heap defaults from the host's physical RAM."""
+
+    @staticmethod
+    def _mib(size: str) -> int:
+        assert size.endswith("m"), size
+        return int(size[:-1])
+
+    def test_large_hosts_keep_24g_and_16g(self):
+        from convert_spark.session import _memory_defaults
+
+        for ram_gib in (64, 256, 1024):
+            heap, offheap = _memory_defaults(ram_gib << 30)
+            assert (self._mib(heap), self._mib(offheap)) == (24 << 10, 16 << 10)
+
+    def test_small_hosts_stay_below_ram(self):
+        from convert_spark.session import _memory_defaults
+
+        for ram_gib in (2, 8, 16, 32, 48):
+            heap, offheap = (self._mib(s) for s in _memory_defaults(ram_gib << 30))
+            assert 0 < offheap < heap and heap + offheap < ram_gib << 10
+        heap, offheap = _memory_defaults(16 << 30)
+        assert self._mib(heap) + self._mib(offheap) <= 12 << 10
+
+
 class TestStreaming:
     def test_stream_matches_batch(self, spark, tmp_path):
         from convert_spark.streaming import ingest
