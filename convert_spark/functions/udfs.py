@@ -20,20 +20,14 @@ from ..kernels import textkit
 
 
 @F.pandas_udf(T.DoubleType())
-def elev_3857(x: pd.Series, y: pd.Series) -> pd.Series:
-    """GetElev parity: EPSG:3857 -> DEM elevation (NaN -> 0.0 fill happens
-    at the call sites that need it, matching convert.go:1214-1216).
+def elev_3857_or_zero(x: pd.Series, y: pd.Series) -> pd.Series:
+    """GetElev parity: EPSG:3857 -> DEM elevation, NaN (off the grid)
+    filled with 0.0 as convert.go:1214-1216 does.
 
     The DEM grid is built lazily once per executor process (module global
     in kernels.dem) — equivalent to a broadcast variable for this ~4 MB
     raster, without re-pickling per task.
     """
-    v = dem_kernel.get_elev(x.to_numpy(np.float64), y.to_numpy(np.float64))
-    return pd.Series(v)
-
-
-@F.pandas_udf(T.DoubleType())
-def elev_3857_or_zero(x: pd.Series, y: pd.Series) -> pd.Series:
     v = dem_kernel.get_elev(x.to_numpy(np.float64), y.to_numpy(np.float64))
     return pd.Series(np.where(np.isnan(v), 0.0, v))
 

@@ -415,13 +415,15 @@ def neardup_lsh(
     # partitioning, so no extra exchange is added. Width = the session's
     # configured shuffle partitions — by definition the same width the
     # ENSURE exchange would have had before coalescing (defaultParallelism
-    # is only the fallback). Tradeoff, accepted deliberately: a pinned
-    # exchange also opts out of AQE's skew-split, so one hot a_id (the
-    # min-id of a large near-dup cluster) serializes in a single task —
-    # bounded, because a doc's candidate pairs come from <= bands buckets
-    # of <= bucket_cap rows each (64 x 4096 = ~262k pairs, ~ms of fold
-    # work), the constant-cost-per-row regime where skew-split has
-    # nothing to rescue.
+    # is only the fallback). Tradeoff: a pinned exchange also opts out of
+    # AQE's skew-split, so every pair of one a_id runs in one task, and
+    # that tail is NOT bounded. ``salt_hot_keys`` caps the ref rows of
+    # each join shard, not the distinct partners of a doc: the docs of a
+    # C-doc near-dup cluster share buckets, so after the dedup the
+    # cluster's minimum id still collects about C pairs (the cluster
+    # about C^2/2, the lower ids taking the most) — for C = 50k, 50k
+    # 64-dim folds in one task. A hash sub-key on this repartition would
+    # spread it; none is added yet.
     try:
         _width = int(vectors.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):

@@ -65,6 +65,17 @@ def _polygon_index(polygons_pdf: pd.DataFrame):
     return payload
 
 
+def _free_name(base: str, *dfs: DataFrame) -> str:
+    """A temp column name no input carries: ``base``, suffixed with "_"
+    until free (case-insensitively, like Spark's resolver). A caller's
+    column of that name is never overwritten or dropped."""
+    taken = {c.lower() for df in dfs for c in df.columns}
+    name = base
+    while name.lower() in taken:
+        name += "_"
+    return name
+
+
 def _match_pairs(idx, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(point_idx, poly_id) pairs for every point-in-polygon containment:
     STRtree bbox candidates, then exact even-odd ray casting batched by
@@ -158,11 +169,7 @@ def pip_join(
     # (plan-confirmed; the UDF is pure, marking only stops the cloning)
     containing_polys = containing_polys.asNondeterministic()
 
-    # collision-proof temp name: a points column literally named "_polys"
-    # would otherwise be silently overwritten and returned corrupted
-    tmp = "_polys"
-    while tmp in points.columns:
-        tmp += "_"
+    tmp = _free_name("_polys", points)
     tagged = points.withColumn(tmp, containing_polys(F.col(lon_col), F.col(lat_col)))
     ex = F.explode_outer(tmp) if how == "left" else F.explode(tmp)
     return tagged.select(*points.columns, ex.alias("poly_id"))
@@ -189,7 +196,9 @@ def salted_tile_join(
 
     Points get ``salt = pmod(hash(row fingerprint), n_salt)``; the tile
     side is replicated n_salt times so the join key (cell, salt) spreads
-    each hot cell over n_salt reducers.
+    each hot cell over n_salt reducers. The salt column's name is free
+    in both inputs (``_free_name``), so a caller's own ``salt`` column
+    passes through untouched.
 
     ``salt_cols`` names the columns hashed into the salt — pass the
     row's id column when rows are wide: hashing every column pulls the
@@ -203,17 +212,13 @@ def salted_tile_join(
     # increasing_id is nondeterministic under partial stage recomputation
     # (executor loss re-salts rows differently than surviving shuffle
     # files -> silent row loss/duplication)
-    if "salt" in points.columns or "salt" in tiles.columns:
-        # fail loudly: withColumn would silently overwrite (and the final
-        # drop would destroy) a caller's payload column — cf. pip_join's
-        # collision guard for its temp column
-        raise ValueError("salted_tile_join: inputs must not carry a 'salt' column")
+    salt = _free_name("salt", points, tiles)
     salted_points = points.withColumn(
-        "salt",
+        salt,
         F.pmod(F.xxhash64(*[F.col(c) for c in (salt_cols or points.columns)]), F.lit(n_salt)),
     )
-    salted_tiles = _salt_replicate(tiles, n_salt, "salt")
-    return salted_points.join(salted_tiles, keys + ["salt"], "inner").drop("salt")
+    salted_tiles = _salt_replicate(tiles, n_salt, salt)
+    return salted_points.join(salted_tiles, keys + [salt], "inner").drop(salt)
 
 
 def _salt_replicate(df: DataFrame, n_salt: int, salt_col: str) -> DataFrame:
@@ -507,9 +512,7 @@ def range_join(
     match nothing, and Spark's ``sequence`` would enumerate DESCENDING
     for them, silently binning garbage).
     """
-    tmp = "__bin"
-    while tmp in points.columns or tmp in intervals.columns:
-        tmp += "_"
+    tmp = _free_name("__bin", points, intervals)
     v = F.col(value_col)
     lo, hi = F.col(lo_col), F.col(hi_col)
     p = points.withColumn(tmp, F.floor(v / F.lit(bin_size)).cast("long"))

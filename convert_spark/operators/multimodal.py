@@ -8,54 +8,54 @@ Arrow-batched ``mapInPandas`` stages. Two decode paths:
   a seeded, content-hash-derived fake decode, so the Spark-side plumbing
   — schema, partitioning, UDF signature, Arrow batch shape — is real and
   tested with an independent DuckDB oracle.
-* ``deterministic_fake=False``: REAL stdlib decode — headers for
-  PNG (IHDR width/height + color-type channel count), JPEG (SOF marker
-  scan) and WAV (the ``wave`` module; width = frames per channel,
-  height = sample rate); PIXELS for non-interlaced PNG at bit depth 8
-  and 16 plus 8-bit palette (zlib inflate of IDAT + scanline unfilter +
-  PLTE lookup, feeding real channel statistics into
-  ``extract_features``); PCM SAMPLES for 8/16-bit WAV and G.711
-  mu-law/A-law WAV (fmt tags 7/6, expanded to linear int16 via the
-  ITU-T G.711 lookup tables — statistics + fixed-stride frame windows
-  in ``sample_frames``); JPEG PIXELS via the
-  from-scratch codec (kernels/jpeg.py — huffman + dequant + IDCT +
-  YCbCr, any sampling factors, restart intervals, multi-scan
-  sequential AND progressive with successive approximation); GIF
-  FRAMES via the from-scratch codec (kernels/gif.py — LZW,
-  global/local palettes, interlace, and ANIMATION: GCE transparency +
-  disposal methods composited onto the logical screen, so
-  ``sample_frames`` performs genuine video-style frame extraction on
-  animated GIF); nearest-neighbor RESIZE re-encoded in the source
-  format; BMP (24-bit + palettized BI_RGB, both orientations) and
-  baseline TIFF (both byte orders, multi-strip, gray/RGB; Compression
-  none/LZW/Deflate/PackBits with the horizontal Predictor) decoded by
-  kernels/rasters.py (layout paths pure numpy); AVI VIDEO frames
-  (kernels/avi.py — MJPG streams through the JPEG codec, uncompressed
-  DIB streams by reshaping: genuine container video extraction in
-  ``sample_frames``); IMA + Microsoft ADPCM WAV (fmt tags 0x11/0x02,
-  kernels/adpcm.py — block/channel lanes numpy-lockstep) and LOSSLESS
-  FLAC sample decode (kernels/flac.py — bit-exact, every subframe
-  type, stereo decorrelation, per-frame CRCs); container METADATA for
-  MP4 (ISO-BMFF box walk: per-track codec/dims/channels/sample-rate/
-  duration), Ogg (CRC-checked pages, Vorbis/Opus ident headers), FLAC
-  (STREAMINFO block), MP3 (MPEG-1/2 Layer III frame-header walk:
-  exact duration, ID3v2/v1 skipped) and AVI (avih/strh/strf walk) via
-  ``container_tracks`` / ``media_containers``. Everything past that —
-  FRAME decode of video beyond animated GIF + MJPG/DIB AVI, SAMPLE
-  decode of perceptual audio (MP3/AAC/Vorbis/Opus frames),
+* ``deterministic_fake=False``: REAL decode from the public specs. Every
+  entry point (``decode_real``, ``features_real``, ``stats_real``,
+  ``resize_real``, ``frames_real``, ``container_tracks``) routes through
+  the same pieces:
+
+  - ``_sniff``: one ordered magic-prefix table (PNG, JPEG, WAV, AVI,
+    BMP, TIFF, GIF, FLAC, MP4, Ogg), then the MP3 frame-sync test last,
+    because it shares JPEG's 0xFF lead byte.
+  - one content decode per format. ``_raster`` turns PNG (zlib inflate
+    + scanline unfilter, every IHDR shape incl. Adam7, palette and
+    sub-byte depths), JPEG (kernels/jpeg.py: sequential, progressive,
+    lossless, 12-bit, CMYK), GIF (kernels/gif.py: animation composited
+    with transparency and disposal), AVI (kernels/avi.py: MJPG or
+    uncompressed DIB streams), BMP and baseline TIFF (kernels/rasters.py)
+    into (H, W, C) frames plus the format's full scale. ``_audio`` turns
+    WAV (PCM through stdlib ``wave``, G.711 mu-law/A-law via the ITU-T
+    tables, IMA/Microsoft ADPCM via kernels/adpcm.py) and lossless FLAC
+    (kernels/flac.py) into integer samples plus a midpoint and
+    half-range; a PCM WAV also keeps its raw frame bytes, at any sample
+    width.
+  - ``_stage``: the one ``mapInPandas`` body of the six stages.
+
+  ``decode_real`` reads headers only for PNG, JPEG, PCM WAV, GIF and AVI
+  (the WAV/FLAC schema mapping: width = frames, height = sample rate;
+  GIF/AVI: the channels slot carries the frame count). Container
+  METADATA for MP4 (ISO-BMFF box walk), Ogg (CRC-checked pages,
+  Vorbis/Opus ident headers), FLAC (STREAMINFO), MP3 (Layer III
+  frame-header walk) and AVI comes from ``container_tracks`` /
+  ``media_containers``. Everything past that — frame decode of other
+  video, sample decode of perceptual audio (MP3/AAC/Vorbis/Opus),
   arithmetic-coded JPEG — needs a full codec (Pillow/ffmpeg/pyav) and
-  raises the one declared NotImplementedError.
+  raises the one declared NotImplementedError (``_declared``).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import io
 import struct
+import wave
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..kernels import adpcm, avi, flac, gif, jpeg, rasters
 
 DECODE_SCHEMA = (
     "url string, media_kind string, n_bytes long, width int, height int, "
@@ -70,6 +70,62 @@ FRAME_SCHEMA = "url string, frame_idx int, frame_sha string"
 RESIZE_SCHEMA = "url string, out_w int, out_h int, resized_sha string"
 
 
+def _declared(fn):
+    """The declared-exception contract of every real-media entry point:
+    a malformed or unsupported payload raises NotImplementedError, never
+    an undeclared struct.error / wave.Error / IndexError that would kill
+    a Spark task untyped."""
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        try:
+            return fn(*args, **kwargs)
+        except NotImplementedError:
+            raise
+        except Exception as exc:  # noqa: BLE001 — truncated/corrupt payload
+            raise NotImplementedError(f"malformed media payload: {exc}") from exc
+
+    return wrapper
+
+
+# (kind, ((offset, magic), ...)) in match order: the first row whose every
+# test holds names the payload
+_MAGIC = (
+    ("png", ((0, b"\x89PNG\r\n\x1a\n"),)),
+    ("jpeg", ((0, b"\xff\xd8\xff"),)),
+    ("wav", ((0, b"RIFF"), (8, b"WAVE"))),
+    ("avi", ((0, b"RIFF"), (8, b"AVI "))),
+    ("bmp", ((0, b"BM"),)),
+    ("tiff", ((0, b"II*\x00"),)),
+    ("tiff", ((0, b"MM\x00*"),)),
+    ("gif", ((0, b"GIF87a"),)),
+    ("gif", ((0, b"GIF89a"),)),
+    ("flac", ((0, b"fLaC"),)),
+    ("mp4", ((4, b"ftyp"),)),
+    ("ogg", ((0, b"OggS"),)),
+)
+_RASTERS = frozenset(("png", "jpeg", "gif", "avi", "bmp", "tiff"))
+_AUDIO = frozenset(("wav", "flac"))
+
+
+def _sniff(data: bytes) -> str | None:
+    """The one format sniff: the first ``_MAGIC`` row that matches, else
+    MP3 — an ID3v2 tag, or a frame sync whose version/layer/bitrate/rate
+    fields are all valid Layer III (so random binary and JPEG's 0xFFD8
+    don't land there) — else None."""
+    for kind, tests in _MAGIC:
+        if all(data[o : o + len(m)] == m for o, m in tests):
+            return kind
+    if data[:3] == b"ID3":
+        return "mp3"
+    if len(data) < 4 or data[0] != 0xFF or (data[1] & 0xE0) != 0xE0:
+        return None
+    ver, layer = (data[1] >> 3) & 3, (data[1] >> 1) & 3
+    if ver in (2, 3) and layer == 1 and (data[2] >> 4) not in (0, 15) and ((data[2] >> 2) & 3) != 3:
+        return "mp3"
+    return None
+
+
 # PNG color type -> channel count (PNG spec, IHDR)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 # JPEG SOF markers that carry frame dimensions (not DHT/DAC/RST/...)
@@ -78,23 +134,24 @@ _JPEG_SOF = frozenset(
 )
 
 
-def _decode_png(data: bytes) -> tuple[str, int, int, int]:
+def _png_header(data: bytes) -> tuple[int, int, int]:
+    """IHDR -> (width, height, channels)."""
     if len(data) < 26 or data[12:16] != b"IHDR":
         raise NotImplementedError("malformed PNG: no IHDR at canonical offset")
     w, h = struct.unpack(">II", data[16:24])
     # IHDR fields are unsigned 32-bit but the PNG spec caps dims at
     # 2^31-1; a malformed header past that would overflow the int32
-    # decode columns — declared NotImplementedError, not a task-killing
-    # OverflowError. Zero-sized images are likewise malformed.
+    # decode columns. Zero-sized images are likewise malformed.
     if not (0 < w < 2**31 and 0 < h < 2**31):
         raise NotImplementedError(f"malformed PNG: dims {w}x{h} outside (0, 2^31)")
     color_type = data[25]
     if color_type not in _PNG_CHANNELS:
         raise NotImplementedError(f"PNG color type {color_type} unsupported")
-    return "png", w, h, _PNG_CHANNELS[color_type]
+    return w, h, _PNG_CHANNELS[color_type]
 
 
-def _decode_jpeg(data: bytes) -> tuple[str, int, int, int]:
+def _jpeg_header(data: bytes) -> tuple[int, int, int]:
+    """SOF marker scan -> (width, height, components)."""
     pos = 2  # past SOI
     while pos + 4 <= len(data):
         if data[pos] != 0xFF:
@@ -111,20 +168,22 @@ def _decode_jpeg(data: bytes) -> tuple[str, int, int, int]:
             if pos + 10 > len(data):  # truncated mid-SOF
                 break
             h, w = struct.unpack(">HH", data[pos + 5 : pos + 9])
-            n_comp = data[pos + 9]
-            return "jpeg", w, h, n_comp
+            return w, h, data[pos + 9]
         pos += 2 + seg_len
     raise NotImplementedError("malformed JPEG: no SOF marker found")
 
 
-def _wav_chunks(data: bytes) -> tuple[int, int, int, int, bytes]:
-    """RIFF/WAVE chunk walk: (audio_format, n_channels, sample_rate,
-    bits_per_sample, data_bytes). Stdlib ``wave`` refuses every fmt tag
-    but 1 (PCM), so the G.711 path (tags 7 mu-law / 6 A-law) parses the
-    container directly per the RIFF spec (word-aligned chunks)."""
-    if not (data[:4] == b"RIFF" and data[8:12] == b"WAVE"):
-        raise NotImplementedError("malformed WAV payload: bad RIFF header")
-    pos, fmt, pcm = 12, None, None
+_G711 = (6, 7)  # WAVE fmt tags: A-law, mu-law
+_ADPCM = (0x11, 0x02)  # WAVE fmt tags: IMA, Microsoft
+
+
+def _wav_chunks(data: bytes) -> tuple[int, int, int, int, int | None, bytes]:
+    """RIFF/WAVE chunk walk: (format tag, n_channels, sample_rate,
+    nBlockAlign, ``fact`` frame count or None, data bytes). Stdlib
+    ``wave`` refuses every fmt tag but 1 (PCM), so G.711 and ADPCM read
+    the container here, per the RIFF spec (word-aligned chunks); the
+    ``fact`` count trims an ADPCM stream's final-block padding."""
+    pos, fmt, pcm, fact = 12, None, None, None
     while pos + 8 <= len(data):
         tag = data[pos : pos + 4]
         (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
@@ -133,14 +192,15 @@ def _wav_chunks(data: bytes) -> tuple[int, int, int, int, bytes]:
             fmt = body
         elif tag == b"data":
             pcm = body
+        elif tag == b"fact" and len(body) >= 4:
+            (fact,) = struct.unpack("<I", body[:4])
         pos += 8 + ln + (ln & 1)
     if fmt is None or pcm is None or len(fmt) < 16:
         raise NotImplementedError("malformed WAV payload: missing fmt/data chunk")
-    audio_fmt, nch, rate = struct.unpack("<HHI", fmt[0:8])
-    (bits,) = struct.unpack("<H", fmt[14:16])
+    audio_fmt, nch, rate, _, block_align = struct.unpack("<HHIIH", fmt[:14])
     if nch < 1:
         raise NotImplementedError("malformed WAV payload: zero channels")
-    return audio_fmt, nch, rate, bits, pcm
+    return audio_fmt, nch, rate, block_align, fact, pcm
 
 
 def encode_g711_wav(fmt_tag: int, nch: int, rate: int, comp: bytes) -> bytes:
@@ -188,142 +248,72 @@ def _g711_table(audio_fmt: int) -> np.ndarray:
     return t
 
 
-def _wav_adpcm(data: bytes) -> tuple[np.ndarray, int, int]:
-    """ADPCM WAV (fmt tag 0x11 IMA, 0x02 Microsoft) -> (int16 samples
-    (n, nch), rate, nch). Re-walks the RIFF chunks because the decode
-    needs fields the generic walk drops: nBlockAlign and the ``fact``
-    frame count that trims the final block's padding
-    (kernels/adpcm.py)."""
-    from ..kernels import adpcm
-
-    pos, fmt, pcm, fact = 12, None, None, None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
-        if tag == b"fmt ":
-            fmt = body
-        elif tag == b"data":
-            pcm = body
-        elif tag == b"fact" and len(body) >= 4:
-            (fact,) = struct.unpack("<I", body[:4])
-        pos += 8 + ln + (ln & 1)
-    if fmt is None or pcm is None or len(fmt) < 16:
-        raise NotImplementedError("malformed WAV payload: missing fmt/data chunk")
-    audio_fmt, nch, rate = struct.unpack("<HHI", fmt[0:8])
-    (block_align,) = struct.unpack("<H", fmt[12:14])
-    min_hdr = 7 * nch if audio_fmt == 0x02 else 8 * nch
-    if nch < 1 or block_align < min_hdr:
-        raise NotImplementedError("malformed ADPCM WAV: bad block layout")
-    try:
-        if audio_fmt == 0x02:
-            return adpcm.ms_decode_blocks(pcm, block_align, nch, n_frames=fact), rate, nch
-        return adpcm.decode_blocks(pcm, block_align, nch, n_frames=fact), rate, nch
-    except NotImplementedError:
-        raise
-    except Exception as exc:  # noqa: BLE001 — corrupt block layout
-        raise NotImplementedError(f"malformed ADPCM WAV: {exc}") from exc
-
-
-def _decode_wav(data: bytes) -> tuple[str, int, int, int]:
-    audio_fmt, nch, rate, _, pcm = _wav_chunks(data)
+def _wav_header(data: bytes) -> tuple[int, int, int]:
+    """(frames per channel, sample rate, channels): PCM and G.711 from
+    the headers; for ADPCM the decode IS the frame count."""
+    audio_fmt, nch, rate, _, _, pcm = _wav_chunks(data)
     if audio_fmt == 1:
-        import wave
-
         with wave.open(io.BytesIO(data), "rb") as wf:
-            # audio mapping onto the image-shaped schema (documented):
-            # width = frames per channel, height = sample rate
-            return "wav", wf.getnframes(), wf.getframerate(), wf.getnchannels()
-    if audio_fmt in (6, 7):  # G.711: one byte per sample
-        return "wav", len(pcm) // nch, rate, nch
-    if audio_fmt in (0x11, 0x02):  # IMA / Microsoft ADPCM: decode IS the frame count
-        s, rate, nch = _wav_adpcm(data)
-        return "wav", s.shape[0], rate, nch
+            return wf.getnframes(), wf.getframerate(), wf.getnchannels()
+    if audio_fmt in _G711:  # one byte per sample
+        return len(pcm) // nch, rate, nch
+    if audio_fmt in _ADPCM:
+        return _audio_dims("wav", data)
     raise NotImplementedError(f"WAV audio format {audio_fmt}: real codec territory")
 
 
+def _audio_dims(kind: str, data: bytes) -> tuple[int, int, int]:
+    a = _audio(kind, data)
+    return a.samples.shape[0], a.rate, a.samples.shape[1]
+
+
+@_declared
 def decode_real(data: bytes) -> tuple[str, int, int, int]:
-    """Sniff + header-decode one payload via stdlib: (kind, width, height,
-    n_channels). NotImplementedError for formats needing a real codec AND
-    for malformed payloads of the supported formats — one declared
-    exception type, so a corrupt payload can never kill a Spark task with
-    an undeclared struct.error/wave.Error."""
-    try:
-        if data[:8] == b"\x89PNG\r\n\x1a\n":
-            return _decode_png(data)
-        if data[:3] == b"\xff\xd8\xff":
-            return _decode_jpeg(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-            return _decode_wav(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-            from ..kernels import avi
-
-            # video mapping onto the image-shaped schema (mirrors the
-            # GIF convention): width/height are the raster dims, the
-            # channels slot carries the FRAME COUNT
-            w, h, n_frames, _fps = avi.header(data)
-            return "avi", w, h, n_frames
-        if data[:2] == b"BM":
-            from ..kernels import rasters
-
-            px = rasters.decode_bmp(data)
-            return "bmp", px.shape[1], px.shape[0], px.shape[2]
-        if data[:4] in (b"II*\x00", b"MM\x00*"):
-            from ..kernels import rasters
-
-            px = rasters.decode_tiff(data)
-            return "tiff", px.shape[1], px.shape[0], px.shape[2]
-        if data[:6] in (b"GIF87a", b"GIF89a"):
-            from ..kernels import gif
-
-            # animated-format mapping onto the image-shaped schema
-            # (documented, mirrors the WAV overload): width/height are
-            # the logical screen, the channels slot carries the FRAME
-            # COUNT — the pipeline-relevant cardinality of an animation
-            w, h, n_frames = gif.header(data)
-            return "gif", w, h, n_frames
-        if data[:4] == b"fLaC":
-            from ..kernels import flac
-
-            # FLAC gets REAL sample decode (kernels/flac.py) — same
-            # audio mapping as WAV: width = frames, height = rate
-            s, rate = flac.decode_flac(data)
-            return "flac", s.shape[0], rate, s.shape[1]
-        if (
-            (len(data) >= 12 and data[4:8] == b"ftyp")
-            or data[:4] == b"OggS"
-            or _is_mp3(data)
-        ):
-            # container formats: headers carry the filterable metadata
-            # (dims / channels / codec ids) even though frame DECODE
-            # stays declared codec territory — map the first video
-            # track's dims and the first audio track's channel count
-            # onto the image-shaped decode schema
-            kind, tracks = container_tracks(data)
-            vid = next((t for t in tracks if t["kind"] == "video"), None)
-            aud = next((t for t in tracks if t["kind"] == "audio"), None)
-            return (kind, vid["width"] if vid else 0, vid["height"] if vid else 0,
-                    aud["n_channels"] if aud else 0)
-    except NotImplementedError:
-        raise
-    except Exception as exc:  # noqa: BLE001 — truncated/corrupt headers
-        raise NotImplementedError(f"malformed media payload: {exc}") from exc
-    # STUB: full codec call site (Pillow / soundfile / pyav) for formats
-    # the stdlib cannot parse (frame decode of mp4/ogg included)
-    raise NotImplementedError("media codec unavailable in this container for this format")
+    """Sniff + header-decode one payload: (kind, width, height,
+    n_channels). Audio maps onto the image-shaped schema as width =
+    frames per channel, height = sample rate; GIF and AVI as the raster
+    dims with the FRAME COUNT in the channels slot; containers as the
+    first video track's dims and the first audio track's channel count.
+    NotImplementedError for formats needing a real codec and for
+    malformed payloads."""
+    kind = _sniff(data)
+    if kind == "png":
+        dims = _png_header(data)
+    elif kind == "jpeg":
+        dims = _jpeg_header(data)
+    elif kind == "wav":
+        dims = _wav_header(data)
+    elif kind == "gif":
+        dims = gif.header(data)
+    elif kind == "avi":
+        dims = avi.header(data)[:3]
+    elif kind in ("bmp", "tiff"):
+        h, w, c = _raster(kind, data)[0][0].shape
+        dims = w, h, c
+    elif kind == "flac":
+        dims = _audio_dims(kind, data)
+    elif kind in ("mp4", "ogg", "mp3"):
+        # container headers carry the filterable metadata even though
+        # frame DECODE stays declared codec territory
+        _, tracks = container_tracks(data)
+        vid = next((t for t in tracks if t["kind"] == "video"), None)
+        aud = next((t for t in tracks if t["kind"] == "audio"), None)
+        dims = (vid["width"] if vid else 0, vid["height"] if vid else 0,
+                aud["n_channels"] if aud else 0)
+    else:
+        # STUB: full codec call site (Pillow / soundfile / pyav) for
+        # formats the stdlib cannot parse
+        raise NotImplementedError("media codec unavailable in this container for this format")
+    return (kind, *dims)
 
 
-# --- real pixel/sample decode (stdlib + from-scratch codecs) ------------------
+# --- content decode ------------------------------------------------------------
 #
-# Beyond the headers: PNG pixels via zlib-inflate of the IDAT stream +
-# per-scanline unfiltering (PNG spec filters 0-4, EVERY IHDR shape the
-# spec allows), JPEG pixels via the baseline codec in kernels/jpeg.py,
-# WAV PCM samples via wave.readframes (G.711 mu-law/A-law expanded by
-# the spec lookup tables, IMA ADPCM via kernels/adpcm.py). Video frames
-# decode for REAL from animated GIF (kernels/gif.py) and AVI with MJPG
-# or uncompressed DIB streams (kernels/avi.py); video/audio codecs
-# beyond those genuinely need a real codec library and stay behind the
-# declared NotImplementedError.
+# One decode per format. Rasters become a list of (H, W, C) frames (a
+# still image is one frame); audio becomes integer samples. Video frames
+# decode for REAL from animated GIF and AVI with MJPG or uncompressed DIB
+# streams; codecs beyond those need a real codec library and stay behind
+# the declared NotImplementedError.
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass, PNG spec order
@@ -408,8 +398,8 @@ def _png_pixels(data: bytes) -> np.ndarray:
     ancillary chunks (tRNS, gAMA, ...) are ignored."""
     import zlib
 
-    _, w, h, channels = _decode_png(data)  # validates magic + IHDR + dims
-    if len(data) < 29:  # _decode_png needs 26 bytes; interlace sits at 28
+    w, h, channels = _png_header(data)  # validates IHDR + dims
+    if len(data) < 29:  # _png_header needs 26 bytes; interlace sits at 28
         raise NotImplementedError("malformed PNG: IHDR truncated before interlace byte")
     bit_depth, color_type, interlace = data[24], data[25], data[28]
     sub_byte = bit_depth in (1, 2, 4) and color_type in (0, 3)
@@ -522,240 +512,119 @@ def _png_pixels(data: bytes) -> np.ndarray:
         return (b16[..., 0] << 8) | b16[..., 1]
     return out.reshape(h, w, bpp)
 
-
-def _wav_samples(data: bytes) -> tuple[np.ndarray, int]:
-    """Decode WAV audio to a float64 (n_frames, n_channels) array in
-    [-1, 1] plus the sample rate. 16-bit and 8-bit PCM (stdlib ``wave``
-    can't parse float/24-bit WAV anyway) plus G.711 mu-law/A-law, which
-    expand to linear int16 via the spec lookup table."""
-    audio_fmt, nch, fr, _, pcm = _wav_chunks(data)
-    if audio_fmt in (6, 7):
-        lin = _g711_table(audio_fmt)[np.frombuffer(pcm, dtype=np.uint8)]
-        s = lin.astype(np.float64) / 32768.0
-        return s[: (len(s) // nch) * nch].reshape(-1, nch), fr
-    if audio_fmt in (0x11, 0x02):  # IMA / MS ADPCM -> linear int16
-        ints, fr, _ = _wav_adpcm(data)
-        return ints.astype(np.float64) / 32768.0, fr
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(data), "rb") as wf:
-            nch, sw, fr = wf.getnchannels(), wf.getsampwidth(), wf.getframerate()
-            raw = wf.readframes(wf.getnframes())
-    except Exception as exc:  # noqa: BLE001
-        raise NotImplementedError(f"malformed WAV payload: {exc}") from exc
-    if sw not in (1, 2):
-        raise NotImplementedError(f"WAV sample width {sw}: real codec territory")
-    if len(raw) % sw:
-        raise NotImplementedError("malformed WAV payload: truncated sample")
-    if sw == 2:
-        s = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    else:  # 8-bit WAV PCM is unsigned, midpoint 128
-        s = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    if nch <= 0 or len(s) % nch:
-        raise NotImplementedError(
-            "malformed WAV payload: data chunk is not a whole number of frames"
-        )
-    return s.reshape(-1, nch), fr
+def _raster(kind: str, data: bytes) -> tuple[list[np.ndarray], int, object]:
+    """(frames, full scale, timing) of a raster payload. The full scale
+    maps samples to [0, 1]; timing is the GIF frame delays (centiseconds)
+    or the AVI frame rate, None for a still image."""
+    if kind == "png":
+        px = _png_pixels(data)
+        return [px], 65535 if px.dtype == np.uint16 else 255, None
+    if kind == "jpeg":
+        px = jpeg.decode_baseline(data)
+        return [px], (1 << jpeg.frame_info(data)[1]) - 1, None
+    if kind == "gif":
+        # the PRESENTED frames: composited logical screens, not raw sub-rects
+        frames, delays = gif.compose(data)
+        return frames, 255, delays
+    if kind == "avi":
+        frames, fps = avi.decode_avi(data)
+        return frames, 255, fps
+    return [rasters.decode_bmp(data) if kind == "bmp" else rasters.decode_tiff(data)], 255, None
 
 
+class _Audio(NamedTuple):
+    """One decoded audio payload. ``samples`` (n, ch) integers map to
+    [-1, 1] as (s - mid) / half; None for a PCM width other than 8/16 bits
+    or bytes that are not whole frames. ``fmt`` is the WAV format tag (1
+    for PCM read by ``wave``; 0 for FLAC). ``wire`` holds the stored frames
+    where one frame is a fixed run of bytes — (bytes, frame count,
+    channels, bytes per sample) for PCM and G.711 — else None."""
+
+    samples: np.ndarray | None
+    rate: int
+    mid: int
+    half: int
+    fmt: int
+    wire: tuple[bytes, int, int, int] | None
+
+
+def _audio(kind: str, data: bytes) -> _Audio:
+    if kind == "flac":
+        s, rate = flac.decode_flac(data)
+        return _Audio(s, rate, 0, 32768, 0, None)
+    audio_fmt, nch, rate, block_align, fact, pcm = _wav_chunks(data)
+    if audio_fmt in _G711:  # one byte per sample, expanded to linear int16
+        n = len(pcm) // nch
+        codes = pcm[: n * nch]
+        lin = _g711_table(audio_fmt)[np.frombuffer(codes, dtype=np.uint8)].reshape(n, nch)
+        return _Audio(lin, rate, 0, 32768, audio_fmt, (codes, n, nch, 1))
+    if audio_fmt in _ADPCM:
+        if block_align < (7 if audio_fmt == 0x02 else 8) * nch:
+            raise NotImplementedError("malformed ADPCM WAV: bad block layout")
+        decode = adpcm.ms_decode_blocks if audio_fmt == 0x02 else adpcm.decode_blocks
+        return _Audio(decode(pcm, block_align, nch, n_frames=fact), rate, 0, 32768, audio_fmt, None)
+    with wave.open(io.BytesIO(data), "rb") as wf:  # wave refuses every tag but PCM
+        nch, sw, rate, n = wf.getnchannels(), wf.getsampwidth(), wf.getframerate(), wf.getnframes()
+        raw = wf.readframes(n)
+    samples = None
+    if sw in (1, 2) and len(raw) % (sw * nch) == 0:
+        samples = np.frombuffer(raw, dtype="<i2" if sw == 2 else np.uint8).reshape(-1, nch)
+    # 8-bit WAV PCM is unsigned, midpoint 128
+    return _Audio(samples, rate, *((128, 128) if sw == 1 else (0, 32768)), 1, (raw, n, nch, sw))
+
+
+def _channels(data: bytes):
+    """(kind, values, to_unit) shared by the stats and feature encoders:
+    ``values`` is (n, C) integers — the first presented frame's pixels
+    of a raster, the samples of audio — and ``to_unit`` maps one
+    channel's integers to [0, 1] floats (audio: [-1, 1] mapped to
+    [0, 1])."""
+    kind = _sniff(data)
+    if kind in _RASTERS:
+        frames, scale, _ = _raster(kind, data)
+        px = frames[0]
+        return kind, px.reshape(-1, px.shape[2]), lambda v: v.astype(np.float64) / scale
+    if kind in _AUDIO:
+        a = _audio(kind, data)
+        if a.samples is None:
+            raise NotImplementedError("WAV PCM: only whole 8/16-bit frames decode without a real codec")
+        return kind, a.samples, lambda v: ((v.astype(np.float64) - a.mid) / a.half + 1.0) / 2.0
+    raise NotImplementedError("only PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC decode without a real codec")
+
+
+@_declared
 def features_real(data: bytes, dim: int) -> np.ndarray:
     """Fixed-``dim`` float32 feature vector from REAL decoded content:
     per-channel (mean, std, min, max) in channel-major order, zero-padded
-    / truncated to ``dim``. PNG/JPEG stats are over pixels scaled to
-    [0, 1] (JPEG via the from-scratch baseline codec, kernels/jpeg.py);
-    WAV stats are over PCM samples with mean/min/max mapped from [-1, 1]
-    to [0, 1] (std is scale-only, kept as-is; G.711 expands to linear
-    int16 first). Formats past that (video, compressed audio beyond
-    G.711, arithmetic-coded JPEG) need a real codec -> declared
-    NotImplementedError."""
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        px = _png_pixels(data)
-        px = px.astype(np.float64) / (65535.0 if px.dtype == np.uint16 else 255.0)
-        chans = [px[:, :, c].ravel() for c in range(px.shape[2])]
-    elif data[:3] == b"\xff\xd8\xff":
-        from ..kernels import jpeg
-
-        raw = jpeg.decode_baseline(data)
-        _, prec = jpeg.frame_info(data)
-        px = raw.astype(np.float64) / float((1 << prec) - 1)
-        chans = [px[:, :, c].ravel() for c in range(px.shape[2])]
-    elif data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        s, _ = _wav_samples(data)
-        chans = [(s[:, c] + 1.0) / 2.0 for c in range(s.shape[1])]
-    elif data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..kernels import gif
-
-        px = gif.compose(data)[0][0].astype(np.float64) / 255.0
-        chans = [px[:, :, c].ravel() for c in range(3)]
-    elif data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..kernels import avi
-
-        px = avi.decode_avi(data)[0][0].astype(np.float64) / 255.0
-        chans = [px[:, :, c].ravel() for c in range(3)]
-    elif data[:4] == b"fLaC":
-        from ..kernels import flac
-
-        s, _ = flac.decode_flac(data)
-        sf = s.astype(np.float64) / 32768.0
-        chans = [(sf[:, c] + 1.0) / 2.0 for c in range(sf.shape[1])]
-    elif data[:2] == b"BM" or data[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..kernels import rasters
-
-        raw = rasters.decode_bmp(data) if data[:2] == b"BM" else rasters.decode_tiff(data)
-        px = raw.astype(np.float64) / 255.0
-        chans = [px[:, :, c].ravel() for c in range(px.shape[2])]
-    else:
-        raise NotImplementedError("feature encoder: only PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC decode without a real codec")
+    / truncated to ``dim``. Raster stats are over the first presented
+    frame's pixels scaled to [0, 1]; audio stats over samples with
+    [-1, 1] mapped to [0, 1]."""
+    _, values, to_unit = _channels(data)
     stats: list[float] = []
-    for ch in chans:
-        if ch.size:
-            stats += [float(ch.mean()), float(ch.std()), float(ch.min()), float(ch.max())]
-        else:
-            stats += [0.0, 0.0, 0.0, 0.0]
+    for c in range(values.shape[1]):
+        ch = to_unit(values[:, c])
+        stats += [float(ch.mean()), float(ch.std()), float(ch.min()), float(ch.max())] if ch.size else [0.0] * 4
     vec = np.zeros(dim, dtype=np.float32)
     vec[: min(dim, len(stats))] = np.asarray(stats[:dim], dtype=np.float32)
     return vec
 
 
-def _wav_ints(data: bytes) -> np.ndarray:
-    """WAV PCM as RAW integer samples, (n_frames, n_channels): int16 for
-    16-bit, uint8 (unsigned, midpoint 128) for 8-bit — the integer-exact
-    twin of ``_wav_samples`` used by the stats stage so the oracle
-    comparison never touches floats. G.711 payloads yield the expanded
-    linear int16 samples — the decode IS the expansion."""
-    audio_fmt, nch, _, _, pcm = _wav_chunks(data)
-    if audio_fmt in (6, 7):
-        lin = _g711_table(audio_fmt)[np.frombuffer(pcm, dtype=np.uint8)]
-        return lin[: (len(lin) // nch) * nch].reshape(-1, nch)
-    if audio_fmt in (0x11, 0x02):  # IMA / MS ADPCM: the decode IS the expansion
-        return _wav_adpcm(data)[0]
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(data), "rb") as wf:
-            nch, sw = wf.getnchannels(), wf.getsampwidth()
-            raw = wf.readframes(wf.getnframes())
-    except Exception as exc:  # noqa: BLE001
-        raise NotImplementedError(f"malformed WAV payload: {exc}") from exc
-    if sw not in (1, 2):
-        raise NotImplementedError(f"WAV sample width {sw}: real codec territory")
-    if len(raw) % sw:
-        raise NotImplementedError("malformed WAV payload: truncated sample")
-    arr = np.frombuffer(raw, dtype="<i2" if sw == 2 else np.uint8)
-    if nch <= 0 or len(arr) % nch:
-        raise NotImplementedError(
-            "malformed WAV payload: data chunk is not a whole number of frames"
-        )
-    return arr.reshape(-1, nch)
-
-
+@_declared
 def stats_real(data: bytes) -> tuple[str, list[tuple[int, int, int, int]]]:
-    """Per-channel INTEGER statistics (n, sum, min, max) from the real
-    decode — exact arithmetic end to end, so the KAT oracle comparison
-    is immune to float summation-order effects. PNG pixels at native
-    depth (palette expanded to RGB, sub-byte grayscale scaled to 8-bit),
-    JPEG uint8 pixels via kernels/jpeg.py, WAV raw PCM integers."""
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        px = _png_pixels(data)
-        kind = "png"
-    elif data[:3] == b"\xff\xd8\xff":
-        from ..kernels import jpeg
-
-        px = jpeg.decode_baseline(data)
-        kind = "jpeg"
-    elif data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        s = _wav_ints(data)
-        if not s.shape[0]:
-            # zero-sample audio: per-channel min/max are undefined, so
-            # the stats stage declares the payload malformed
-            raise NotImplementedError("malformed WAV payload: no samples to aggregate")
-        return "wav", [
-            (s.shape[0], int(s[:, c].sum()), int(s[:, c].min()), int(s[:, c].max()))
-            for c in range(s.shape[1])
-        ]
-    elif data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..kernels import gif
-
-        # stats over the FIRST PRESENTED frame (the composited logical
-        # screen, not the raw sub-rect): what a thumbnailer sees
-        px = gif.compose(data)[0][0]
-        kind = "gif"
-    elif data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..kernels import avi
-
-        # same first-presented-frame convention as GIF
-        px = avi.decode_avi(data)[0][0]
-        kind = "avi"
-    elif data[:4] == b"fLaC":
-        from ..kernels import flac
-
-        s, _ = flac.decode_flac(data)
-        if not s.shape[0]:
-            raise NotImplementedError("malformed FLAC payload: no samples to aggregate")
-        return "flac", [
-            (s.shape[0], int(s[:, c].sum()), int(s[:, c].min()), int(s[:, c].max()))
-            for c in range(s.shape[1])
-        ]
-    elif data[:2] == b"BM":
-        from ..kernels import rasters
-
-        px = rasters.decode_bmp(data)
-        kind = "bmp"
-    elif data[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..kernels import rasters
-
-        px = rasters.decode_tiff(data)
-        kind = "tiff"
-    else:
-        raise NotImplementedError("stats: only PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC decode without a real codec")
-    arr = px.astype(np.int64)
+    """Per-channel INTEGER statistics (n, sum, min, max) of the same
+    values — exact arithmetic end to end, so the KAT oracle comparison
+    is immune to float summation-order effects. Pixels at native depth
+    (PNG palette expanded to RGB, sub-byte grayscale scaled to 8-bit),
+    raw PCM / expanded G.711 / decoded ADPCM and FLAC integers."""
+    kind, values, _ = _channels(data)
+    if not values.shape[0]:
+        # zero pixels or samples: per-channel min/max are undefined
+        raise NotImplementedError(f"malformed {kind} payload: no values to aggregate")
+    v = values.astype(np.int64)
     return kind, [
-        (
-            arr.shape[0] * arr.shape[1],
-            int(arr[:, :, c].sum()),
-            int(arr[:, :, c].min()),
-            int(arr[:, :, c].max()),
-        )
-        for c in range(arr.shape[2])
+        (v.shape[0], int(v[:, c].sum()), int(v[:, c].min()), int(v[:, c].max()))
+        for c in range(v.shape[1])
     ]
-
-
-def media_stats(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """Stats stage over REAL decoded content: one output row per decoded
-    channel (1->N fan-out like ``sample_frames``), integer-exact columns
-    so the twin-derived KAT oracle compares without float tolerance.
-    Decode is per-payload by nature (variable-size compressed bytes);
-    the batch assembly around it is columnar."""
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            urls, kinds, chans, ns, sums, mins, maxs = [], [], [], [], [], [], []
-            for url, p in zip(pdf["url"], pdf[binary_col]):
-                kind, stats = stats_real(bytes(p) if p is not None else b"")
-                for c, (n, s, mn, mx) in enumerate(stats):
-                    urls.append(url)
-                    kinds.append(kind)
-                    chans.append(c)
-                    ns.append(n)
-                    sums.append(s)
-                    mins.append(mn)
-                    maxs.append(mx)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "media_kind": kinds,
-                    "channel": np.asarray(chans, dtype=np.int32),
-                    "n_values": np.asarray(ns, dtype=np.int64),
-                    "v_sum": np.asarray(sums, dtype=np.int64),
-                    "v_min": np.asarray(mins, dtype=np.int64),
-                    "v_max": np.asarray(maxs, dtype=np.int64),
-                }
-            )
-
-    return df.select("url", binary_col).mapInPandas(run, schema=STATS_SCHEMA)
 
 
 def encode_png(px: np.ndarray) -> bytes:
@@ -810,341 +679,238 @@ def _jpeg_adobe_transform(data: bytes) -> int:
         pos += 2 + ln
     return 0
 
+def _nn(t: int, n: int) -> np.ndarray:
+    """Nearest-neighbour (floor) sampling: output i of ``t`` reads input
+    i*n//t of ``n`` — deterministic and endpoint-safe for any dims."""
+    return (np.arange(t, dtype=np.int64) * n) // max(t, 1)
 
+
+def _reencode_jpeg(data: bytes, frames: list[np.ndarray], _timing, _tw: int, _th: int) -> bytes:
+    """Re-encode in the source's coding process and precision."""
+    px = frames[0]
+    marker, prec = jpeg.frame_info(data)
+    if marker == 0xC3:  # lossless source: re-encode losslessly
+        return jpeg.encode_lossless(px, precision=prec)
+    if prec == 12:  # 12-bit DCT source re-encodes at 12 bits
+        return jpeg.encode_baseline(px, precision=12)
+    if px.shape[2] == 4:
+        # re-encode CMYK with the SOURCE's Adobe transform (APP14 marker
+        # scan; a 4-comp file without one re-encodes as transform-0
+        # inverted CMYK — ink values round-trip either way)
+        return jpeg.encode_baseline(px, adobe_transform=_jpeg_adobe_transform(data))
+    return jpeg.encode_baseline(px)
+
+
+def _reencode_tiff(data: bytes, frames: list[np.ndarray], _timing, _tw: int, _th: int) -> bytes:
+    """Re-encode in the byte order of the source header ("MM" big-endian)."""
+    return rasters.encode_tiff(frames[0], big_endian=data[:2] == b"MM")
+
+
+# kind -> (source payload, resampled frames, timing, tw, th) -> payload
+_REENCODE = {
+    "png": lambda data, frames, timing, tw, th: encode_png(frames[0]),
+    "jpeg": _reencode_jpeg,
+    "bmp": lambda data, frames, timing, tw, th: rasters.encode_bmp(frames[0]),
+    "tiff": _reencode_tiff,
+    # every PRESENTED frame as a full-canvas frame, delays kept; disposal
+    # collapses to "keep" since compositing already happened (a
+    # presentation-equivalent animation, not a byte-level one)
+    "gif": lambda data, frames, delays, tw, th: gif.encode_gif(
+        [{"pixels": f, "delay_cs": d, "disposal": 1} for f, d in zip(frames, delays)], tw, th
+    ),
+    # the SOURCE stream codec at the source fps: DIB exactly, MJPG
+    # through the baseline encoder
+    "avi": lambda data, frames, fps, tw, th: avi.encode_avi(
+        frames, fps or 1, codec="MJPG" if avi.stream_codec(data) == "MJPG" else "DIB"
+    ),
+}
+
+
+@_declared
 def resize_real(data: bytes, tw: int, th: int) -> bytes:
     """Nearest-neighbor resample, returned RE-ENCODED in the source
     format (the resize stage's output is a payload, not pixels):
 
-    * PNG -> (tw, th) pixels; source pixel for output (x, y) is
-      (x*w//tw, y*h//th) — the floor-sampling convention, deterministic
-      and endpoint-safe for any dims.
-    * WAV -> the audio analogue of the decode-stage schema mapping
-      (width = frames, height = sample rate): nearest-neighbor frame
-      resample to ``tw`` frames per channel, re-encoded at sample rate
-      ``th`` with the original channel/width layout.
+    * rasters -> every frame at (tw, th) pixels; source pixel for output
+      (x, y) is (x*w//tw, y*h//th).
+    * audio -> the analogue of the decode-stage schema mapping (width =
+      frames, height = sample rate): ``tw`` frames per channel at sample
+      rate ``th``. PCM (any sample width) and G.711 pick stored frames,
+      so they re-encode losslessly; ADPCM re-encodes in the source
+      flavour (lossy, deterministic encoder) and FLAC losslessly.
 
     Other formats need a real codec -> NotImplementedError."""
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        px = _png_pixels(data)
-        h, w, _ = px.shape
-        yi = (np.arange(th, dtype=np.int64) * h) // th
-        xi = (np.arange(tw, dtype=np.int64) * w) // tw
-        return encode_png(np.ascontiguousarray(px[yi][:, xi]))
-    if data[:3] == b"\xff\xd8\xff":
-        from ..kernels import jpeg
-
-        px = jpeg.decode_baseline(data)
-        h, w, nc = px.shape
-        yi = (np.arange(th, dtype=np.int64) * h) // th
-        xi = (np.arange(tw, dtype=np.int64) * w) // tw
-        resized = np.ascontiguousarray(px[yi][:, xi])
-        marker, prec = jpeg.frame_info(data)
-        if marker == 0xC3:  # lossless source: re-encode losslessly
-            return jpeg.encode_lossless(resized, precision=prec)
-        if prec == 12:  # 12-bit DCT source re-encodes at 12 bits
-            return jpeg.encode_baseline(resized, precision=12)
-        if nc == 4:
-            # re-encode CMYK with the SOURCE's Adobe transform (APP14
-            # marker scan; a 4-comp file without one re-encodes as
-            # transform-0 inverted CMYK — ink values round-trip either way)
-            return jpeg.encode_baseline(resized, adobe_transform=_jpeg_adobe_transform(data))
-        return jpeg.encode_baseline(resized)
-    if data[:2] == b"BM" or data[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..kernels import rasters
-
-        is_bmp = data[:2] == b"BM"
-        px = rasters.decode_bmp(data) if is_bmp else rasters.decode_tiff(data)
-        h, w, _ = px.shape
-        yi = (np.arange(th, dtype=np.int64) * h) // th
-        xi = (np.arange(tw, dtype=np.int64) * w) // tw
-        resized = np.ascontiguousarray(px[yi][:, xi])
-        if is_bmp:
-            return rasters.encode_bmp(resized)
-        return rasters.encode_tiff(resized, big_endian=data[:2] == b"MM")
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..kernels import gif
-
-        # every PRESENTED frame resampled to (tw, th) and re-encoded as
-        # a full-canvas frame (delays kept, disposal collapses to
-        # "keep": compositing already happened, so the re-encode is a
-        # presentation-equivalent animation, not a byte-level one)
-        frames, delays = gif.compose(data)
+    kind = _sniff(data)
+    if kind in _RASTERS:
+        frames, _, timing = _raster(kind, data)
         h, w, _ = frames[0].shape
-        yi = (np.arange(th, dtype=np.int64) * h) // th
-        xi = (np.arange(tw, dtype=np.int64) * w) // tw
-        specs = [
-            {"pixels": np.ascontiguousarray(f[yi][:, xi]), "delay_cs": d, "disposal": 1}
-            for f, d in zip(frames, delays)
-        ]
-        return gif.encode_gif(specs, tw, th)
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..kernels import avi
-
-        # every frame resampled to (tw, th) and re-encoded in the
-        # SOURCE stream codec at the source fps: DIB exactly, MJPG
-        # through the baseline encoder (presentation-equivalent, the
-        # GIF re-encode convention)
-        frames, fps = avi.decode_avi(data)
-        h, w, _ = frames[0].shape
-        yi = (np.arange(th, dtype=np.int64) * h) // th
-        xi = (np.arange(tw, dtype=np.int64) * w) // tw
+        yi, xi = _nn(th, h), _nn(tw, w)
         resized = [np.ascontiguousarray(f[yi][:, xi]) for f in frames]
-        mjpg = avi.stream_codec(data) == "MJPG"
-        return avi.encode_avi(resized, fps or 1, codec="MJPG" if mjpg else "DIB")
-    if data[:4] == b"fLaC":
-        from ..kernels import flac
-
-        # decode, nearest-neighbor frame resample, re-encode FLAC at
-        # rate ``th`` (verbatim subframes: deterministic and lossless)
-        s, _ = flac.decode_flac(data)
-        n = s.shape[0]
-        idx = (np.arange(tw, dtype=np.int64) * n) // max(tw, 1) if n else np.zeros(0, np.int64)
-        return flac.encode_flac(s[idx].astype(np.int16), th)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        import wave
-
-        audio_fmt, g_nch, _, _, g_pcm = _wav_chunks(data)
-        if audio_fmt in (0x11, 0x02):
-            from ..kernels import adpcm
-
-            # decode to linear PCM, nearest-neighbor frame resample,
-            # re-encode in the SOURCE ADPCM flavor at rate ``th``
-            # (lossy like any ADPCM re-encode; deterministic encoder)
-            ints, _, nch = _wav_adpcm(data)
-            n = ints.shape[0]
-            idx = (np.arange(tw, dtype=np.int64) * n) // max(tw, 1) if n else np.zeros(0, np.int64)
-            if audio_fmt == 0x02:
-                return adpcm.encode_ms_wav(ints[idx], th)
-            return adpcm.encode_ima_wav(ints[idx], th)
-        if audio_fmt in (6, 7):
-            # G.711 is one byte per sample, so nearest-neighbor frame
-            # selection works directly on the compressed stream — the
-            # resample re-encodes losslessly in the source format
-            n = len(g_pcm) // g_nch
-            frames = np.frombuffer(g_pcm[: n * g_nch], dtype=np.uint8).reshape(n, g_nch)
-            idx = (np.arange(tw, dtype=np.int64) * n) // max(tw, 1) if n else np.zeros(0, np.int64)
-            return encode_g711_wav(audio_fmt, g_nch, th, frames[idx].tobytes() if n else b"")
-        try:
-            with wave.open(io.BytesIO(data), "rb") as wf:
-                nch, sw, n = wf.getnchannels(), wf.getsampwidth(), wf.getnframes()
-                raw = wf.readframes(n)
-            fb = nch * sw
-            frames = np.frombuffer(raw, dtype=np.uint8).reshape(n, fb) if n else np.zeros((0, fb), np.uint8)
-            idx = (np.arange(tw, dtype=np.int64) * n) // max(tw, 1) if n else np.zeros(0, np.int64)
-            out = io.BytesIO()
-            with wave.open(out, "wb") as wo:
-                wo.setnchannels(nch)
-                wo.setsampwidth(sw)
-                wo.setframerate(th)
-                wo.writeframes(frames[idx].tobytes() if n else b"")
-            return out.getvalue()
-        except Exception as exc:  # noqa: BLE001
-            raise NotImplementedError(f"malformed WAV payload: {exc}") from exc
-    raise NotImplementedError("resize: only PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC decode without a real codec")
+        return _REENCODE[kind](data, resized, timing, tw, th)
+    if kind not in _AUDIO:
+        raise NotImplementedError("resize: only PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC decode without a real codec")
+    a = _audio(kind, data)
+    n = a.samples.shape[0] if a.wire is None else a.wire[1]
+    idx = _nn(tw, n) if n else np.zeros(0, np.int64)  # no frames resample to none
+    if a.wire is None:  # ADPCM / FLAC: resample the decoded samples
+        picked = a.samples[idx]
+        if kind == "flac":  # verbatim subframes: deterministic and lossless
+            return flac.encode_flac(picked.astype(np.int16), th)
+        return (adpcm.encode_ms_wav if a.fmt == 0x02 else adpcm.encode_ima_wav)(picked, th)
+    raw, n, nch, width = a.wire
+    picked = np.frombuffer(raw, dtype=np.uint8).reshape(n, nch * width)[idx].tobytes()
+    if a.fmt in _G711:
+        return encode_g711_wav(a.fmt, nch, th, picked)
+    out = io.BytesIO()
+    with wave.open(out, "wb") as wo:
+        wo.setnchannels(nch)
+        wo.setsampwidth(width)
+        wo.setframerate(th)
+        wo.writeframes(picked)
+    return out.getvalue()
 
 
+def _sha16(b: bytes) -> str:
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+@_declared
 def frames_real(data: bytes, n_frames: int) -> list[str]:
-    """``n_frames`` contiguous fixed-stride PCM windows of a WAV payload
-    (split on frame boundaries: window i covers sample frames
-    [i*n/n_frames, (i+1)*n/n_frames)), each identified by the first 16
-    hex chars of the sha256 of its raw PCM bytes — the audio analogue of
-    video frame sampling. G.711 payloads hash windows of the DECODED
-    little-endian int16 stream (decode-then-window: the window id names
-    sample content, not wire bytes).
+    """``n_frames`` samples of a video or audio payload, each identified
+    by the first 16 hex chars of the sha256 of its bytes.
 
-    GIF payloads get GENUINE video-style frame extraction: sample i is
-    the COMPOSITED logical-screen raster of animation frame
-    i*F//n_frames (kernels/gif.py — transparency + disposal applied),
-    hashed over its raw (H, W, 3) RGB bytes. Video beyond animated GIF
-    needs a real codec."""
-    import wave
-
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..kernels import gif
-
-        frames, _ = gif.compose(data)
-        return [
-            hashlib.sha256(frames[i * len(frames) // n_frames].tobytes()).hexdigest()[:16]
-            for i in range(n_frames)
-        ]
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..kernels import avi
-
-        # GENUINE video frame extraction from a real container: sample
-        # i is decoded frame i*F//n_frames (MJPG via kernels/jpeg.py,
-        # BI_RGB via DIB reshape), hashed over its raw (H, W, 3) bytes
-        frames, _ = avi.decode_avi(data)
-        return [
-            hashlib.sha256(frames[i * len(frames) // n_frames].tobytes()).hexdigest()[:16]
-            for i in range(n_frames)
-        ]
-    if data[:4] == b"fLaC":
-        from ..kernels import flac
-
-        # compressed audio: decode-then-window (the ADPCM convention),
-        # hashing the little-endian int16 interleaved stream
-        s, _ = flac.decode_flac(data)
-        raw = s.astype("<i2").tobytes()
-        n, frame_bytes = s.shape[0], s.shape[1] * 2
-        bounds = [i * n // n_frames for i in range(n_frames + 1)]
-        return [
-            hashlib.sha256(raw[bounds[i] * frame_bytes : bounds[i + 1] * frame_bytes]).hexdigest()[:16]
-            for i in range(n_frames)
-        ]
-    if not (data[:4] == b"RIFF" and data[8:12] == b"WAVE"):
+    GIF and AVI get GENUINE video frame extraction: sample i is decoded
+    frame i*F//n_frames (GIF: the COMPOSITED logical screen; AVI: MJPG
+    via kernels/jpeg.py or a DIB reshape), hashed over its raw (H, W, 3)
+    RGB bytes. Audio gets the analogue: contiguous fixed-stride windows
+    split on frame boundaries (window i covers sample frames
+    [i*n/n_frames, (i+1)*n/n_frames)) — of the raw PCM bytes for PCM at
+    any sample width, of the DECODED little-endian int16 stream for
+    G.711, ADPCM and FLAC (decode-then-window: the window id names
+    sample content, not wire bytes)."""
+    kind = _sniff(data)
+    if kind in ("gif", "avi"):
+        frames = _raster(kind, data)[0]
+        return [_sha16(frames[i * len(frames) // n_frames].tobytes()) for i in range(n_frames)]
+    if kind not in _AUDIO:
         raise NotImplementedError("frame sampling: only WAV/FLAC/GIF/AVI decode without a real codec")
-    audio_fmt, g_nch, _, _, g_pcm = _wav_chunks(data)
-    if audio_fmt in (0x11, 0x02):
-        # IMA / MS ADPCM: windows hash the DECODED little-endian int16
-        # stream (the G.711 decode-then-window convention)
-        ints, _, nch = _wav_adpcm(data)
-        raw = ints.astype("<i2").tobytes()
-        n, frame_bytes = ints.shape[0], nch * 2
-        bounds = [i * n // n_frames for i in range(n_frames + 1)]
-        return [
-            hashlib.sha256(raw[bounds[i] * frame_bytes : bounds[i + 1] * frame_bytes]).hexdigest()[:16]
-            for i in range(n_frames)
-        ]
-    if audio_fmt in (6, 7):
-        lin = _g711_table(audio_fmt)[np.frombuffer(g_pcm, dtype=np.uint8)]
-        raw = lin.astype("<i2").tobytes()
-        nch, sw, n = g_nch, 2, len(lin) // g_nch
-        frame_bytes = nch * sw
-        bounds = [i * n // n_frames for i in range(n_frames + 1)]
-        return [
-            hashlib.sha256(raw[bounds[i] * frame_bytes : bounds[i + 1] * frame_bytes]).hexdigest()[:16]
-            for i in range(n_frames)
-        ]
-    try:
-        with wave.open(io.BytesIO(data), "rb") as wf:
-            nch, sw, n = wf.getnchannels(), wf.getsampwidth(), wf.getnframes()
-            raw = wf.readframes(n)
-    except Exception as exc:  # noqa: BLE001
-        raise NotImplementedError(f"malformed WAV payload: {exc}") from exc
-    frame_bytes = nch * sw
+    a = _audio(kind, data)
+    if a.fmt == 1:
+        raw, n, nch, width = a.wire
+    else:
+        raw, (n, nch), width = a.samples.astype("<i2").tobytes(), a.samples.shape, 2
+    size = nch * width
     bounds = [i * n // n_frames for i in range(n_frames + 1)]
-    return [
-        hashlib.sha256(raw[bounds[i] * frame_bytes : bounds[i + 1] * frame_bytes]).hexdigest()[:16]
-        for i in range(n_frames)
-    ]
+    return [_sha16(raw[bounds[i] * size : bounds[i + 1] * size]) for i in range(n_frames)]
+
+
+def _stage(df: DataFrame, binary_col: str, schema: str, batch) -> DataFrame:
+    """The one body of the media stages: select ``url`` and the binary
+    column, skip empty Arrow batches, coerce NULL payloads to b"", and
+    yield ``batch(urls, payloads)`` — one pandas frame per batch. Decode
+    is per-payload by nature (variable-size compressed bytes); the batch
+    assembly around it is columnar."""
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
+                yield batch(pdf["url"].to_numpy(), payloads)
+
+    return df.select("url", binary_col).mapInPandas(run, schema=schema)
 
 
 def decode_media(df: DataFrame, binary_col: str = "html", kind: str = "image", deterministic_fake: bool = True) -> DataFrame:
     """Decode stage: binary -> typed metadata row per payload. With
-    ``deterministic_fake=False``, PNG/JPEG/WAV headers are decoded for
-    real (stdlib; media_kind reports the sniffed format) and other
-    formats raise NotImplementedError."""
+    ``deterministic_fake=False`` every format ``decode_real`` knows
+    (PNG/JPEG/GIF/BMP/TIFF/AVI/WAV/FLAC headers, MP4/Ogg/MP3 container
+    metadata) is decoded for real, media_kind reporting the sniffed
+    format; other formats raise NotImplementedError."""
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not deterministic_fake:
-                payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
-                decoded = [decode_real(d) for d in payloads]  # per-payload by nature
-                yield pd.DataFrame(
-                    {
-                        "url": pdf["url"].to_numpy(),
-                        "media_kind": [d[0] for d in decoded],
-                        "n_bytes": np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads)),
-                        "width": np.fromiter((d[1] for d in decoded), dtype=np.int32, count=len(decoded)),
-                        "height": np.fromiter((d[2] for d in decoded), dtype=np.int32, count=len(decoded)),
-                        "n_channels": np.fromiter((d[3] for d in decoded), dtype=np.int32, count=len(decoded)),
-                        "sha256": [hashlib.sha256(d).hexdigest() for d in payloads],
-                    }
-                )
-                continue
+    def batch(urls, payloads):
+        n_bytes = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
+        if deterministic_fake:
             # hashing is inherently per-payload; everything else is columnar
-            payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
             digests = [hashlib.sha256(d).digest() for d in payloads]
             dig = np.frombuffer(b"".join(digests), dtype=np.uint8).reshape(-1, 32)
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
-                    "url": pdf["url"].to_numpy(),
+                    "url": urls,
                     "media_kind": kind,
-                    "n_bytes": np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads)),
+                    "n_bytes": n_bytes,
                     "width": (64 + dig[:, 0] % 192).astype(np.int32),
                     "height": (64 + dig[:, 1] % 192).astype(np.int32),
                     "n_channels": (1 + dig[:, 2] % 3).astype(np.int32),
                     "sha256": [d.hex() for d in digests],
                 }
             )
+        decoded = [decode_real(d) for d in payloads]
 
-    return df.select("url", binary_col).mapInPandas(run, schema=DECODE_SCHEMA)
+        def col(i):
+            return np.fromiter((d[i] for d in decoded), dtype=np.int32, count=len(decoded))
+
+        return pd.DataFrame(
+            {
+                "url": urls,
+                "media_kind": [d[0] for d in decoded],
+                "n_bytes": n_bytes,
+                "width": col(1),
+                "height": col(2),
+                "n_channels": col(3),
+                "sha256": [hashlib.sha256(d).hexdigest() for d in payloads],
+            }
+        )
+
+    return _stage(df, binary_col, DECODE_SCHEMA, batch)
 
 
 def extract_features(df: DataFrame, binary_col: str = "html", dim: int = 16, deterministic_fake: bool = True) -> DataFrame:
     """Feature-extract stage: binary -> fixed-dim float vector. Fake path:
     bytes of the sha256 digest scaled to [0,1). Real path
     (``deterministic_fake=False``): per-channel pixel/sample statistics
-    from the real decode (``features_real`` — PNG via zlib-inflated IDAT
-    + unfilter, JPEG via the from-scratch kernels/jpeg.py codec
-    [sequential AND progressive], WAV via PCM frames incl. G.711);
-    formats needing a real codec (video, compressed audio beyond G.711)
-    raise the declared NotImplementedError."""
+    from the real decode (``features_real``, every raster and audio
+    format of ``_raster``/``_audio``); formats needing a real codec raise
+    the declared NotImplementedError."""
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not deterministic_fake:
-                payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
-                feats = [features_real(d, dim) for d in payloads]
-                yield pd.DataFrame({"url": pdf["url"].to_numpy(), "feat": feats})
-                continue
-            payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
+    def batch(urls, payloads):
+        if deterministic_fake:
             digests = [
                 hashlib.sha256(d).digest() + hashlib.sha256(d + b"x").digest() for d in payloads
             ]
             dig = np.frombuffer(b"".join(digests), dtype=np.uint8).reshape(-1, 64)
-            feats = (dig[:, :dim] / 255.0).astype(np.float32)  # one vectorized pass
-            yield pd.DataFrame({"url": pdf["url"].to_numpy(), "feat": list(feats)})
+            feats = list((dig[:, :dim] / 255.0).astype(np.float32))  # one vectorized pass
+        else:
+            feats = [features_real(d, dim) for d in payloads]
+        return pd.DataFrame({"url": urls, "feat": feats})
 
-    return df.select("url", binary_col).mapInPandas(run, schema=FEATURE_SCHEMA)
+    return _stage(df, binary_col, FEATURE_SCHEMA, batch)
 
 
 def sample_frames(df: DataFrame, binary_col: str = "html", n_frames: int = 3, deterministic_fake: bool = True) -> DataFrame:
     """Frame-sample stage (video semantics): one output row per sampled
-    frame — demonstrates the 1->N Arrow fan-out shape. Real path
-    (``deterministic_fake=False``): fixed-stride PCM windows of WAV
-    payloads (``frames_real``); video rasters need a real codec and
-    raise the declared NotImplementedError."""
+    frame — the 1->N Arrow fan-out shape, assembled columnar (repeat/tile
+    index arrays; per-item hashing is the only Python loop). Real path
+    (``deterministic_fake=False``): ``frames_real`` — decoded frames of
+    animated GIF and AVI, fixed-stride sample windows of WAV and FLAC;
+    other formats raise the declared NotImplementedError."""
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not deterministic_fake:
-                payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
-                shas = [frames_real(d, n_frames) for d in payloads]
-                yield pd.DataFrame(
-                    {
-                        "url": np.repeat(pdf["url"].to_numpy(), n_frames),
-                        "frame_idx": np.tile(np.arange(n_frames, dtype=np.int32), len(payloads)),
-                        "frame_sha": [s for row in shas for s in row],
-                    }
-                )
-                continue
-            payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
-            # 1->N fan-out assembled columnar: repeat/tile index arrays, one
-            # DataFrame per batch (per-item hashing is the only Python loop)
-            yield pd.DataFrame(
-                {
-                    "url": np.repeat(pdf["url"].to_numpy(), n_frames),
-                    "frame_idx": np.tile(np.arange(n_frames, dtype=np.int32), len(payloads)),
-                    # ASCII frame salt (not bytes([i])): keeps the fake's
-                    # hash chain expressible in the plain-SQL oracle
-                    # (DuckDB sha256 is VARCHAR-only; NUL bytes don't
-                    # survive VARCHAR concat)
-                    "frame_sha": [
-                        hashlib.sha256(d + str(i).encode()).hexdigest()[:16]
-                        for d in payloads
-                        for i in range(n_frames)
-                    ],
-                }
-            )
+    def batch(urls, payloads):
+        if deterministic_fake:
+            # ASCII frame salt (not bytes([i])): keeps the fake's hash
+            # chain expressible in the plain-SQL oracle (DuckDB sha256 is
+            # VARCHAR-only; NUL bytes don't survive VARCHAR concat)
+            shas = [_sha16(d + str(i).encode()) for d in payloads for i in range(n_frames)]
+        else:
+            shas = [s for d in payloads for s in frames_real(d, n_frames)]
+        return pd.DataFrame(
+            {
+                "url": np.repeat(urls, n_frames),
+                "frame_idx": np.tile(np.arange(n_frames, dtype=np.int32), len(payloads)),
+                "frame_sha": shas,
+            }
+        )
 
-    return df.select("url", binary_col).mapInPandas(run, schema=FRAME_SCHEMA)
+    return _stage(df, binary_col, FRAME_SCHEMA, batch)
 
 
 def resize_media(
@@ -1157,33 +923,42 @@ def resize_media(
     dims + content sha). Fake path: hash chain over the raw bytes plus an
     ASCII salt (``sha256(payload || 'resize:WxH')``) so the plain-SQL
     oracle re-derives it (same VARCHAR-safe convention as the frame
-    salt). Real path (``deterministic_fake=False``): PNG nearest-neighbor
-    resample re-encoded via ``resize_real``; other formats raise the
-    declared NotImplementedError."""
+    salt). Real path (``deterministic_fake=False``): nearest-neighbor
+    resample re-encoded in the source format by ``resize_real`` (every
+    raster and audio format); other formats raise the declared
+    NotImplementedError."""
     tw, th = int(target[0]), int(target[1])
     salt = f"resize:{tw}x{th}".encode()
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = [bytes(p) if p is not None else b"" for p in pdf[binary_col]]
-            if deterministic_fake:
-                shas = [hashlib.sha256(d + salt).hexdigest()[:16] for d in payloads]
-            else:
-                shas = [
-                    hashlib.sha256(resize_real(d, tw, th)).hexdigest()[:16] for d in payloads
-                ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].to_numpy(),
-                    "out_w": np.full(len(payloads), tw, dtype=np.int32),
-                    "out_h": np.full(len(payloads), th, dtype=np.int32),
-                    "resized_sha": shas,
-                }
-            )
+    def batch(urls, payloads):
+        shas = [_sha16(d + salt if deterministic_fake else resize_real(d, tw, th)) for d in payloads]
+        return pd.DataFrame(
+            {
+                "url": urls,
+                "out_w": np.full(len(payloads), tw, dtype=np.int32),
+                "out_h": np.full(len(payloads), th, dtype=np.int32),
+                "resized_sha": shas,
+            }
+        )
 
-    return df.select("url", binary_col).mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _stage(df, binary_col, RESIZE_SCHEMA, batch)
+
+
+def media_stats(df: DataFrame, binary_col: str = "payload") -> DataFrame:
+    """Stats stage over REAL decoded content: one output row per decoded
+    channel (1->N fan-out like ``sample_frames``), integer-exact columns
+    so the twin-derived KAT oracle compares without float tolerance."""
+
+    def batch(urls, payloads):
+        rows = []
+        for url, d in zip(urls, payloads):
+            kind, stats = stats_real(d)
+            rows += [(url, kind, c, *s) for c, s in enumerate(stats)]
+        return pd.DataFrame(
+            rows, columns=["url", "media_kind", "channel", "n_values", "v_sum", "v_min", "v_max"]
+        ).astype({"channel": "int32", "n_values": "int64", "v_sum": "int64", "v_min": "int64", "v_max": "int64"})
+
+    return _stage(df, binary_col, STATS_SCHEMA, batch)
 
 
 # ----------------------------------------------------- containers ---
@@ -1388,18 +1163,6 @@ _MP3_BITRATES = {3: (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256
 _MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000)}
 
 
-def _is_mp3(data: bytes) -> bool:
-    """Sniff: ID3v2 prefix, or a frame sync whose version/layer/bitrate/
-    rate fields are all valid Layer III (so random binary — and JPEG's
-    0xFFD8 — doesn't land here)."""
-    if data[:3] == b"ID3":
-        return True
-    if len(data) < 4 or data[0] != 0xFF or (data[1] & 0xE0) != 0xE0:
-        return False
-    ver, layer = (data[1] >> 3) & 3, (data[1] >> 1) & 3
-    return ver in (2, 3) and layer == 1 and (data[2] >> 4) not in (0, 15) and ((data[2] >> 2) & 3) != 3
-
-
 def _mp3_track(data: bytes) -> dict:
     """Walk every MPEG-1/2 Layer III frame header (ISO/IEC 11172-3 /
     13818-3): frame lengths from the bitrate/rate/padding fields, exact
@@ -1475,46 +1238,41 @@ def _flac_track(data: bytes) -> dict:
         pos += 4 + ln
     raise NotImplementedError("malformed FLAC: no STREAMINFO block")
 
+def _avi_track(data: bytes) -> dict:
+    w, h, n_frames, fps = avi.header(data)
+    # schema mapping for video: sample_rate carries the frame rate
+    # (frames ARE the samples of a video stream); n_channels 0 — there
+    # is no audio stream in this corpus
+    return {"track_id": 1, "kind": "video", "codec": avi.stream_codec(data).strip().lower(),
+            "width": w, "height": h, "n_channels": 0, "sample_rate": fps,
+            "duration_ms": n_frames * 1000 // fps if fps else 0}
 
+
+@_declared
 def container_tracks(data: bytes) -> tuple[str, list[dict]]:
     """Sniff + parse one container payload -> (container_kind, track
     dicts). Declared NotImplementedError for malformed payloads and for
     non-container formats (same contract as decode_real)."""
-    try:
-        if data[:4] == b"fLaC":
-            return "flac", [_flac_track(data)]
-        if _is_mp3(data):
-            return "mp3", [_mp3_track(data)]
-        if len(data) >= 12 and data[4:8] == b"ftyp":
-            tracks = _mp4_tracks(data)
-            out = []
-            for t in tracks:
-                out.append({"track_id": t["track_id"], "kind": t["kind"], "codec": t["codec"],
-                            "width": t["width"], "height": t["height"],
-                            "n_channels": t["n_channels"], "sample_rate": t["sample_rate"],
-                            "duration_ms": t["duration"] * 1000 // t["timescale"]})
-            return "mp4", out
-        if data[:4] == b"OggS":
-            return "ogg", [_ogg_track(s) for s in _ogg_streams(data)]
-        if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-            from ..kernels import avi
-
-            w, h, n_frames, fps = avi.header(data)
-            # schema mapping for video: sample_rate carries the frame
-            # rate (frames ARE the samples of a video stream);
-            # n_channels 0 — there is no audio stream in this corpus
-            return "avi", [{
-                "track_id": 1, "kind": "video",
-                "codec": avi.stream_codec(data).strip().lower(),
-                "width": w, "height": h, "n_channels": 0,
-                "sample_rate": fps,
-                "duration_ms": n_frames * 1000 // fps if fps else 0,
-            }]
-    except NotImplementedError:
-        raise
-    except Exception as exc:  # noqa: BLE001 — truncated/corrupt headers
-        raise NotImplementedError(f"malformed container payload: {exc}") from exc
-    raise NotImplementedError("not a recognized media container (MP4/Ogg/FLAC/MP3/AVI)")
+    kind = _sniff(data)
+    if kind == "flac":
+        tracks = [_flac_track(data)]
+    elif kind == "mp3":
+        tracks = [_mp3_track(data)]
+    elif kind == "mp4":
+        tracks = [
+            {"track_id": t["track_id"], "kind": t["kind"], "codec": t["codec"],
+             "width": t["width"], "height": t["height"],
+             "n_channels": t["n_channels"], "sample_rate": t["sample_rate"],
+             "duration_ms": t["duration"] * 1000 // t["timescale"]}
+            for t in _mp4_tracks(data)
+        ]
+    elif kind == "ogg":
+        tracks = [_ogg_track(s) for s in _ogg_streams(data)]
+    elif kind == "avi":
+        tracks = [_avi_track(data)]
+    else:
+        raise NotImplementedError("not a recognized media container (MP4/Ogg/FLAC/MP3/AVI)")
+    return kind, tracks
 
 
 def media_containers(df: DataFrame, binary_col: str = "payload") -> DataFrame:
@@ -1524,24 +1282,21 @@ def media_containers(df: DataFrame, binary_col: str = "payload") -> DataFrame:
     parsing is the right shape — parallelism comes from the partition
     count, not intra-payload vectorization."""
 
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[binary_col]):
-                kind, tracks = container_tracks(bytes(payload) if payload is not None else b"")
-                for t in tracks:
-                    rows.append((url, kind, t["codec"], t["track_id"], t["kind"],
-                                 t["width"], t["height"], t["n_channels"],
-                                 t["sample_rate"], t["duration_ms"], len(tracks)))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "container", "codec", "track_id", "track_type",
-                         "width", "height", "n_channels", "sample_rate",
-                         "duration_ms", "n_tracks"],
-            ).astype({"track_id": "int64", "width": "int32", "height": "int32",
-                      "n_channels": "int32", "sample_rate": "int32",
-                      "duration_ms": "int64", "n_tracks": "int32"})
+    def batch(urls, payloads):
+        rows = []
+        for url, payload in zip(urls, payloads):
+            kind, tracks = container_tracks(payload)
+            for t in tracks:
+                rows.append((url, kind, t["codec"], t["track_id"], t["kind"],
+                             t["width"], t["height"], t["n_channels"],
+                             t["sample_rate"], t["duration_ms"], len(tracks)))
+        return pd.DataFrame(
+            rows,
+            columns=["url", "container", "codec", "track_id", "track_type",
+                     "width", "height", "n_channels", "sample_rate",
+                     "duration_ms", "n_tracks"],
+        ).astype({"track_id": "int64", "width": "int32", "height": "int32",
+                  "n_channels": "int32", "sample_rate": "int32",
+                  "duration_ms": "int64", "n_tracks": "int32"})
 
-    return df.select("url", binary_col).mapInPandas(run, schema=CONTAINER_SCHEMA)
+    return _stage(df, binary_col, CONTAINER_SCHEMA, batch)

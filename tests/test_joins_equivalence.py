@@ -18,6 +18,14 @@
   and an analyzed plan no larger than at a small ``n_salt``.
 * ``_ring_candidates``: the analyzed plan at ring 64 is no larger than at
   ring 1 (the offsets come from ``sequence``, not literal arrays).
+* ``salted_tile_join`` keeps a caller's own ``salt`` column and returns
+  the rows of ``tile_join``; ``pip_join`` keeps a caller's column whose
+  name differs from its temp name only in case.
+* ``_match_pairs`` (the PIP refine behind ``pip_join``) against the
+  per-polygon boolean-mask refine its sort-and-slice grouping replaced:
+  identical ``(point_idx, poly_id)`` pairs in identical order, over
+  overlapping polygons, a polygon with a hole and a batch with no
+  candidates.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from convert_spark.functions import exprs
+from convert_spark.kernels import pip as pip_kernel
 from convert_spark.operators import joins
 
 
@@ -250,6 +259,20 @@ class TestSaltSequence:
         )
         assert len(plain) > 0
 
+    def test_caller_salt_column_kept(self, spark):
+        pts, dim = self._inputs(spark)
+        pts = pts.withColumn("salt", F.concat(F.lit("payload-"), F.col("rowid").cast("string")))
+        plain = joins.tile_join(pts, dim).toPandas()
+        salted = joins.salted_tile_join(pts, dim, n_salt=8).toPandas()
+        assert list(salted.columns) == list(plain.columns)
+        key = ["rowid", "zoom", "cell_id"]
+        pd.testing.assert_frame_equal(
+            plain.sort_values(key).reset_index(drop=True),
+            salted.sort_values(key).reset_index(drop=True),
+        )
+        assert len(plain) > 0
+        assert (salted["salt"] == "payload-" + salted["rowid"].astype(str)).all()
+
     def test_analyzed_plan_constant_in_n_salt(self, spark):
         pts, dim = self._inputs(spark)
 
@@ -276,3 +299,69 @@ class TestRingSequence:
             return len(j._jdf.queryExecution().analyzed().toString())
 
         assert plan_len(64) <= plan_len(1) + 16
+
+
+def match_pairs_reference(idx, px, py):
+    """The per-polygon boolean-mask refine: for each candidate polygon, a
+    mask over the whole candidate array selects its pairs, and the
+    inside flags are written back through that mask (candidate order)."""
+    qi, ii = idx["tree"].query_points(px, py)
+    inside = np.zeros(qi.size, dtype=bool)
+    for poly in np.unique(ii):
+        m = ii == poly
+        crossings = np.zeros(int(m.sum()), dtype=np.int64)
+        for ring in idx["rings"][poly]:
+            if ring.shape[0] >= 4:
+                crossings += pip_kernel.ring_crossings(px[qi[m]], py[qi[m]], ring)
+        inside[m] = (crossings & 1).astype(bool)
+    return qi[inside], idx["poly_ids"][ii[inside]]
+
+
+class TestMatchPairsOrder:
+    @staticmethod
+    def _polygons():
+        rng = np.random.default_rng(12)
+        rows = []
+        for i in range(59):  # overlapping triangles and quads around (0, 0)
+            cx, cy = rng.uniform(-10, 10, 2)
+            n = 3 + i % 2
+            ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+            r = rng.uniform(1, 4, n)
+            ring = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
+            rows.append((1000 + 7 * i, [ring.tolist()]))
+        outer = [[-3, -3], [3, -3], [3, 3], [-3, 3]]
+        hole = [[-1, -1], [-1, 1], [1, 1], [1, -1]]
+        rows.append((5, [outer, hole]))
+        return pd.DataFrame(rows, columns=["poly_id", "rings"])
+
+    def test_pairs_and_order_match_mask_refine(self):
+        idx = joins._polygon_index(self._polygons())
+        rng = np.random.default_rng(13)
+        px, py = rng.uniform(-14, 14, 3000), rng.uniform(-14, 14, 3000)
+        got = joins._match_pairs(idx, px, py)
+        ref = match_pairs_reference(idx, px, py)
+        np.testing.assert_array_equal(got[0], ref[0])
+        np.testing.assert_array_equal(got[1], ref[1])
+        # the inputs reach overlaps (a point in several polygons) and the
+        # hole (inside the outer ring of polygon 5, outside the polygon)
+        assert np.bincount(got[0]).max() > 1
+        in_hole = (np.abs(px) < 1) & (np.abs(py) < 1)
+        assert in_hole.any() and not np.isin(np.flatnonzero(in_hole), got[0][got[1] == 5]).any()
+        assert (got[1] == 5).any()
+
+    def test_pip_join_keeps_case_variant_of_temp_name(self, spark):
+        """Spark resolves column names case-insensitively, so a caller's
+        ``_POLYS`` column is the temp name ``_polys`` to withColumn."""
+        pts = spark.createDataFrame(
+            pd.DataFrame({"lon": [0.5, 2.0, 50.0], "lat": [0.5, 2.0, 50.0], "_POLYS": ["a", "b", "c"]})
+        )
+        got = joins.pip_join(pts, self._polygons(), how="left").toPandas()
+        assert list(got.columns) == ["lon", "lat", "_POLYS", "poly_id"]
+        assert set(got["_POLYS"]) == {"a", "b", "c"}
+
+    def test_batch_without_candidates(self):
+        idx = joins._polygon_index(self._polygons())
+        px, py = np.full(5, 100.0), np.linspace(50, 60, 5)
+        got = joins._match_pairs(idx, px, py)
+        ref = match_pairs_reference(idx, px, py)
+        assert got[0].size == 0 and ref[0].size == 0 and got[1].size == 0

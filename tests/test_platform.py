@@ -1142,7 +1142,8 @@ class TestResizeStage:
         out = multimodal.resize_real(buf.getvalue(), 25, 4000)
         kind, w, h, c = multimodal.decode_real(out)
         assert (kind, w, h, c) == ("wav", 25, 4000, 1)
-        got, rate = multimodal._wav_samples(out)
+        a = multimodal._audio("wav", out)
+        got, rate = (a.samples - a.mid) / a.half, a.rate
         exp = samples[(np.arange(25) * 100) // 25].astype(np.float64) / 32768.0
         np.testing.assert_allclose(got[:, 0], exp)
         assert rate == 4000
@@ -1831,7 +1832,7 @@ class TestG711:
             _, w, _, nch = multimodal.decode_real(p)
             rp = multimodal.resize_real(p, w, 12345)
             assert multimodal.decode_real(rp) == ("wav", w, 12345, nch)
-            assert multimodal._wav_ints(rp).tolist() == multimodal._wav_ints(p).tolist()
+            assert multimodal._audio("wav", rp).samples.tolist() == multimodal._audio("wav", p).samples.tolist()
 
     def test_unknown_wav_format_declared(self):
         from convert_spark.operators import multimodal
@@ -2672,6 +2673,47 @@ class TestAvi:
 
         with pytest.raises(NotImplementedError):
             avi.encode_avi([np.zeros((2, 2, 3), dtype=np.uint8)], fps=5, codec="H264")
+
+    def test_frames_disagreeing_in_size_are_declared(self):
+        """MJPG frames of different sizes are a malformed stream: the
+        resize stage raises the declared error instead of indexing the
+        smaller frame with the first frame's sampling grid."""
+        from convert_spark.kernels import avi
+
+        rng = np.random.Generator(np.random.PCG64(43))
+        frames = [rng.integers(0, 256, size=(s, s, 3)).astype(np.uint8) for s in (16, 8)]
+        data = avi.encode_avi(frames, fps=5, codec="MJPG")
+        assert multimodal.decode_real(data) == ("avi", 16, 16, 2)
+        with pytest.raises(NotImplementedError):
+            multimodal.resize_real(data, 32, 24)
+
+
+def test_payload_magic_only_in_sniff():
+    """One format sniff: payload magic-byte comparisons in multimodal.py
+    sit only in ``_sniff``, the container walkers and the TIFF
+    re-encoder's read of its byte-order field."""
+    import ast
+    import re
+
+    src = Path(multimodal.__file__).read_text()
+    owner = {}
+    for node in ast.parse(src).body:
+        names = [getattr(node, "name", None)] + [
+            t.id for t in getattr(node, "targets", []) if isinstance(t, ast.Name)
+        ]
+        for line in range(node.lineno, node.end_lineno + 1):
+            owner[line] = next((n for n in names if n), None)
+    allowed = {
+        "_sniff", "_reencode_tiff", "_mp4_boxes", "_mp4_track", "_mp4_sample_entry",
+        "_mp4_tracks", "_ogg_streams", "_ogg_track", "_mp3_track", "_flac_track",
+    }
+    magic = re.compile(r"data\[:\d+\]\s*(==|in\b)|data\[4:8\]\s*==|data\[8:12\]\s*==")
+    hits = [
+        f"multimodal.py:{i} in {owner.get(i)}"
+        for i, line in enumerate(src.splitlines(), 1)
+        if magic.search(line) and owner.get(i) not in allowed
+    ]
+    assert hits == []
 
 
 class TestAdpcm:
