@@ -16,62 +16,44 @@ shuffle-friendly formulation:
 * small-star: every node connects its smaller-or-equal neighbors to the
   minimum.
 
-Each round is two groupBy shuffles over the edge list; the edge list
-contracts toward star graphs centered on component minima in
-O(log^2 n) rounds (in practice a handful). No driver-side graph state —
-the edge RDD never leaves the cluster. Convergence is observed on the
+Each round computes both stars' minima as window aggregates over the
+edge list (no join): a hash exchange per star plus one final distinct.
+The edge list contracts toward star graphs centered on component minima
+in O(log^2 n) rounds (in practice a handful). No driver-side graph state
+— the edge RDD never leaves the cluster. Convergence is observed on the
 round's checkpoint: an edge-set fingerprint (count, xor and sum of edge
 hashes) rides in the job that materializes the round's edges, so a round
 is one action and no edge is collected.
 
 At 100 TB: near-dup graphs are sparse (bounded candidate generation
 upstream) and components are small (duplicate clusters), so the edge list
-shrinks fast; skewed hubs (one doc near-duplicate to millions) are exactly
-the case large-star handles — it re-attaches the hub's neighbors to the
-minimum in one round instead of chaining.
+shrinks fast; skewed hubs (one doc near-duplicate to millions) are the
+case large-star handles — it re-attaches the hub's neighbors to the
+minimum in one round instead of chaining. The window form has a cost
+there: all of a hub's neighbor rows meet in ONE window task per star, a
+sort as large as the hub's degree, where an aggregate + join would let
+AQE's skew split cut the hub's join partition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..plans.checkpoints import checkpoint, release
 
 
-def _canon_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Undirected edge list as (u, v) with u < v, deduplicated, self-loops
-    dropped."""
-    u = F.least(F.col(a), F.col(b)).alias("u")
-    v = F.greatest(F.col(a), F.col(b)).alias("v")
-    return (
-        pairs.filter(F.col(a).isNotNull() & F.col(b).isNotNull())
-        .select(u, v)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
-    """For each node n over its neighborhood N(n) ∪ {n}: connect every
-    STRICTLY larger neighbor to m = min(N(n) ∪ {n})."""
+    """For each node u over its neighborhood N(u) ∪ {u}: connect every
+    STRICTLY larger neighbor to m = min(N(u) ∪ {u}). Rows may repeat:
+    a repeat cannot change a minimum, and _small_star ends in distinct."""
     nbrs = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # min(N(u) ∪ {u}) folds the self-term into the aggregate: least(min
-    # over neighbors, u) — the former explicit self-loop union branch
-    # cost one distinct Exchange per round for rows the aggregate can
-    # synthesize from its own grouping key (round 8, guide §2.4); the
-    # emitted m values are identical, u ranges over the same node set
-    # (every edge endpoint appears in nbrs.u by construction)
-    m = nbrs.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-    out = (
-        nbrs.join(m, "u")
-        .filter(F.col("v") > F.col("u"))  # larger neighbors only
-        .select(F.col("m").alias("u"), F.col("v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
-    return out
+    # min(N(u) ∪ {u}) folds the self-term into the window minimum: least(min
+    # over neighbors, u); every edge endpoint appears in nbrs.u, and m <= u
+    # < v, so (m, v) is already canonical
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+    return nbrs.withColumn("m", m).filter(F.col("v") > F.col("u")).select(F.col("m").alias("u"), "v")
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -79,40 +61,40 @@ def _small_star(edges: DataFrame) -> DataFrame:
     m = min of that set."""
     # orient edges toward the larger endpoint: rows (n, smaller neighbor)
     nbrs = edges.select(F.col("v").alias("n"), F.col("u").alias("s"))
-    # same self-term folding as _large_star: m = least(min over smaller
-    # neighbors, n). The former self-loop rows (n, n) contributed exactly
-    # the edges (m(n), n) — which is the m table itself — so the join
-    # runs over the bare neighbor rows and the self contribution unions
-    # in as m, saving the per-round self-distinct Exchange; the emitted
-    # edge SET is identical row-for-row after the final distinct
-    m = nbrs.groupBy("n").agg(F.least(F.min("s"), F.col("n")).alias("m"))
-    out = (
-        nbrs.join(m, "n")
-        .select(F.col("m").alias("u"), F.col("s").alias("v"))
-        .unionByName(m.select(F.col("m").alias("u"), F.col("n").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+    # same self-term folding: m = least(min over smaller neighbors, n); each
+    # row emits (m, s) and the self contribution (m, n). m is a column of
+    # its own first: a window cannot sit inside the generator
+    m = F.least(F.min("s").over(Window.partitionBy("n")), F.col("n"))
+    both = F.array(
+        F.struct(F.col("m").alias("u"), F.col("s").alias("v")),
+        F.struct(F.col("m").alias("u"), F.col("n").alias("v")),
+    )
+    return (
+        nbrs.withColumn("m", m)
+        .select(F.inline(both))
+        .filter(F.col("u") != F.col("v"))  # m <= s < n: only (m, s) can be a self-loop
         .distinct()
     )
-    return out
 
 
 def _checkpoint_edges(edges: DataFrame) -> tuple[DataFrame, tuple[int, int, int, int]]:
-    """The eager checkpoint of ``edges`` and its convergence fingerprint,
+    """The eager checkpoint of ``edges`` and its convergence fingerprint
+    over the rows with u != v (the edges; a self-pair row is a node only),
     observed in the checkpoint's own job: (count, xor, salted xor, wrapped
     sum) of per-edge hashes, an order-independent check with no edge
     collect. Two independent hash streams (plain / salted xxhash64) plus
     the additive sum make a silent collision (two distinct edge sets with
     equal fingerprint declaring convergence early and emitting corrupt
     duplicate memberships) require simultaneous collisions in three
-    decorrelated 64-bit channels. An empty edge set observes NULL hashes,
-    read as 0."""
-    eh = F.xxhash64("u", "v")
+    decorrelated 64-bit channels. Each channel skips the NULLs of
+    non-edge rows; an empty edge set observes NULL hashes, read as 0."""
+    edge = F.col("u") != F.col("v")
+    eh = F.when(edge, F.xxhash64("u", "v"))
     edges, m = checkpoint(
         edges,
-        n=F.count(F.lit(1)),
+        n=F.count(eh),
         h=F.bit_xor(eh),
-        h2=F.bit_xor(F.xxhash64(F.lit(0x5A17), "u", "v")),
+        h2=F.bit_xor(F.when(edge, F.xxhash64(F.lit(0x5A17), "u", "v"))),
         # additive channel folded to 20 bits per term: a raw bigint sum
         # would overflow (an ERROR under Spark 4 ANSI mode); 30-bit
         # terms only held to 2^33 (~8.6B) edges — plausible at 100 TB.
@@ -142,8 +124,10 @@ def connected_components(
 
     Alternates large-star/small-star until the edge set is stable (a
     star graph is a fixed point of both). Each round eagerly checkpoints
-    the new edge list — lineage would otherwise double per round. Returns
-    the star edges as the membership table, plus the root rows themselves.
+    the new edge list — lineage would otherwise double per round. A
+    converged star graph holds exactly one edge (component, node) per
+    non-root node, so the membership is every node LEFT-joined to the
+    star edges, a node without an edge being its own component.
 
     ``max_rounds`` default: measured worst case is ~log2(diameter)+1
     rounds (bench.py cc_convergence: a 100k-node chain converges in 18
@@ -155,27 +139,24 @@ def connected_components(
     # doubling. (A lazy checkpoint materialized by a separate fingerprint
     # action was measured 5x SLOWER end-to-end — the un-materialized plan
     # is re-optimized/re-planned by every round built on top of it.)
-    # Checkpoint ``pairs`` ONCE up front: it is typically the expensive
-    # upstream candidate join, and both the node set and the edge list
-    # derive from it — the previous shape materialized that lineage twice
-    # (and the singleton anti-join would re-execute it on every downstream
-    # action; a nondeterministic upstream could even diverge from the edge
-    # snapshot). NULL ids carry no edge semantics and are dropped on both
-    # paths.
-    # Checkpoint storage is O(1) in rounds: each round releases the
-    # superseded generation (plans/checkpoints.py).
-    pairs_c, _ = checkpoint(pairs.select(F.col(a), F.col(b)))
-    all_nodes = (
-        pairs_c.select(F.col(a).alias("node"))
-        .unionByName(pairs_c.select(F.col(b).alias("node")))
-        .filter(F.col("node").isNotNull())
+    # ONE checkpoint at entry holds the canonical pairs (u <= v, distinct):
+    # ``pairs`` is typically the expensive upstream candidate join, and
+    # both the node set and the first edge list are lazy reads of it, so
+    # that lineage runs once. least/greatest skip NULLs, so (5, NULL) is
+    # the self-pair (5, 5) — node 5 stays a node — and only an all-NULL
+    # pair is dropped. Checkpoint storage is O(1) in rounds: each round
+    # releases the superseded generation (plans/checkpoints.py).
+    canon, fp = _checkpoint_edges(
+        pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .filter(F.col("u").isNotNull())
         .distinct()
     )
-    edges, fp = _checkpoint_edges(_canon_edges(pairs_c, a, b))
+    all_nodes = canon.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    edges = canon.filter(F.col("u") != F.col("v"))
     converged = False
     for rnd in range(max_rounds):
         edges2, fp2 = _checkpoint_edges(_small_star(_large_star(edges)))
-        release(edges)
+        release(edges)  # the first round's edges are a lazy read of ``canon``: a no-op
         edges = edges2
         if round_stats is not None:
             round_stats.append((rnd + 1, fp2[0]))
@@ -191,15 +172,9 @@ def connected_components(
             f"({fp[0]} edges remain); raise max_rounds"
         )
     members = edges.select(F.col("v").alias("node"), F.col("u").alias("component"))
-    roots = edges.select(F.col("u").alias("node"), F.col("u").alias("component")).distinct()
-    found = members.unionByName(roots)
-    # nodes appearing ONLY in self-pairs (a == b) have no surviving edge;
-    # they are their own singleton components — the documented contract is
-    # one row for EVERY node appearing in ``pairs``
-    singletons = all_nodes.join(found.select("node"), "node", "left_anti").select(
-        "node", F.col("node").alias("component")
+    return all_nodes.join(members, "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component")
     )
-    return found.unionByName(singletons)
 
 
 def incremental_components(

@@ -26,7 +26,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -240,12 +240,32 @@ def _salt_replicate(df: DataFrame, n_salt: int, salt_col: str) -> DataFrame:
     return df.withColumn(salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
 
 
+def _ring_key(tx: Column, ty: Column, zoom: int) -> Column:
+    """Join key of tile (tx, ty) at ``zoom``: ``ty * 2^zoom + tx``,
+    injective per zoom and < 2^60 at zoom 30. The kNN join needs no
+    Morton order, so its key is two integer ops where exprs.morton_cell
+    builds a bit-interleave tree per side and step."""
+    if zoom > 30:
+        raise ValueError("the kNN ring key supports zoom <= 30")
+    return F.shiftleft(ty, zoom) + tx
+
+
 def _ring_candidates(q: DataFrame, r: DataFrame, ring: int, zoom: int, query_id: str,
-                     n_salt: int = 0) -> DataFrame:
-    """Candidate pairs for one ring radius: queries explode into
-    (2*ring+1)^2 ring cells (dx and dy offsets exploded in-stage, no
-    UDF) and equi-join refs on the ring cell — the cross product never
-    materializes, and the shuffle key is the cell id.
+                     n_salt: int = 0, how: str = "inner") -> DataFrame:
+    """Candidate pairs for one ring radius: queries explode into their
+    ring cells (dx and dy offsets exploded in-stage, no UDF) and
+    equi-join refs on the ring cell's ``_ring_key`` (``r_cell`` on the
+    ref side) — the cross product never materializes, and the shuffle
+    key is the cell.
+
+    The ring is a SET by construction, so no dedupe exchange runs: dx
+    spans ``sequence(lo, lo + min(2*ring, n-1))`` with ``n = 2^zoom``
+    and ``lo = -ring`` while ``2*ring+1 <= n``, else ``lo = -(n // 2)``
+    — then the n offsets reach every tile column exactly once, through
+    the antimeridian wrap too (duplicates would consume top-k ranks;
+    cf. kernels.quadkey.k_ring). dy never wraps: rows past a pole are
+    filtered. ``how="left"`` keeps a ring cell that holds no ref as one
+    row with NULL ref columns.
 
     ``n_salt`` > 0 salts the cell join key: queries take
     ``salt = pmod(xxhash64(query_id), n_salt)`` (deterministic — random
@@ -265,36 +285,29 @@ def _ring_candidates(q: DataFrame, r: DataFrame, ring: int, zoom: int, query_id:
     ones; the n_salt replication shuffle is pure added cost. It stays in
     the API for the one regime measurement can't reach locally: a single
     key whose join OUTPUT exceeds one task's spill budget with AQE off."""
-    from ..functions import exprs
-
     n = 1 << zoom
+    lo = -ring if 2 * ring + 1 <= n else -(n // 2)
     # explode the offsets, NOT crossJoin(broadcast(offsets)): the cross
     # join MULTIPLIES the query side's size estimate by the offsets
     # table's bytes (~2300x at ring 8), after which the planner
     # broadcasts the REF side instead — a 128 MiB 1.5M-row build measured
     # at 10x scale where the probe's query side is the genuinely small one.
     # Explode keeps the estimate proportional to the real fan-out, so the
-    # planner picks the build side per phase (cf. salted_tile_join). dx
-    # and dy each explode ``sequence(-ring, ring)``, so the expression
-    # stays constant-size for any ring (cf. _salt_replicate).
-    offs = F.sequence(F.lit(-ring), F.lit(ring))
+    # planner picks the build side per phase (cf. salted_tile_join). The
+    # offsets come from ``sequence``, so the expression stays
+    # constant-size for any ring (cf. _salt_replicate).
     qq = (
-        q.withColumn("_dx", F.explode(offs))
-        .withColumn("_dy", F.explode(offs))
+        q.withColumn("_dx", F.explode(F.sequence(F.lit(lo), F.lit(lo + min(2 * ring, n - 1)))))
+        .withColumn("_dy", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
         .withColumn("n_tx", F.pmod(F.col("q_tx") + F.col("_dx"), F.lit(n)))
         .withColumn("n_ty", F.col("q_ty") + F.col("_dy"))
         .filter((F.col("n_ty") >= 0) & (F.col("n_ty") < n))
-        .withColumn("r_cell", exprs.morton_cell(F.col("n_tx"), F.col("n_ty"), zoom))
-        .select(query_id, "q_lat", "q_lon", "r_cell")
-        # the ring is a SET: when 2*ring+1 > 2^zoom the longitude wrap maps
-        # several dx offsets to the same cell — duplicates would consume
-        # top-k ranks (cf. kernels.quadkey.k_ring)
-        .dropDuplicates([query_id, "r_cell"])
+        .select(query_id, "q_lat", "q_lon", _ring_key(F.col("n_tx"), F.col("n_ty"), zoom).alias("r_cell"))
     )
     if n_salt > 0:
         qq = qq.withColumn("__salt", F.pmod(F.xxhash64(F.col(query_id)), F.lit(n_salt)))
-        return qq.join(_salt_replicate(r, n_salt, "__salt"), ["r_cell", "__salt"], "inner").drop("__salt")
-    return qq.join(r, "r_cell", "inner")
+        return qq.join(_salt_replicate(r, n_salt, "__salt"), ["r_cell", "__salt"], how).drop("__salt")
+    return qq.join(r, "r_cell", how)
 
 
 def _tile_row_north_lat(t: int, n: int) -> float:
@@ -389,15 +402,22 @@ def knn_join(
     Contract (oracle-checkable): R(q) is a pure function of candidate
     counts, so the DuckDB oracle re-states the identical schedule in SQL.
     Distance is planar-equirectangular on (lat, lon) degrees, ties broken
-    by ref id.
+    by ref id. Query ids are unique keys: rows that share an id rank as
+    one query.
 
     Execution: one list of steps ``(zoom, ring, squared prune bound or
     None)`` run by one round body. Every step joins the still-unanswered
-    queries to the refs of their ring cells (_ring_candidates) and ranks
-    them; a non-final step keeps the queries it answers and passes the
-    rest (the stragglers) on, so each step's join input shrinks and the
-    number of rounds is logarithmic in max_ring/ring. The final step
-    ranks whatever its ring holds and stays lazy. The steps are:
+    queries to the refs of their ring cells (_ring_candidates: the ring is
+    a set by construction, joined on a linear cell key) and ranks them; a
+    non-final step keeps the queries it answers and passes the rest (the
+    stragglers) on, so each step's join input shrinks and the number of
+    rounds is logarithmic in max_ring/ring. A non-final step LEFT-joins,
+    so a ring cell that holds no ref still yields one NULL-ref row (ranked
+    last) and every query keeps a rank-1 row; its ranked rows, with the
+    query's coordinates and an answered flag, are its ONE checkpoint, and
+    the stragglers are a lazy filter of it (the unanswered rank-1 rows).
+    The final step inner-joins, ranks whatever its ring holds and stays
+    lazy. The steps are:
 
     * when ring > 1, a ring-1 DENSITY PROBE at zoom+2 (capped at 30),
       then at ``zoom``, for as long as _prune_bound_at gives a bound B.
@@ -416,7 +436,7 @@ def knn_join(
     At 100 TB, run zoom high enough that a cell holds O(k) refs.
     """
     from ..functions import exprs
-    from ..plans.checkpoints import checkpoint, release
+    from ..plans.checkpoints import checkpoint
 
     q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
     r = refs.select(ref_id, F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon"))
@@ -438,49 +458,48 @@ def knn_join(
     # at 1-ulp level and flips near-tie rankings
     dlat = F.col("q_lat") - F.col("r_lat")
     dlon = F.col("q_lon") - F.col("r_lon")
-    w_rank = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(ref_id).asc())
+    w_rank = Window.partitionBy(query_id).orderBy(F.col("dist").asc_nulls_last(), F.col(ref_id).asc_nulls_last())
     w_q = Window.partitionBy(query_id)
+    cols = [query_id, ref_id, F.col("dist").alias("dist2"), F.col("rn").alias("rank")]
+    out = [query_id, ref_id, "dist2", "rank"]
     remaining, rounds = q, []
     for i, (z, rg, b2) in enumerate(steps):
+        final = i == len(steps) - 1
         qz = remaining.withColumn("q_tx", exprs.tile_x(F.col("q_lon"), z)).withColumn(
             "q_ty", exprs.tile_y(F.col("q_lat"), z)
         )
-        rz = r.withColumn("r_cell", exprs.cell_of(F.col("r_lat"), F.col("r_lon"), z))
+        rz = r.withColumn("r_cell", _ring_key(exprs.tile_x(F.col("r_lon"), z), exprs.tile_y(F.col("r_lat"), z), z))
         topk = (
-            _ring_candidates(qz, rz, rg, z, query_id, n_salt=n_salt)
+            _ring_candidates(qz, rz, rg, z, query_id, n_salt=n_salt, how="inner" if final else "left")
             .withColumn("dist", dlat * dlat + dlon * dlon)
             .withColumn("rn", F.row_number().over(w_rank))
             # rank filter directly above row_number -> WindowGroupLimit
             # partial prunes to top-k per query BEFORE the exchange
             .filter(F.col("rn") <= k)
         )
-        cols = [query_id, ref_id, F.col("dist").alias("dist2"), F.col("rn").alias("rank")]
-        if i == len(steps) - 1:
+        if final:
             rounds.append(topk.select(*cols))  # last step: rank whatever exists
             break
-        # max(rn) == k <=> the ring held >= k candidates; max(dist) is the
-        # k-th distance (same partitioning, an already-satisfied sort: no
-        # extra exchange). Only the <= k x n_queries ranked rows are
-        # checkpointed, so the candidate join runs exactly once per step;
-        # answered queries' rows ARE this step's output.
-        done = F.max("rn").over(w_q) == k
+        # count(ref_id) == k <=> the ring held >= k refs (NULL rows of empty
+        # cells rank last and count nothing); max(dist) is the k-th
+        # distance (same partitioning, an already-satisfied sort: no extra
+        # exchange). Only the <= k x n_queries ranked rows are checkpointed,
+        # so the candidate join runs exactly once per step; answered
+        # queries' rows ARE this step's output, and the unanswered rank-1
+        # rows (one per straggler) carry their coordinates to the next step.
+        done = F.count(ref_id).over(w_q) == k
         if b2 is not None:
             done = done & (F.max("dist").over(w_q) < F.lit(b2))
-        topk, _ = checkpoint(topk.select(*cols, done.alias("__ok")))
-        answered = topk.filter(F.col("__ok")).drop("__ok")
-        rounds.append(answered)
-        # checkpoint the straggler set, counted in the checkpoint's own job:
-        # without it the next step's join would re-run the whole anti-join
-        # chain
-        stragglers, m = checkpoint(
-            remaining.join(answered.select(query_id).distinct(), query_id, "left_anti"),
-            n=F.count(F.lit(1)),
+        straggler = (F.col("rank") == 1) & ~F.col("__ok")
+        ranked, m = checkpoint(
+            topk.select(*cols, "q_lat", "q_lon", done.alias("__ok")),
+            n=F.count(F.when(straggler, 1)),
         )
-        release(remaining)  # superseded straggler set
-        remaining, n_stragglers = stragglers, m["n"]
+        rounds.append(ranked.filter(F.col("__ok")).select(*out))
+        remaining = ranked.filter(straggler).select(query_id, "q_lat", "q_lon")
         if round_stats is not None:
-            round_stats.append((rg, n_stragglers))
-        if n_stragglers == 0:
+            round_stats.append((rg, m["n"]))
+        if m["n"] == 0:
             break
     return reduce(DataFrame.unionByName, rounds)
 

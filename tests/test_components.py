@@ -9,6 +9,8 @@
   member of every neighborhood. The engine folds that self term into its
   aggregates, so equal per-round edge counts (and an equal number of
   rounds) pin the fold.
+* a round's physical plan holds no join: both stars take their minima
+  as window aggregates.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from collections import defaultdict
 import numpy as np
 import pytest
 
+from convert_spark.operators import components
 from convert_spark.operators.components import connected_components
 
 
@@ -133,3 +136,10 @@ class TestRoundStats:
         _cc(spark, GRAPHS[name], round_stats=stats)
         want = star_rounds(GRAPHS[name])
         assert stats == list(enumerate(want, start=1))
+
+
+class TestRoundPlan:
+    def test_round_plan_has_no_join(self, spark):
+        edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "u long, v long")
+        plan = components._small_star(components._large_star(edges))._jdf.queryExecution().executedPlan()
+        assert "Join" not in plan.toString(), plan.toString()

@@ -11,7 +11,9 @@
   ring holds k refs while a nearer ref sits just outside it), ring
   doubling (a sparse desert, plus a planted query with exactly k-1 refs in
   its first ring), a first step that answers every query (0 stragglers),
-  the antimeridian wrap, near-pole points (probe bound None), zoom 29/30
+  the antimeridian wrap, a zoom-2 grid whose rings 2 and 4 span more
+  than the 4 tile columns (2*ring+1 > 2^zoom: every column must join
+  exactly once), near-pole points (probe bound None), zoom 29/30
   (the deep probe zoom caps at 30, so at zoom 30 it is the operator
   zoom), k above the number of refs, and an empty query set.
 * ``salted_tile_join`` with a large ``n_salt``: same rows as ``tile_join``
@@ -142,12 +144,24 @@ def case_all_answered():
     return _frames(q_lat, q_lon, r_lat, r_lon), dict(k=3, zoom=6, ring=1, max_ring=4)
 
 
+def case_low_zoom():
+    """Zoom 2: ring 1 spans 3 of the 4 tile columns, rings 2 and 4 span
+    every column. Queries beyond 66.5N with refs mostly beyond 66.5S
+    stay stragglers through ring 2, so the final ring-4 step runs too."""
+    rng = np.random.Generator(np.random.PCG64(30))
+    q_lat = np.concatenate([rng.uniform(-60, 60, 20), rng.uniform(70, 80, 5)])
+    q_lon = rng.uniform(-179, 179, 25)
+    r_lat = np.concatenate([rng.uniform(10, 60, 2), rng.uniform(-80, -70, 4)])
+    r_lon = rng.uniform(-179, 179, 6)
+    return _frames(q_lat, q_lon, r_lat, r_lon), dict(k=3, zoom=2, ring=1, max_ring=4)
+
+
 def case_empty_queries():
     rng = np.random.Generator(np.random.PCG64(28))
     return _frames([], [], rng.uniform(-5, 5, 20), rng.uniform(-5, 5, 20)), dict(k=3, zoom=6, ring=1, max_ring=4)
 
 
-CASES = [case_dense, case_desert, case_antimeridian, case_pole, case_zoom29, case_zoom30,
+CASES = [case_dense, case_desert, case_antimeridian, case_low_zoom, case_pole, case_zoom29, case_zoom30,
          case_k_above_refs, case_all_answered, case_empty_queries]
 
 
@@ -232,6 +246,12 @@ class TestKnnSchedule:
         r_tiles = _tiles(spark, rs, "ref_id", kw["zoom"])
         _, ref_stats = schedule_reference(qs, rs, q_tiles, r_tiles, **kw)
         assert len(ref_stats) >= 3 and ref_stats[0][1] > ref_stats[1][1] > 0
+        (qs, rs), kw = case_low_zoom()
+        q_tiles = _tiles(spark, qs, "query_id", kw["zoom"])
+        r_tiles = _tiles(spark, rs, "ref_id", kw["zoom"])
+        _, ref_stats = schedule_reference(qs, rs, q_tiles, r_tiles, **kw)
+        # stragglers after ring 2: the final ring-4 step runs too
+        assert [rg for rg, _ in ref_stats] == [1, 2] and ref_stats[1][1] > 0
         (qs, rs), kw = case_all_answered()
         stats = []
         joins.knn_join(spark.createDataFrame(qs), spark.createDataFrame(rs), round_stats=stats, **kw)

@@ -1,5 +1,5 @@
 """Lifecycle of materialized intermediates under concurrency and in the
-kNN straggler loop (plans/checkpoints.py: ``checkpoint``, ``release`` and
+kNN step loop (plans/checkpoints.py: ``checkpoint``, ``release`` and
 ``hold``).
 
 Each operator releases only the checkpoints it created itself, found
@@ -9,7 +9,8 @@ therefore never free each other's checkpoint storage.
 Every eager checkpoint goes through ``checkpoint``, and the CC, kNN and
 PageRank loops read their counts from that checkpoint's own job: with
 ``DataFrame.count`` and ``DataFrame.collect`` raising, all three still
-return correct output.
+return correct output. A non-final kNN step takes exactly one
+checkpoint: its ranked rows, of which the stragglers are a lazy filter.
 """
 
 from __future__ import annotations
@@ -53,8 +54,8 @@ class TestKnnStragglerStorage:
     def test_superseded_straggler_sets_are_released(self, spark):
         """A sparse desert of 60 queries at ring 1 widens several times
         before the final step: each non-final step keeps its ranked
-        checkpoint (the result reads it), but only the LAST straggler set
-        survives."""
+        checkpoint (the result reads it), and nothing else persists —
+        the stragglers are a lazy filter of that checkpoint."""
         from convert_spark.operators.joins import knn_join
 
         refs = spark.createDataFrame(
@@ -70,8 +71,29 @@ class TestKnnStragglerStorage:
         out = knn_join(queries, refs, k=4, zoom=10, ring=1, max_ring=64, round_stats=stats)
         new = persistent_rdd_ids(spark) - pre
         assert len(stats) >= 2, stats
-        assert len(new) <= len(stats) + 1, (new, stats)
+        assert len(new) <= len(stats), (new, stats)
         assert out.count() == 60 * 4
+
+    def test_two_non_final_steps_take_two_checkpoints(self, spark, monkeypatch):
+        """The desert case at max_ring 4 runs rings 1 and 2 as non-final
+        steps: one ``checkpoint`` call each, none for the stragglers."""
+        from test_joins_equivalence import case_desert
+
+        from convert_spark.operators.joins import knn_join
+        from convert_spark.plans import checkpoints
+
+        real, calls = checkpoints.checkpoint, []
+
+        def counted(df, **metrics):
+            calls.append(sorted(metrics))
+            return real(df, **metrics)
+
+        monkeypatch.setattr(checkpoints, "checkpoint", counted)
+        (qs, rs), kw = case_desert()
+        stats: list = []
+        knn_join(spark.createDataFrame(qs), spark.createDataFrame(rs), round_stats=stats, **dict(kw, max_ring=4))
+        assert [rg for rg, _ in stats] == [1, 2] and stats[-1][1] > 0
+        assert len(calls) == 2, calls
 
 
 class TestLoopsRunNoDriverAction:
