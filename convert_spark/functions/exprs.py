@@ -102,10 +102,6 @@ def morton_cell(tx: Column, ty: Column, zoom: int) -> Column:
     return F.lit(1 << (2 * zoom)).cast("long") + _spread_bits(tx) + F.shiftleft(_spread_bits(ty), 1)
 
 
-def cell_of(lat: Column, lon: Column, zoom: int) -> Column:
-    return morton_cell(tile_x(lon, zoom), tile_y(lat, zoom), zoom)
-
-
 def cell_parent(cell: Column, steps: int = 1) -> Column:
     return F.shiftright(cell, 2 * steps)
 

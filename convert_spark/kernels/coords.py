@@ -1,7 +1,8 @@
 """Coordinate validation / arity fill — vectorized CheckCoords.
 
-Reference: /root/reference/convert.go:1200-1230 (CheckCoords) and
-convert.go:557-564 (string->float parse where failures become 0.0, not NULL).
+Reference: /root/reference/convert.go:1200-1230 (CheckCoords). The
+string->float parse before it (convert.go:557-564, failures become 0.0,
+not NULL) is the Catalyst expression ``extract.parse_double_go``.
 
 Row semantics preserved:
 
@@ -11,8 +12,7 @@ Row semantics preserved:
 * arity == 3        -> project x,y; keep the provided z
 
 The vectorized form takes parallel arrays instead of a per-row slice:
-``n_coords`` carries the original arity (NaN-aware helpers below derive it
-from nullable columns).
+``has_z`` carries the arity (3 vs 2) and a NaN x or y marks arity < 2.
 """
 
 from __future__ import annotations
@@ -20,20 +20,6 @@ from __future__ import annotations
 import numpy as np
 
 from .mercator import to3857
-
-
-def parse_float_go(values) -> np.ndarray:
-    """Go ``strconv.ParseFloat``-with-ignored-error parity: bad -> 0.0.
-
-    The reference ignores the parse error and keeps the zero value
-    (convert.go:557-564); a faithful Spark translation is
-    ``coalesce(col.cast('double'), lit(0.0))`` — this kernel is the
-    pandas-side equivalent for raw string inputs.
-    """
-    import pandas as pd
-
-    s = pd.to_numeric(pd.Series(values, dtype="object"), errors="coerce")
-    return s.fillna(0.0).to_numpy(dtype=np.float64)
 
 
 def check_coords(

@@ -136,12 +136,24 @@ _AC_CHROMA = (
 )
 
 # 8x8 DCT-II basis matrix A: A[u, x] = c(u)/2 * cos((2x+1) u pi / 16);
-# forward DCT = A @ block @ A.T, inverse = A.T @ coeff @ A (orthonormal)
+# forward DCT = A·block·Aᵀ, inverse = Aᵀ·coeff·A (orthonormal)
 _A = np.zeros((8, 8))
 for _u in range(8):
     _c = np.sqrt(0.125) if _u == 0 else 0.5
     for _x in range(8):
         _A[_u, _x] = _c * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
+
+
+def _mm8(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The product of (stacks of) 8x8 float64 matrices in one fixed order:
+    each term multiplied and rounded, then summed with k ascending. A BLAS
+    matmul picks its kernel per CPU, and an FMA kernel rounds differently,
+    which moved ``np.rint`` of a DCT coefficient and so the encoded bytes
+    by host. This order is also the twin decoder's IDCT order."""
+    out = a[..., :, 0, None] * b[..., None, 0, :]
+    for k in range(1, 8):
+        out = out + a[..., :, k, None] * b[..., None, k, :]
+    return out
 
 
 def _canonical_codes(counts, symbols):
@@ -805,7 +817,7 @@ def _finalize(frame, coeffs, qt, adobe_transform) -> np.ndarray:
         zz = cz.reshape(sh * sw, 64).astype(np.int64) * qzz
         nat = np.zeros((sh * sw, 64), dtype=np.int64)
         nat[:, _ZIGZAG] = zz
-        blocks = _A.T @ nat.reshape(-1, 8, 8).astype(np.float64) @ _A + level
+        blocks = _mm8(_mm8(_A.T, nat.reshape(-1, 8, 8).astype(np.float64)), _A) + level
         p = (
             blocks.reshape(sh, sw, 8, 8)
             .transpose(0, 2, 1, 3)
@@ -888,7 +900,7 @@ class _BitWriter:
 
 def _block_zz(plane, ys, xs, q, level: float = 128.0) -> np.ndarray:
     """Quantized zigzag-order coefficients for the 8x8 tile at (ys, xs)."""
-    coeff = np.rint((_A @ (_pad_block(plane, ys, xs) - level) @ _A.T) / q).astype(np.int64)
+    coeff = np.rint(_mm8(_mm8(_A, _pad_block(plane, ys, xs) - level), _A.T) / q).astype(np.int64)
     return coeff.reshape(-1)[_ZIGZAG]
 
 
@@ -996,7 +1008,7 @@ def _emit_ac_refine(bw, zz, ac_codes, al: int) -> None:
 
 
 def _encode_block(bw, block, q, dc_codes, ac_codes, pred, level: float = 128.0):
-    coeff = np.rint((_A @ (block - level) @ _A.T) / q).astype(np.int64)
+    coeff = np.rint(_mm8(_mm8(_A, block - level), _A.T) / q).astype(np.int64)
     zz = coeff.reshape(-1)[_ZIGZAG]
     _emit_dc(bw, int(zz[0]), pred, dc_codes)
     _emit_ac(bw, zz, ac_codes)

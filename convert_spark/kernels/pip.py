@@ -7,11 +7,9 @@ one scalar PIP per point; here a single numpy kernel tests a whole Arrow
 batch of points against a polygon set at once — the executor-side "refine"
 half of the broadcast spatial join (SURVEY.md §2.5).
 
-Polygon encoding (columnar, shuffle-friendly):
-    vertices : (V, 2) float64 — all ring vertices concatenated
-    ring_offsets : (R + 1,) int64 — vertex slice per ring
-    ring_poly : (R,) int64 — polygon index per ring
-    ring_is_hole : (R,) bool — even-odd alternative also supported
+A polygon is a list of rings, each closed once by ``close_ring``; the
+broadcast join closes its polygon layer at index-build time and the mesh
+drape per call, and both test points with ``in_rings``.
 
 Even-odd rule: a point is inside a polygon iff the total crossing count
 over *all* of the polygon's rings (outer + holes) is odd — holes need no
@@ -44,44 +42,30 @@ def ring_crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
     return hit.sum(axis=1)
 
 
-def _close_ring(ring: np.ndarray) -> np.ndarray:
+def close_ring(ring) -> np.ndarray:
+    """A ring's (x, y) vertices as a float64 (k, 2) array whose last vertex
+    repeats its first (extra coordinates such as z are dropped)."""
+    ring = np.asarray(ring, dtype=np.float64)[:, :2]
     if ring.shape[0] >= 1 and not np.array_equal(ring[0], ring[-1]):
         return np.vstack([ring, ring[:1]])
     return ring
 
 
-def points_in_rings(
-    px: np.ndarray,
-    py: np.ndarray,
-    vertices: np.ndarray,
-    ring_offsets: np.ndarray,
-    ring_poly: np.ndarray,
-    n_polys: int,
-) -> np.ndarray:
-    """(N_points, n_polys) bool matrix: even-odd containment per polygon."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    crossings = np.zeros((px.size, n_polys), dtype=np.int64)
-    for r in range(len(ring_offsets) - 1):
-        ring = _close_ring(vertices[ring_offsets[r] : ring_offsets[r + 1]])
-        if ring.shape[0] < 4:  # degenerate ring (<3 distinct vertices)
-            continue
-        crossings[:, ring_poly[r]] += ring_crossings(px, py, ring)
+def in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
+    """Even-odd containment of each point in a set of closed rings: a point
+    crossing an even count of ring edges (outer + holes) is outside, the
+    doughnut filter. Rings under 4 vertices (< 3 distinct) are skipped."""
+    crossings = np.zeros(px.size, dtype=np.int64)
+    for ring in rings:
+        if ring.shape[0] >= 4:
+            crossings += ring_crossings(px, py, ring)
     return (crossings & 1).astype(bool)
 
 
 def point_in_multipolygon(px: np.ndarray, py: np.ndarray, polygons: list) -> np.ndarray:
-    """Convenience form over nested lists: ``polygons`` is GeoJSON-style
-    MultiPolygon nesting ``[poly][ring][vertex][xy]``. Returns a bool mask —
-    inside any outer ring and not in a hole (even-odd).
+    """Containment in a GeoJSON-style MultiPolygon, nested
+    ``[poly][ring][vertex][xy]``: a bool mask, inside any outer ring and
+    not in a hole (even-odd).
     """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    crossings = np.zeros(px.size, dtype=np.int64)
-    for poly in polygons:
-        for ring in poly:
-            arr = _close_ring(np.asarray(ring, dtype=np.float64)[:, :2])
-            if arr.shape[0] < 4:
-                continue
-            crossings += ring_crossings(px, py, arr)
-    return (crossings & 1).astype(bool)
+    rings = [close_ring(ring) for poly in polygons for ring in poly]
+    return in_rings(np.asarray(px, dtype=np.float64), np.asarray(py, dtype=np.float64), rings)

@@ -158,9 +158,11 @@ def level_of(cid: np.ndarray) -> np.ndarray:
     return MAX_LEVEL - (tz >> 1)
 
 
-def parent_at(cid: np.ndarray, level: int) -> np.ndarray:
+def parent_at(cid, level) -> np.ndarray:
+    """Ancestor at ``level``: an int, or one level per row."""
     c = np.asarray(cid, dtype=np.uint64)
-    new_lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
+    lv = np.asarray(level, dtype=np.uint64)
+    new_lsb = np.uint64(1) << (np.uint64(2) * (np.uint64(MAX_LEVEL) - lv))
     return (c & (~(new_lsb - np.uint64(1)))) | new_lsb
 
 
@@ -170,8 +172,9 @@ def token(cid) -> str:
     return s if s else "X"
 
 
-def face_ij_of_vec(cids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized inverse of cellid_from_face_ij for leaf cells."""
+def face_ij_of(cids) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Inverse of cellid_from_face_ij for leaf cells: (face, i, j) arrays
+    (orientation dropped)."""
     c = np.asarray(cids, dtype=np.uint64)
     face = (c >> np.uint64(POS_BITS)).astype(np.int64)
     bits = face & _SWAP
@@ -188,83 +191,49 @@ def face_ij_of_vec(cids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray
     return face, i, j
 
 
-def parent_at_vec(cid: np.ndarray, level: np.ndarray) -> np.ndarray:
-    """parent_at with a per-row level array."""
-    c = np.asarray(cid, dtype=np.uint64)
-    lv = np.asarray(level, dtype=np.uint64)
-    new_lsb = np.uint64(1) << (np.uint64(2) * (np.uint64(MAX_LEVEL) - lv))
-    return (c & (~(new_lsb - np.uint64(1)))) | new_lsb
+def _cellid_from_face_ij_wrap(f: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Leaf cells at (f, i, j) where (i, j) may be one step off the face.
+    Rows off the face take the public FromFaceIJWrap: project the leaf
+    center in LINEAR st back onto the sphere and re-resolve. (On the face
+    the wrap gives the same cell, since u = (2i+1-2^30)/2^30 is exact and
+    the round trip only divides by ±1; skipping it there is only faster.)"""
+    out = cellid_from_face_ij(f, np.clip(i, 0, MAX_SIZE - 1), np.clip(j, 0, MAX_SIZE - 1))
+    off = (i < 0) | (i >= MAX_SIZE) | (j < 0) | (j >= MAX_SIZE)
+    if off.any():
+        limit = math.nextafter(1.0, 2.0)
+        u = np.clip(((np.clip(i[off], -1, MAX_SIZE) << 1) + 1 - MAX_SIZE) / MAX_SIZE, -limit, limit)
+        v = np.clip(((np.clip(j[off], -1, MAX_SIZE) << 1) + 1 - MAX_SIZE) / MAX_SIZE, -limit, limit)
+        nf, nu, nv = xyz_to_face_uv(face_uv_to_xyz(f[off], u, v))
+        ni = np.clip(np.floor(MAX_SIZE * 0.5 * (nu + 1.0)).astype(np.int64), 0, MAX_SIZE - 1)
+        nj = np.clip(np.floor(MAX_SIZE * 0.5 * (nv + 1.0)).astype(np.int64), 0, MAX_SIZE - 1)
+        out[off] = cellid_from_face_ij(nf, ni, nj)
+    return out
 
 
-def face_ij_of(cid: int) -> tuple[int, int, int]:
-    """Scalar inverse: leaf-ish cell id -> (face, i, j) (orientation dropped)."""
-    c = int(cid)
-    face = c >> POS_BITS
-    bits = face & _SWAP
-    i = j = 0
-    for k in range(7, -1, -1):
-        nbits = _LOOKUP_BITS if k != 7 else (MAX_LEVEL - 7 * _LOOKUP_BITS)
-        bits += ((c >> (k * 2 * _LOOKUP_BITS + 1)) & ((1 << (2 * nbits)) - 1)) << 2
-        bits = int(_LOOKUP_IJ[bits])
-        i += (bits >> (_LOOKUP_BITS + 2)) << (k * _LOOKUP_BITS)
-        j += ((bits >> 2) & ((1 << _LOOKUP_BITS) - 1)) << (k * _LOOKUP_BITS)
-        bits &= _SWAP | _INVERT
-    return face, i, j
-
-
-def _cellid_from_face_ij_wrap(f: int, i: int, j: int) -> int:
-    """Neighbor helper across face boundaries (public algorithm: project the
-    just-out-of-range leaf center back onto the sphere and re-resolve)."""
-    i = max(-1, min(MAX_SIZE, i))
-    j = max(-1, min(MAX_SIZE, j))
-    scale = 1.0 / MAX_SIZE
-    limit = math.nextafter(1.0, 2.0)
-    u = max(-limit, min(limit, scale * ((i << 1) + 1 - MAX_SIZE)))
-    v = max(-limit, min(limit, scale * ((j << 1) + 1 - MAX_SIZE)))
-    p = face_uv_to_xyz(np.array([f]), np.array([u]), np.array([v]))
-    nf, nu, nv = xyz_to_face_uv(p)
-    # linear ST here (0.5*(u+1)), matching the published wrap logic
-    ni = np.clip(np.floor(MAX_SIZE * 0.5 * (nu + 1.0)).astype(np.int64), 0, MAX_SIZE - 1)
-    nj = np.clip(np.floor(MAX_SIZE * 0.5 * (nv + 1.0)).astype(np.int64), 0, MAX_SIZE - 1)
-    return int(cellid_from_face_ij(nf, ni, nj)[0])
-
-
-def _cellid_from_face_ij_same(f: int, i: int, j: int, same_face: bool) -> int:
-    if same_face:
-        return int(cellid_from_face_ij(np.array([f]), np.array([i]), np.array([j]))[0])
-    return _cellid_from_face_ij_wrap(f, i, j)
-
-
-def vertex_neighbors(cid: int, level: int) -> list[int]:
-    """The <=4 cells at ``level`` sharing the leaf cell's closest vertex
-    (public VertexNeighbors algorithm)."""
-    # halfSize = sizeIJ(level + 1); size = halfSize << 1 (public algorithm)
-    half_size = 1 << (MAX_LEVEL - (level + 1))
-    size = half_size << 1
-    f, i, j = face_ij_of(cid)
-    if i & half_size:
-        ioff, isame = size, (i + size) < MAX_SIZE
-    else:
-        ioff, isame = -size, (i - size) >= 0
-    if j & half_size:
-        joff, jsame = size, (j + size) < MAX_SIZE
-    else:
-        joff, jsame = -size, (j - size) >= 0
-    res = [
-        int(parent_at(np.array([cid], dtype=np.uint64), level)[0]),
-        int(parent_at(np.array([_cellid_from_face_ij_same(f, i + ioff, j, isame)], dtype=np.uint64), level)[0]),
-        int(parent_at(np.array([_cellid_from_face_ij_same(f, i, j + joff, jsame)], dtype=np.uint64), level)[0]),
+def vertex_neighbors(cids, levels) -> list[list[int]]:
+    """VertexNeighbors over (leaf cell, level) rows: the cells at ``level``
+    sharing the leaf's closest vertex (public algorithm), in its emit
+    order. ``levels`` is an int or one per row. A neighbour off the
+    leaf's face resolves through FromFaceIJWrap; at a face corner (both
+    steps leave the face) the diagonal is dropped, so that row has 3."""
+    c = np.asarray(cids, dtype=np.uint64)
+    lv = np.broadcast_to(np.asarray(levels, dtype=np.int64), c.shape)
+    f, i, j = face_ij_of(c)
+    half = np.int64(1) << (MAX_LEVEL - (lv + 1))  # sizeIJ(level + 1)
+    size = half << 1
+    ioff = np.where((i & half) != 0, size, -size)
+    joff = np.where((j & half) != 0, size, -size)
+    isame = (i + ioff >= 0) & (i + ioff < MAX_SIZE)
+    jsame = (j + joff >= 0) & (j + joff < MAX_SIZE)
+    leafs = [
+        c,
+        _cellid_from_face_ij_wrap(f, i + ioff, j),
+        _cellid_from_face_ij_wrap(f, i, j + joff),
+        _cellid_from_face_ij_wrap(f, i + ioff, j + joff),
     ]
-    if isame or jsame:
-        res.append(
-            int(
-                parent_at(
-                    np.array([_cellid_from_face_ij_same(f, i + ioff, j + joff, isame and jsame)], dtype=np.uint64),
-                    level,
-                )[0]
-            )
-        )
-    return res
+    cells = parent_at(np.stack(leafs, axis=1), lv[:, None]).tolist()
+    width = np.where(isame | jsame, 4, 3).tolist()
+    return [row[:w] for row, w in zip(cells, width)]
 
 
 # --- cap / covering ---------------------------------------------------------
@@ -424,18 +393,6 @@ def _normalize_points(raw: np.ndarray) -> np.ndarray:
     return out
 
 
-def _simple_crossing(a, b, c, d):
-    """s2.SimpleCrossing: does minor arc AB cross minor arc CD strictly
-    interior to both? a,b broadcast against c,d (…,3) arrays."""
-    ab = np.cross(a, b)
-    acb = -(ab * c).sum(axis=-1)
-    bda = (ab * d).sum(axis=-1)
-    cd = np.cross(c, d)
-    cbd = -(cd * b).sum(axis=-1)
-    dac = (cd * a).sum(axis=-1)
-    return (acb * bda > 0) & (acb * cbd > 0) & (cbd * dac > 0) & (dac * bda > 0)
-
-
 def _exact_contains_scalar(verts_row: np.ndarray, p: np.ndarray) -> bool:
     """EXACT-rational containment for one closed chain — the same
     centroid-probe crossing-parity algorithm as the vectorized path, but
@@ -532,8 +489,8 @@ def _loops_contain_point(verts: np.ndarray, p: np.ndarray) -> np.ndarray:
     # v0/v1 plane (|det| of unit vectors -> absolute ~ulp scale)
     tri = np.abs((np.cross(verts[:, 0:1, :], verts[:, 1:2, :]) * verts[:, 2:-1, :]).sum(axis=-1))
     maybe_degenerate = (tri < 4e-16).all(axis=1) | (cn[:, 0] == 0)
-    # crossing predicates with tie detection (same algebra as
-    # _simple_crossing, kept inline to expose the four products)
+    # crossing predicates with tie detection (s2.SimpleCrossing: minor
+    # arc centroid->p strictly crosses edge a->b; four products exposed)
     ab = np.cross(cen, p[None, :])[:, None, :]
     acb = -(ab * a).sum(axis=-1)
     bda = (ab * b).sum(axis=-1)
@@ -675,48 +632,6 @@ def _loop_cap_batch(raw_pts: np.ndarray):
     return center, radius
 
 
-def cap_cell_union_bound(center_xyz: np.ndarray, radius_rad: float) -> list[int]:
-    """Cap -> covering cells (Cap.CellUnionBound): the vertex neighbors of
-    the center's cell at MinWidthMetric.MaxLevel(radius) - 1; the 6 face
-    cells when that level is < 0 (radius unscaled — golang/geo passes
-    c.Radius().Radians() directly)."""
-    level = int(_min_width_max_level(float(radius_rad))) - 1
-    if level < 0:
-        return [(f << POS_BITS) | (1 << (POS_BITS - 1)) for f in range(6)]
-    cid = int(cellid_from_point(np.asarray(center_xyz).reshape(1, 3))[0])
-    return vertex_neighbors(cid, level)
-
-
-def vertex_neighbors_vec(cids: np.ndarray, levels: np.ndarray) -> list[list[int]]:
-    """Vectorized VertexNeighbors over (leaf cell, level) rows.
-
-    Same-face neighbors are computed fully vectorized; the rare rows whose
-    neighbor crosses a face boundary fall back to the scalar path."""
-    c = np.asarray(cids, dtype=np.uint64)
-    lv = np.asarray(levels, dtype=np.int64)
-    f, i, j = face_ij_of_vec(c)
-    half = np.int64(1) << (MAX_LEVEL - (lv + 1))
-    size = half << 1
-    ioff = np.where((i & half) != 0, size, -size)
-    isame = np.where((i & half) != 0, (i + size) < MAX_SIZE, (i - size) >= 0)
-    joff = np.where((j & half) != 0, size, -size)
-    jsame = np.where((j & half) != 0, (j + size) < MAX_SIZE, (j - size) >= 0)
-    wrap = ~(isame & jsame)
-    out: list[list[int]] = [None] * c.size  # type: ignore[list-item]
-    ok = ~wrap
-    if ok.any():
-        base = parent_at_vec(c[ok], lv[ok])
-        n_i = parent_at_vec(cellid_from_face_ij(f[ok], i[ok] + ioff[ok], j[ok]), lv[ok])
-        n_j = parent_at_vec(cellid_from_face_ij(f[ok], i[ok], j[ok] + joff[ok]), lv[ok])
-        n_ij = parent_at_vec(cellid_from_face_ij(f[ok], i[ok] + ioff[ok], j[ok] + joff[ok]), lv[ok])
-        idxs = np.where(ok)[0]
-        for row, a, b_, cc, d in zip(idxs, base, n_i, n_j, n_ij):
-            out[row] = [int(a), int(b_), int(cc), int(d)]
-    for row in np.where(wrap)[0]:
-        out[row] = vertex_neighbors(int(c[row]), int(lv[row]))
-    return out
-
-
 def s2covering_tokens_batch(lx, ly, rx, uy, elev_fn) -> list[list[str]]:
     """Vectorized bbox -> quirky 8-char S2 covering tokens
     (convert.go:1151-1192; the per-tile finalize kernel at cluster scale)."""
@@ -746,19 +661,16 @@ def s2covering_tokens_batch(lx, ly, rx, uy, elev_fn) -> list[list[str]]:
     raw = np.stack([cx, cy, np.repeat(cz[k], 4).reshape(-1, 4)], axis=2)
     center, radius = _loop_cap_batch(raw)
 
+    # Cap.CellUnionBound: the vertex neighbours of the center's leaf at
+    # MinWidthMetric.MaxLevel(radius) - 1 (radius unscaled, as golang/geo
+    # passes c.Radius().Radians()); the 6 face cells below level 0
     lvl = np.asarray(_min_width_max_level(radius), dtype=np.int64) - 1
-    cells_per_row: list[list[int]] = [None] * k.size  # type: ignore[list-item]
     deep = lvl >= 0
-    if deep.any():
-        leafs = cellid_from_point(center[deep])
-        neigh = vertex_neighbors_vec(leafs, lvl[deep])
-        for pos, row in enumerate(np.where(deep)[0]):
-            cells_per_row[row] = neigh[pos]
-    for row in np.where(~deep)[0]:
-        cells_per_row[row] = [(f << POS_BITS) | (1 << (POS_BITS - 1)) for f in range(6)]
-    for pos, row in enumerate(k):
+    neigh = iter(vertex_neighbors(cellid_from_point(center[deep]), lvl[deep]))
+    faces = [(f << POS_BITS) | (1 << (POS_BITS - 1)) for f in range(6)]
+    for row, d in zip(k, deep):
         # no dedup — reference parity (convert.go:1180-1192)
-        out[row] = [token(c)[:8] for c in cells_per_row[pos]]
+        out[row] = [token(c)[:8] for c in (next(neigh) if d else faces)]
     return out
 
 

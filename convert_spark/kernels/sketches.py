@@ -94,26 +94,16 @@ def minhash_signature(text: str, num_perm: int = 64, k: int = 3, seed: int = 42)
     return minhash_signatures(pd.Series([text]), num_perm, k, seed)[0]
 
 
-def lsh_band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
-    """Split a signature into ``bands`` rows-per-band groups; each band
-    hashes to a bucket key. Docs sharing any band key are candidates."""
-    sig = np.asarray(sig, dtype=np.int64)
-    rows = sig.size // bands
-    keys = []
-    for bidx in range(bands):
-        chunk = sig[bidx * rows : (bidx + 1) * rows]
-        h = fnv1a64_bytes(chunk.tobytes() + bytes([bidx]))
-        keys.append(int(h & 0x7FFFFFFFFFFFFFFF))
-    return keys
-
-
 def lsh_band_keys_batch(sigs: np.ndarray, bands: int = 16) -> np.ndarray:
-    """(N, bands) int64 band keys for a whole signature batch —
-    bit-identical to per-row lsh_band_keys (tested), but the FNV-1a byte
-    walk runs VECTORIZED across documents: the per-doc/per-byte Python
-    loop was the dominant cost of the MinHash key UDF (round 8). The
-    walk is ``bands x (rows*8 + 1)`` numpy passes over the doc axis;
-    uint64 arithmetic wraps mod 2^64 exactly like the masked scalar."""
+    """(N, bands) int64 band keys for a whole signature batch: each band's
+    ``rows`` int64 values as little-endian bytes plus the band index byte,
+    FNV-1a hashed and masked to 63 bits. Docs sharing any band key are
+    candidates. The byte walk runs VECTORIZED across documents (a per-doc,
+    per-byte Python loop was the dominant cost of the MinHash key UDF):
+    ``bands x (rows*8 + 1)`` numpy passes over the doc axis, uint64
+    arithmetic wrapping mod 2^64. Checked against the scalar twin
+    ``tests/sketch_reference_impl.lsh_band_keys_s``
+    (``tests/test_kernels_text.py::TestTwinAgreement::test_band_keys``)."""
     from .textkit import _FNV_OFFSET, _FNV_PRIME
 
     sigs = np.asarray(sigs, dtype=np.int64)

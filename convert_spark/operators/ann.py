@@ -236,6 +236,17 @@ def neardup_blocked(
     return grid.mapInPandas(emit, schema=f"{id_a} long, {id_b} long, sim_r double")
 
 
+def lsh_vec_keys(mat: np.ndarray, planes: np.ndarray, bands: int, bits_per_band: int) -> np.ndarray:
+    """(n, bands) int64 hyperplane-LSH keys: per band, the sign bits of
+    ``bits_per_band`` projections packed low bit first, plus the band
+    index in bits 32 and up."""
+    bits = (mat @ planes.T) > 0  # (n, bands*bits)
+    weights = 1 << np.arange(bits_per_band, dtype=np.int64)
+    # one reshaped matmul: (n, bands, bits) @ weights + band prefix
+    ks = bits.reshape(len(mat), bands, bits_per_band) @ weights
+    return ks + (np.arange(bands, dtype=np.int64) << 32)[None, :]
+
+
 def with_lsh_keys(df: DataFrame, vec_col: str = "embedding", dim: int = 64, bands: int = 8, bits_per_band: int = 8) -> DataFrame:
     """Add ``bucket`` rows: (*, band, key) — one row per band, exploded."""
     planes = _hyperplanes(dim, bands * bits_per_band)
@@ -243,12 +254,7 @@ def with_lsh_keys(df: DataFrame, vec_col: str = "embedding", dim: int = 64, band
     @F.pandas_udf("array<long>")
     def keys(vecs: pd.Series) -> pd.Series:
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (mat @ planes.T) > 0  # (n, bands*bits)
-        weights = 1 << np.arange(bits_per_band, dtype=np.int64)
-        # one reshaped matmul: (n, bands, bits) @ weights + band prefix
-        ks = bits.reshape(len(mat), bands, bits_per_band) @ weights
-        ks = ks + (np.arange(bands, dtype=np.int64) << 32)[None, :]
-        return pd.Series(list(ks))
+        return pd.Series(list(lsh_vec_keys(mat, planes, bands, bits_per_band)))
 
     # optimizer fence (guide §4.4): the posexplode below carries an implicit
     # size>0/isnotnull filter that Catalyst otherwise pushes down WITH a

@@ -8,9 +8,10 @@ conversion (DatasetFrom{CSV,GEOJSON,KML,GPX} finalize path):
   vertex through CheckCoords (project to 3857 cm-rounded; 2D vertices get
   DEM z sampled at the ORIGINAL coords; 3D keep z); a bad vertex errors
   the whole feature (GeoJSON semantics, convert.go:653-656).
-* bbox aggregation = BBOXListener (convert.go:1099-1134) as a built-in
-  groupBy min/max over the projected vertices (pre-drape ring vertices
-  included, drape clouds excluded — matching the channel feed order).
+* bbox aggregation = BBOXListener (convert.go:1099-1134), computed inside
+  ``assemble_datasets``' per-dataset group as the min/max over the
+  projected vertices (pre-drape ring vertices included, drape clouds
+  excluded — matching the channel feed order).
 * ``drape_meshes`` = the Polygon/MultiPolygon 2D drape
   (convert.go:711-730, 751-783): DEM pointcloud over the outer geometry
   (MultiPolygon samples part [0] only — quirk at convert.go:754), PIP
@@ -37,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import coords
 from ..kernels import delaunay as delaunay_kernel
 from ..kernels import dem as dem_kernel
 from ..kernels import geometrics, pip
@@ -64,18 +66,13 @@ def _check_verts(verts: np.ndarray) -> np.ndarray | None:
     """
     if verts.size == 0 or verts.ndim != 2:
         return None
-    x, y = verts[:, 0], verts[:, 1]
-    if np.isnan(x).any() or np.isnan(y).any():
+    z = verts[:, 2]
+    px, py, pz, valid = coords.check_coords(
+        verts[:, 0], verts[:, 1], z, ~np.isnan(z), elev_fn=dem_kernel.get_elev
+    )
+    if not valid.all():
         return None  # arity < 2 -> feature error
-    px, py = mercator.to3857(x, y)
-    z_given = verts[:, 2]
-    missing = np.isnan(z_given)
-    z = z_given
-    if missing.any():
-        filled = dem_kernel.get_elev(x[missing], y[missing])  # original coords (convert.go:1213)
-        z = z_given.copy()
-        z[missing] = np.where(np.isnan(filled), 0.0, filled)
-    return np.stack([px, py, z], axis=1)
+    return np.stack([px, py, pz], axis=1)
 
 
 def normalize_features(features: DataFrame) -> DataFrame:
@@ -173,17 +170,6 @@ def drape_meshes(normalized: DataFrame) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return cand.mapInPandas(run, schema=MESH_SCHEMA)
-
-
-def dataset_bbox(normalized: DataFrame) -> DataFrame:
-    """BBOXListener as a built-in agg over exploded projected vertices."""
-    v = normalized.select("dataset_id", F.explode("verts").alias("v"))
-    return v.groupBy("dataset_id").agg(
-        F.min(F.col("v")[0]).alias("lx"),
-        F.max(F.col("v")[0]).alias("rx"),
-        F.min(F.col("v")[1]).alias("ly"),
-        F.max(F.col("v")[1]).alias("uy"),
-    )
 
 
 def _attrs_json(attrs: dict | None, keys=None) -> list[dict]:

@@ -35,34 +35,25 @@ from ..kernels import strtree as strtree_kernel
 
 
 def _polygon_index(polygons_pdf: pd.DataFrame):
-    """Driver-side build: columnar ring encoding + STRtree over poly bboxes.
+    """Driver-side build: each polygon's rings closed once (the refine
+    would otherwise re-close every candidate ring on every Arrow batch)
+    + STRtree over the polygon bboxes.
 
     polygons_pdf columns: poly_id, rings ([ring][vertex][lon,lat]).
     """
-    closed_rings: list[list[np.ndarray]] = []  # per polygon: CLOSED rings
+    closed_rings = [[pip_kernel.close_ring(r) for r in rings] for rings in polygons_pdf["rings"]]
     boxes = np.empty((len(polygons_pdf), 4), dtype=np.float64)
-    for i, rings in enumerate(polygons_pdf["rings"]):
-        minx = miny = np.inf
-        maxx = maxy = -np.inf
-        poly_rings = []
-        for ring in rings:
-            arr = np.asarray(ring, dtype=np.float64)[:, :2]
-            # close once at build time — the refine loop would otherwise
-            # re-close every candidate ring on every Arrow batch
-            poly_rings.append(pip_kernel._close_ring(arr))
-            minx = min(minx, arr[:, 0].min())
-            maxx = max(maxx, arr[:, 0].max())
-            miny = min(miny, arr[:, 1].min())
-            maxy = max(maxy, arr[:, 1].max())
-        closed_rings.append(poly_rings)
-        boxes[i] = (minx, miny, maxx, maxy)
-    payload = {
+    for i, rings in enumerate(closed_rings):
+        # extrema over the per-ring extrema, a NaN one skipped; a polygon
+        # without rings keeps (inf, inf, -inf, -inf) and matches nothing
+        lo = np.fmin.reduce(np.reshape([r.min(axis=0) for r in rings], (-1, 2)), axis=0, initial=np.inf)
+        hi = np.fmax.reduce(np.reshape([r.max(axis=0) for r in rings], (-1, 2)), axis=0, initial=-np.inf)
+        boxes[i] = (*lo, *hi)
+    return {
         "rings": closed_rings,
         "poly_ids": polygons_pdf["poly_id"].to_numpy(np.int64),
         "tree": strtree_kernel.STRtree(boxes),
-        "n_polys": len(polygons_pdf),
     }
-    return payload
 
 
 def _free_name(base: str, *dfs: DataFrame) -> str:
@@ -96,16 +87,8 @@ def _match_pairs(idx, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.nd
         ends = np.append(starts[1:], ii_s.size)
         inside_s = np.zeros(qi.size, dtype=bool)
         for poly, s, e in zip(uniq, starts, ends):
-            pxs = px[qi_s[s:e]]
-            pys = py[qi_s[s:e]]
-            crossings = np.zeros(int(e - s), dtype=np.int64)
-            # even-odd over ALL rings: a point crossing an even count of
-            # ring edges (outer + hole) is outside — the doughnut filter
-            for ring in idx["rings"][poly]:
-                if ring.shape[0] < 4:
-                    continue
-                crossings += pip_kernel.ring_crossings(pxs, pys, ring)
-            inside_s[s:e] = (crossings & 1).astype(bool)
+            sel = qi_s[s:e]
+            inside_s[s:e] = pip_kernel.in_rings(px[sel], py[sel], idx["rings"][poly])
         inside = np.zeros(qi.size, dtype=bool)
         inside[order] = inside_s
         qi, ii = qi[inside], ii[inside]

@@ -8,7 +8,10 @@ and either
 * ``stream_tile_counts``: incremental windowed aggregation with a
   watermark (late-page tolerance), or
 * ``foreach_batch_pipeline``: exactly-once-style micro-batch reuse of the
-  batch stages with idempotent parquet sinks per epoch.
+  batch stages with idempotent parquet sinks per epoch, or
+* ``foreach_batch_incremental``: each micro-batch folded into a versioned
+  per-tile dataset state (``tiles.merge_tile_datasets``), committed per
+  epoch through a ``_LATEST`` pointer and a snapshot record.
 
 Local smoke: memory sink + ``processAllAvailable()`` drives a directory of
 files to completion synchronously (tests/test_platform.py).

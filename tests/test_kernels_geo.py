@@ -76,10 +76,6 @@ class TestCheckCoords:
         expected = dem.get_elev(px[:1], py[:1])[0]
         assert pz[0] == expected and np.isfinite(pz[0])
 
-    def test_parse_float_go(self):
-        out = coords.parse_float_go(["1.5", "abc", "", None, "-2"])
-        np.testing.assert_allclose(out, [1.5, 0.0, 0.0, 0.0, -2.0])
-
     def test_elev_failure_becomes_zero(self):
         def bad_elev(x, y):
             return np.full(x.shape, np.nan)
@@ -210,13 +206,6 @@ class TestPIP:
         p2 = [[[5.0, 5.0], [6.0, 5.0], [6.0, 6.0], [5.0, 6.0]]]
         got = pip.point_in_multipolygon(np.array([0.5, 5.5, 3.0]), np.array([0.5, 5.5, 3.0]), [p1, p2])
         assert got.tolist() == [True, True, False]
-
-    def test_columnar_matrix(self):
-        verts = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [20, 20], [30, 20], [30, 30], [20, 30]], dtype=float)
-        offs = np.array([0, 4, 8])
-        ring_poly = np.array([0, 1])
-        m = pip.points_in_rings(np.array([5.0, 25.0]), np.array([5.0, 25.0]), verts, offs, ring_poly, 2)
-        assert m.tolist() == [[True, False], [False, True]]
 
     def test_rotation_invariance(self):
         ring = np.array(self.UNIT[0])
@@ -370,13 +359,34 @@ class TestS2:
 
     def test_vertex_neighbors(self):
         cid = int(s2.cellid_from_latlng(np.array([41.85]), np.array([-87.65]))[0])
-        vn = s2.vertex_neighbors(cid, 10)
+        vn = s2.vertex_neighbors([cid], 10)[0]
         assert len(vn) in (3, 4)
         assert len(set(vn)) == len(vn)
         for v in vn:
             assert s2.level_of(np.array([v], dtype=np.uint64))[0] == 10
         # the cell's own ancestor is among them
         assert int(s2.parent_at(np.array([cid], dtype=np.uint64), 10)[0]) in vn
+
+    def test_vertex_neighbors_on_face_edges(self):
+        """Leaves on cube edges and corners, where neighbours leave the
+        face (FromFaceIJWrap; a corner row has 3 cells), at every level
+        0-29, against the scalar twin."""
+        import s2_reference_impl as ref
+
+        rng = np.random.default_rng(17)
+        n, m = 3000, s2.MAX_SIZE
+        edge = np.array([0, 1, m - 2, m - 1])
+        f = rng.integers(0, 6, n)
+        i, j = rng.integers(0, m, n), rng.integers(0, m, n)
+        kind = np.arange(n) % 3  # i on an edge, j on an edge, or both (corner)
+        i = np.where(kind != 1, edge[rng.integers(0, 4, n)], i)
+        j = np.where(kind != 0, edge[rng.integers(0, 4, n)], j)
+        cids = s2.cellid_from_face_ij(f, i, j)
+        levels = np.arange(n) % 30
+        got = s2.vertex_neighbors(cids, levels)
+        want = [ref.vertex_neighbors_s(int(c), int(lv)) for c, lv in zip(cids, levels)]
+        assert got == want
+        assert {len(cells) for cells in got} == {3, 4}
 
     def test_covering_quirk(self):
         from convert_spark.kernels import dem as demk
@@ -400,6 +410,9 @@ class TestS2:
 
 class TestS2CoveringBatch:
     def test_batch_matches_scalar(self):
+        """The batch kernel against the scalar twin's full covering chain."""
+        import s2_reference_impl as ref
+
         from convert_spark.kernels import dem as demk
 
         rng = np.random.RandomState(3)
@@ -410,7 +423,7 @@ class TestS2CoveringBatch:
         x2, y2 = mercator.to3857(np.minimum(lon + spans, 180.0), np.minimum(lat + spans, 85.0))
         batch = s2.s2covering_tokens_batch(x1, y1, x2, y2, demk.get_elev)
         for i in range(300):
-            scalar = s2.s2covering_tokens(x1[i], y1[i], x2[i], y2[i], demk.get_elev)
+            scalar = ref.covering_tokens_s(float(x1[i]), float(y1[i]), float(x2[i]), float(y2[i]))
             assert batch[i] == scalar, (i, lon[i], lat[i], spans[i])
 
     def test_batch_handles_nan_rows(self):
@@ -457,15 +470,18 @@ class TestS2BoundParity:
         vals = np.array([0.2, 0.125, 0.124, 0.126, 2.0]) * d
         assert list(s2._min_width_max_level(vals)) == [3, 3, 4, 3, 0]
 
-    def test_cap_radius_unscaled(self):
+    def test_cap_radius_unscaled(self, monkeypatch):
         # Cap.CellUnionBound passes radius UNSCALED to MaxLevel (the round-1
         # bug used the diameter): a cap of radius r must cover at
-        # MaxLevel(r)-1, not MaxLevel(2r)-1 — one level deeper.
-        center = np.array([1.0, 0.0, 0.0])
+        # MaxLevel(r)-1, not MaxLevel(2r)-1 — one level deeper. The cap is
+        # pinned so the covering tail of the batch kernel sees exactly r.
         r = 0.124 * s2._MIN_WIDTH_DERIV
-        cells = s2.cap_cell_union_bound(center, r)
-        lv = int(s2.level_of(np.array(cells, dtype=np.uint64))[0])
-        assert lv == s2._min_width_max_level(r) - 1 == 3
+        monkeypatch.setattr(
+            s2, "_loop_cap_batch", lambda raw: (np.array([[1.0, 0.0, 0.0]]), np.array([r]))
+        )
+        toks = s2.s2covering_tokens(1.0, 1.0, 2.0, 2.0, lambda x, y: np.zeros_like(x))
+        cells = np.array([int(t.ljust(16, "0"), 16) for t in toks], dtype=np.uint64)
+        assert set(s2.level_of(cells).tolist()) == {s2._min_width_max_level(r) - 1} == {3}
 
     def test_bound_contains_edge_interiors(self):
         # The old vertex-rect bound missed latitude extrema attained in the
@@ -584,13 +600,12 @@ class TestS2CrossValidation:
             if lvl_ref < 0:
                 cells_ref = [(f << s2.POS_BITS) | (1 << (s2.POS_BITS - 1)) for f in range(6)]
             else:
-                cid = int(s2.cellid_from_point(np.asarray(center_ref).reshape(1, 3))[0])
-                cells_ref = s2.vertex_neighbors(cid, lvl_ref)
+                cells_ref = ref.vertex_neighbors_s(ref.leaf_from_point(center_ref), lvl_ref)
             if int(lvls[i]) < 0:
                 cells_got = [(f << s2.POS_BITS) | (1 << (s2.POS_BITS - 1)) for f in range(6)]
             else:
-                leaf = int(s2.cellid_from_point(centers[i].reshape(1, 3))[0])
-                cells_got = s2.vertex_neighbors(leaf, int(lvls[i]))
+                leaf = s2.cellid_from_point(centers[i].reshape(1, 3))
+                cells_got = s2.vertex_neighbors(leaf, int(lvls[i]))[0]
             assert [s2.token(c)[:8] for c in cells_got] == [s2.token(c)[:8] for c in cells_ref]
 
 
@@ -661,13 +676,12 @@ class TestS2PolarAdversarial:
             if lvl_ref < 0:
                 cells_ref = face_cells
             else:
-                cid = int(s2.cellid_from_point(np.asarray(center_ref).reshape(1, 3))[0])
-                cells_ref = s2.vertex_neighbors(cid, lvl_ref)
+                cells_ref = ref.vertex_neighbors_s(ref.leaf_from_point(center_ref), lvl_ref)
             if int(lvls[i]) < 0:
                 cells_got = face_cells
             else:
-                leaf = int(s2.cellid_from_point(centers[i].reshape(1, 3))[0])
-                cells_got = s2.vertex_neighbors(leaf, int(lvls[i]))
+                leaf = s2.cellid_from_point(centers[i].reshape(1, 3))
+                cells_got = s2.vertex_neighbors(leaf, int(lvls[i]))[0]
             assert [s2.token(c)[:8] for c in cells_got] == [
                 s2.token(c)[:8] for c in cells_ref
             ], (i, corners[i].tolist())

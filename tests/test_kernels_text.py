@@ -104,10 +104,10 @@ class TestMinHash:
             np.testing.assert_array_equal(batch[i], sketches.minhash_signature(t))
 
     def test_lsh_identical_docs_collide(self):
-        s1 = sketches.minhash_signature("a b c d e f g h i j k")
-        k1 = sketches.lsh_band_keys(s1)
-        k2 = sketches.lsh_band_keys(sketches.minhash_signature("a b c d e f g h i j k"))
-        assert k1 == k2 and len(k1) == 16
+        sig_a = sketches.minhash_signature("a b c d e f g h i j k")
+        sig_b = sketches.minhash_signature("a b c d e f g h i j k")
+        k1, k2 = sketches.lsh_band_keys_batch(np.stack([sig_a, sig_b]))
+        assert k1.tolist() == k2.tolist() and len(k1) == 16
 
 
 class TestSimHash:
@@ -150,9 +150,11 @@ class TestTwinAgreement:
     def test_band_keys(self):
         import sketch_reference_impl as skref
 
-        for t in self._random_texts(20, seed=6):
-            sig = sketches.minhash_signature(t)
-            assert sketches.lsh_band_keys(sig) == skref.lsh_band_keys_s([int(v) for v in sig])
+        texts = self._random_texts(20, seed=6)
+        sigs = sketches.minhash_signatures(pd.Series(texts))
+        keys = sketches.lsh_band_keys_batch(sigs)
+        for i, t in enumerate(texts):
+            assert keys[i].tolist() == skref.lsh_band_keys_s([int(v) for v in sigs[i]]), t
 
     def test_simhash(self):
         import sketch_reference_impl as skref
@@ -172,17 +174,13 @@ class TestTwinAgreement:
 
     def test_hyperplane_lsh_keys(self):
         import sketch_reference_impl as skref
-        from convert_spark.operators.ann import _hyperplanes
+        from convert_spark.operators.ann import _hyperplanes, lsh_vec_keys
 
         rng = np.random.RandomState(9)
         mat = rng.normal(size=(50, 64))
         bands, bits = 8, 8
         planes = _hyperplanes(64, bands * bits)
-        # production key math (the with_lsh_keys udf body, numpy form)
-        b = (mat @ planes.T) > 0
-        weights = 1 << np.arange(bits, dtype=np.int64)
-        ks = b.reshape(len(mat), bands, bits) @ weights
-        ks = ks + (np.arange(bands, dtype=np.int64) << 32)[None, :]
+        ks = lsh_vec_keys(mat, planes, bands, bits)  # the with_lsh_keys UDF body
         planes_s = [[float(v) for v in row] for row in planes]
         for i in range(len(mat)):
             twin = skref.lsh_vec_keys_s([float(v) for v in mat[i]], planes_s, bands, bits)

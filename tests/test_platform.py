@@ -3233,3 +3233,22 @@ class TestFlac:
                         fn(payload)
                     except NotImplementedError:
                         pass
+
+
+def test_jpeg_has_no_matmul_operator():
+    """The JPEG DCTs go through ``jpeg._mm8``'s one summation order. A
+    ``@`` product runs on BLAS, whose kernel is picked per CPU: an FMA
+    kernel rounds differently, which moved the encoded bytes by host."""
+    import io
+    import tokenize
+
+    from convert_spark.kernels import jpeg
+
+    toks = list(tokenize.generate_tokens(io.StringIO(Path(jpeg.__file__).read_text()).readline))
+    line_start = (tokenize.NEWLINE, tokenize.NL, tokenize.INDENT, tokenize.DEDENT)
+    hits = [
+        f"jpeg.py:{t.start[0]}"
+        for prev, t in zip(toks, toks[1:])
+        if t.type == tokenize.OP and t.string in ("@", "@=") and prev.type not in line_start
+    ]
+    assert hits == []
