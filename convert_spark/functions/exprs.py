@@ -77,29 +77,23 @@ def tile_y(lat: Column, zoom: int) -> Column:
     return F.greatest(F.least(t, F.lit(n - 1)), F.lit(0))
 
 
-def _spread_bits(c: Column) -> Column:
-    """Interleave-ready bit spread (x -> bits at even positions) for
-    values < 2^32 — five shift/mask rounds with 64-bit Morton magic
-    numbers (the 32-bit variant silently dropped tile bits past zoom
-    16; see the matching 64-bit _compress_bits inverse)."""
-    c = c.bitwiseAND(F.lit(0x00000000FFFFFFFF))
-    c = c.bitwiseOR(F.shiftleft(c, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    c = c.bitwiseOR(F.shiftleft(c, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    c = c.bitwiseOR(F.shiftleft(c, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    c = c.bitwiseOR(F.shiftleft(c, 2)).bitwiseAND(F.lit(0x3333333333333333))
-    c = c.bitwiseOR(F.shiftleft(c, 1)).bitwiseAND(F.lit(0x5555555555555555))
-    return c
-
-
 def morton_cell(tx: Column, ty: Column, zoom: int) -> Column:
-    """Zoom-prefixed Morton cell id — matches kernels.quadkey.cell_id.
+    """Zoom-prefixed Morton cell id — matches kernels.quadkey.cell_id:
+    the marker bit 2z OR, per tile bit i < z, bit i of ``tx`` at 2i and
+    of ``ty`` at 2i + 1. One term per bit references each input once, so
+    the expression, and any predicate Catalyst pastes it into, stays
+    linear in ``zoom``.
 
-    Supported for zoom <= 30 (marker bit 2z + interleaved bits stay in
-    int64; the numpy kernel caps at 26) — parity-tested against the
-    kernel through zoom 26 (tests/test_spark_pipeline.py)."""
+    Supported for zoom <= 30 (marker and bits stay in int64; the numpy
+    kernel caps at 26) — parity-tested against the kernel's interleave
+    through zoom 30 (tests/test_spark_pipeline.py)."""
     if zoom > 30:
         raise ValueError("expression morton_cell supports zoom <= 30")
-    return F.lit(1 << (2 * zoom)).cast("long") + _spread_bits(tx) + F.shiftleft(_spread_bits(ty), 1)
+    cell = F.lit(1 << (2 * zoom)).cast("long")
+    for i in range(zoom):
+        bit = F.lit(1 << i).cast("long")
+        cell = cell.bitwiseOR(F.shiftleft(tx.bitwiseAND(bit), i)).bitwiseOR(F.shiftleft(ty.bitwiseAND(bit), i + 1))
+    return cell
 
 
 def cell_parent(cell: Column, steps: int = 1) -> Column:
@@ -107,11 +101,11 @@ def cell_parent(cell: Column, steps: int = 1) -> Column:
 
 
 def _compress_bits(c: Column) -> Column:
-    """Inverse of _spread_bits16 widened to the FULL long Morton range:
-    gather bits at even positions of a 64-bit value into a compact 32-bit
-    value — five shift/or/mask rounds. Covers everything the encoders
-    produce: the expression-side morton_cell encodes through zoom 30
-    (64-bit spread since round 4) and the numpy kernel
+    """Inverse of morton_cell's interleave over the FULL long Morton
+    range: gather bits at even positions of a 64-bit value into a compact
+    32-bit value — five shift/or/mask rounds. Covers everything the
+    encoders produce: the expression-side morton_cell encodes through
+    zoom 30 and the numpy kernel
     (kernels.quadkey) through zoom 26; the old 32-bit masks silently
     dropped the high Morton bits past zoom 16."""
     c = c.bitwiseAND(F.lit(0x5555555555555555))

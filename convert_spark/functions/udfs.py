@@ -95,16 +95,6 @@ def lsh_keys(text: pd.Series) -> pd.Series:
     return pd.Series(list(sk.lsh_band_keys_batch(sigs)))
 
 
-# nondeterministic marking (optimizer fence, guide-§4.4 pattern): consumers
-# posexplode the key array, and the explode's implicit size>0/isnotnull
-# filter is otherwise pushed below upstream exchanges with a DUPLICATED
-# ArrowEvalPython — the whole signature pass ran twice, the second copy at
-# the unspread scan's parallelism (measured: the 2-task pre-spread scan
-# re-evaluated 50k signatures for 4.4 s at 10x bench scale). The function
-# is pure; the marking only stops Catalyst from cloning or reordering it.
-lsh_keys = lsh_keys.asNondeterministic()
-
-
 @F.pandas_udf(T.StringType())
 def lang_guess(text: pd.Series) -> pd.Series:
     return pd.Series(textkit.lang_scores(text)["lang"])

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.checkpoints import hold
-from ..session import spread
+from ..session import fence, spread
 
 _SEED = 42
 
@@ -256,12 +256,7 @@ def with_lsh_keys(df: DataFrame, vec_col: str = "embedding", dim: int = 64, band
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         return pd.Series(list(lsh_vec_keys(mat, planes, bands, bits_per_band)))
 
-    # optimizer fence (guide §4.4): the posexplode below carries an implicit
-    # size>0/isnotnull filter that Catalyst otherwise pushes down WITH a
-    # duplicated ArrowEvalPython — every vector's signature matmul ran twice
-    keys = keys.asNondeterministic()
-
-    return df.withColumn("lsh_keys", keys(F.col(vec_col))).select(
+    return fence(df.withColumn("lsh_keys", keys(F.col(vec_col))), "lsh_keys").select(
         "*", F.posexplode("lsh_keys").alias("band", "bucket")
     ).drop("lsh_keys")
 
@@ -653,12 +648,6 @@ def ivf_topk(
         order = np.argsort(-sims, axis=1, kind="stable")[:, : min(n_probe, c.shape[0])]
         return pd.Series(list(order.astype(np.int32)))
 
-    # optimizer fence (guide §4.4): the probes explode and the centroid
-    # join's isnotnull both push filters below these Projects with
-    # duplicated ArrowEvalPython nodes — each assignment matmul ran twice
-    nearest_centroid = nearest_centroid.asNondeterministic()
-    probe_centroids = probe_centroids.asNondeterministic()
-
     # SLIM candidate plan (round 5): the centroid equi-join carries only
     # (id, centroid); vectors re-join by id for the rerank (see
     # neardup_lsh — shuffling pair ids, not the corpus)
@@ -671,8 +660,8 @@ def ivf_topk(
     qp = spread(
         queries.select(F.col(id_q), F.col(vec_col).cast("array<double>").alias("q_emb"))
     )
-    r = rp.withColumn("centroid", nearest_centroid(F.col("r_emb"))).select(id_r, "centroid")
-    q = qp.withColumn("probes", probe_centroids(F.col("q_emb"))).select(
+    r = fence(rp.withColumn("centroid", nearest_centroid(F.col("r_emb"))), "centroid").select(id_r, "centroid")
+    q = fence(qp.withColumn("probes", probe_centroids(F.col("q_emb"))), "probes").select(
         id_q, F.explode("probes").alias("centroid")
     )
     join_keys = ["centroid"]

@@ -71,7 +71,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
     return (
         nbrs.withColumn("m", m)
-        .select(F.inline(both))
+        .select(F.explode(both).alias("e"))
+        .select("e.u", "e.v")
         .filter(F.col("u") != F.col("v"))  # m <= s < n: only (m, s) can be a self-loop
         .distinct()
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprs, udfs
+from ..session import fence
 
 
 # The one coordinate-mention grammar, shared verbatim (modulo engine
@@ -69,7 +70,7 @@ def extract_mentions(pages: DataFrame, impl: str = "sql") -> DataFrame:
     g = [F.regexp_extract(F.col("_m"), MENTION_PATTERN, i) for i in range(5)]
     lat = F.when(g[1] != "", g[1]).otherwise(g[3]).cast("double")
     lon = F.when(g[2] != "", g[2]).otherwise(g[4]).cast("double")
-    return exploded.select(
+    out = exploded.select(
         "url",
         "warc_ts",
         "lang",
@@ -78,6 +79,7 @@ def extract_mentions(pages: DataFrame, impl: str = "sql") -> DataFrame:
         lat.alias("lat"),
         lon.alias("lon"),
     )
+    return fence(out, "lat", "lon")
 
 
 def normalize_points(
@@ -90,16 +92,17 @@ def normalize_points(
     """CheckCoords semantics (convert.go:1200-1230) as a DataFrame stage:
 
     * rows with NULL/NaN x or y are dropped (F1, convert.go:574-581),
-    * x,y projected to 3857 (cm-rounded, CRS-inferred),
+    * x,y projected to 3857 (cm-rounded, CRS-inferred; they leave through
+      ``session.fence``),
     * z kept if provided, else DEM-filled (NaN lookup -> 0.0).
     """
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     valid = x.isNotNull() & y.isNotNull() & ~F.isnan(x) & ~F.isnan(y)
-    out = (
-        df.filter(valid)
-        .withColumn("x", exprs.to3857_x(x, y))
-        .withColumn("y", exprs.to3857_y(x, y))
+    out = fence(
+        df.filter(valid).withColumn("x", exprs.to3857_x(x, y)).withColumn("y", exprs.to3857_y(x, y)),
+        "x",
+        "y",
     )
     if z_col is not None:
         z = F.col(z_col).cast("double")

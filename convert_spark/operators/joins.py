@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from ..kernels import pip as pip_kernel
 from ..kernels import strtree as strtree_kernel
+from ..session import fence
 
 
 def _polygon_index(polygons_pdf: pd.DataFrame):
@@ -146,14 +147,8 @@ def pip_join(
             out[hit] = pieces
         return pd.Series(out)
 
-    # optimizer fence (guide §4.4): in inner mode the explode below has an
-    # implicit size>0/isnotnull filter that Catalyst pushes down WITH a
-    # duplicated ArrowEvalPython — every point paid the PIP probe twice
-    # (plan-confirmed; the UDF is pure, marking only stops the cloning)
-    containing_polys = containing_polys.asNondeterministic()
-
     tmp = _free_name("_polys", points)
-    tagged = points.withColumn(tmp, containing_polys(F.col(lon_col), F.col(lat_col)))
+    tagged = fence(points.withColumn(tmp, containing_polys(F.col(lon_col), F.col(lat_col))), tmp)
     ex = F.explode_outer(tmp) if how == "left" else F.explode(tmp)
     return tagged.select(*points.columns, ex.alias("poly_id"))
 

@@ -14,19 +14,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprs, udfs
+from ..session import fence
 
 
 def with_tile(df: DataFrame, zoom: int, lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
-    """Add (zoom, tile_x, tile_y, cell_id) columns — pure expressions."""
+    """Add (zoom, tile_x, tile_y, cell_id) columns — pure expressions;
+    ``tile_x``/``tile_y`` leave through ``session.fence``."""
     lat = F.col(lat_col).cast("double")
     lon = F.col(lon_col).cast("double")
-    tx = exprs.tile_x(lon, zoom)
-    ty = exprs.tile_y(lat, zoom)
-    return (
+    out = (
         df.withColumn("zoom", F.lit(zoom))
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .withColumn("cell_id", exprs.morton_cell(F.col("tile_x"), F.col("tile_y"), zoom))
+        .withColumn("tile_x", exprs.tile_x(lon, zoom))
+        .withColumn("tile_y", exprs.tile_y(lat, zoom))
+    )
+    return fence(out, "tile_x", "tile_y").withColumn(
+        "cell_id", exprs.morton_cell(F.col("tile_x"), F.col("tile_y"), zoom)
     )
 
 

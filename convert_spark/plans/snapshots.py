@@ -226,7 +226,12 @@ def run_stage_partitioned(
     only the in-flight group. Each group is one Spark job filtering the
     built DataFrame on ``partition_col``: partition or bucket the upstream
     stage on the same column so the filter prunes at the scan instead of
-    rescanning the input per group (PartitionFilters in explain)."""
+    rescanning the input per group (PartitionFilters in explain). When
+    ``partition_col`` is computed (``cell_bucket`` from ``with_tile``'s
+    ``cell_id``), Catalyst pastes its expression into the group filter:
+    the costly columns it derives from leave their operator through
+    ``session.fence``, so the filter reads the fenced value instead of
+    re-deriving it per row."""
     return _run(spark, log, stage, build, inputs, params, [partition_col], partition_values, chunk_size)
 
 

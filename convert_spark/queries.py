@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from .functions import exprs, udfs
 from .operators import joins, tiles
-from .session import spread
+from .session import fence, spread
 
 # --- shared derivations -------------------------------------------------------
 
@@ -82,18 +82,6 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at production split counts (round 8, guide §2/§6)
     _load(spark, sf_dir, "lineitem")
     return spread(spark.sql(_PTS_SQL))
-
-
-def _gen_barrier(df: DataFrame) -> DataFrame:
-    """Optimizer fence: re-emit every row through explode(array(struct)).
-    Generate output attributes are opaque to predicate pushdown, so a
-    filter above this stays above — used where Catalyst would otherwise
-    push a predicate on an expensively-COMPUTED column below its Project
-    and re-derive the whole expression tree per row just to test it
-    (round 8, guide §1.2: the predicate's copy of the chain was the
-    dominant cost of the affected stages). Select the needed columns
-    BEFORE the fence: pruning stops here by design."""
-    return df.select(F.explode(F.array(F.struct(*df.columns))).alias("__r")).select("__r.*")
 
 
 def _okeys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,16 +696,10 @@ def q_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.checkpoints import checkpoint
 
     pages = q_url_parse(spark, sf_dir).select("page_id", "reg_domain", "path")
-    # _gen_barrier: the reg_domain != '' predicate would otherwise push
-    # below the parse Projects and re-derive the whole chain per row.
     # checkpoint: `hd` feeds FIVE rule-union branches, each of which
     # would re-execute the full parse + distinct (measured ~5x the
     # query); the materialized table is ~|domains| rows (round 8).
-    doms = (
-        _gen_barrier(pages.select("reg_domain"))
-        .filter(F.col("reg_domain") != "")
-        .distinct()
-    )
+    doms = fence(pages.select("reg_domain"), "reg_domain").filter(F.col("reg_domain") != "").distinct()
     h = (F.ascii(F.substring("reg_domain", 5, 1)) + F.length("reg_domain")).alias("h")
     hd, _ = checkpoint(doms.select("reg_domain", h))
 
@@ -792,12 +774,9 @@ def _domain_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = _link_pages(spark, sf_dir)
     j = urls.extract_links(urls.with_url_parts(pages))
-    # _gen_barrier: without it the two filters push below the Projects
-    # and re-derive the full parse/resolve expression trees per row just
-    # to evaluate the predicates
-    slim = _gen_barrier(j.select("reg_domain", "resolved", "dst_reg_domain"))
     return (
-        slim.filter((F.col("resolved") != "") & (F.col("reg_domain") != ""))
+        fence(j, "reg_domain", "resolved", "dst_reg_domain")
+        .filter((F.col("resolved") != "") & (F.col("reg_domain") != ""))
         .groupBy(F.col("reg_domain").alias("src"), F.col("dst_reg_domain").alias("dst"))
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
@@ -935,11 +914,11 @@ from ({_PTS_SQL}) group by 1, 2, 3
 
 def q_tile_assign_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deep-zoom (z20) tile assignment grouped by the FULL Morton cell id
-    — exercises the round-4 64-bit bit spread (functions/exprs.py
-    _spread_bits; the old 32-bit masks were silently wrong past z16)
-    under the driver's oracle gate. The oracle restates the interleave as
-    a CTE chain of the same five shift/mask rounds in DuckDB bigint
-    arithmetic — an independent re-derivation, not a KAT."""
+    — exercises the full-width interleave (functions/exprs.morton_cell;
+    the old 32-bit masks were silently wrong past z16) under the driver's
+    oracle gate. The oracle restates the interleave as a CTE chain of five
+    shift/mask rounds in DuckDB bigint arithmetic — an independent
+    re-derivation, not a KAT."""
     pts = _points(spark, sf_dir)
     t = tiles.with_tile(pts, 20)
     return t.groupBy("zoom", "cell_id").agg(F.count(F.lit(1)).alias("n"))
@@ -2047,7 +2026,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.checkpoints import hold
 
     _load(spark, sf_dir, "documents")
-    d = spread(spark.table("documents").select("doc_id", "text"), "doc_id").withColumn("keys", udfs.lsh_keys(F.col("text")))
+    d = fence(spread(spark.table("documents").select("doc_id", "text"), "doc_id").withColumn("keys", udfs.lsh_keys(F.col("text"))), "keys")
     # compute the exploded band keys ONCE across the self-join's branches:
     # both would otherwise re-run the signature UDF (measured 1.7x on the
     # whole query). persist(), not an eager localCheckpoint — building the

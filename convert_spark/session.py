@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def num_partitions(df) -> int:
@@ -44,6 +45,31 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     if num_partitions(df) >= p:
         return df
     return df.repartition(p, *key_cols) if key_cols else df.repartition(p)
+
+
+def fence(df: DataFrame, *names: str) -> DataFrame:
+    """``df`` with its columns ``names`` re-emitted through one
+    ``inline(array(struct(...)))`` Generate: the engine's one optimizer
+    fence.
+
+    The rule: a column computed by a costly expression (a Python UDF, a
+    regex or trig chain) leaves the operator that computes it through
+    this fence whenever a predicate may sit above it. Catalyst pushes a
+    predicate below the Project that computes a column by pasting in the
+    column's whole expression, so the filter re-derives the value per row
+    (a deterministic Python UDF plans a second ArrowEvalPython). The
+    implicit ``size > 0`` / ``isnotnull`` filter of an explode, a join's
+    ``isnotnull`` and a per-group ``cell_bucket IN (...)`` filter all do
+    this. A Generate's output is opaque to pushdown, so every consumer
+    above the fence reads the value computed once below it.
+
+    Every other column passes through as a plain child column, so
+    predicates on it still push to the scan (PushedFilters, partition
+    pruning) and column pruning still reaches it. Column order, names,
+    types and nullability are kept, and the one-element array yields
+    exactly one row per input row."""
+    rest = [c for c in df.columns if c not in names]
+    return df.select(*rest, F.inline(F.array(F.struct(*names)))).select(*df.columns)
 
 
 def _memory_defaults(ram_bytes: int) -> tuple[str, str]:

@@ -395,3 +395,91 @@ class TestIncrementalPlans:
         plan = plan_of(Q.q_tile_incremental(spark, SF))
         assert "BatchEvalPython" not in plan, plan
         assert "ArrowEvalPython" not in plan, plan
+
+
+def udf_evals(plan: str, name: str) -> set[str]:
+    """The distinct ArrowEvalPython nodes that evaluate the UDF ``name``.
+    A cached subplan prints once per scan of it, with the same ids, so it
+    counts once; a copy cloned into a pushed-down filter has its own."""
+    return {
+        ln[ln.index("ArrowEvalPython") :]
+        for ln in plan.splitlines()
+        if f"ArrowEvalPython [{name}(" in ln
+    }
+
+
+class TestOptimizerFence:
+    """Computed columns leave their operator through session.fence, so a
+    predicate above reads the value instead of re-deriving it."""
+
+    def test_bucket_filter_reads_fenced_tile(self, spark):
+        """The per-group filter of the tiled stage (cell_bucket IN (...))
+        holds no copy of tile_y's tan/log chain: one TAN, in the Project
+        under the fence; unfenced, the filter pastes a copy into every
+        Morton term."""
+        pts = spark.createDataFrame(
+            [(float(i % 80) - 40.0, float(i % 170) - 85.0) for i in range(50)], "lat double, lon double"
+        )
+        tiled = tiles.with_tile(pts, 12).withColumn("cell_bucket", F.pmod(F.col("cell_id"), F.lit(16)).cast("int"))
+        plan = plan_of(tiled.filter(F.col("cell_bucket").isin([0, 1, 2, 3])))
+        assert plan.upper().count("TAN(") == 1, plan
+
+    def test_tile_chain_extracts_each_group_once(self, spark):
+        """extract -> normalize -> with_tile -> tile_datasets evaluates the
+        five capture groups of the mention regex once per mention (plus
+        the one lat/lon pick): the normalize validity filter and the tile
+        columns read the fenced lat/lon (18 regexp_extract unfenced)."""
+        pages = datagen.webpages(spark, 10)
+        pts = extract.normalize_points(extract.extract_mentions(pages))
+        plan = plan_of(tiles.tile_datasets(tiles.with_tile(pts, 12)))
+        assert plan.count("regexp_extract(") <= 6, plan
+
+    @pytest.mark.parametrize("how", ["inner", "left"])
+    def test_pip_udf_evaluated_once(self, spark, how):
+        pts = spark.createDataFrame([(1.0, 2.0)], "lon double, lat double")
+        plan = plan_of(joins.pip_join(pts, datagen.polygons_pdf(), how=how))
+        assert len(udf_evals(plan, "containing_polys")) == 1, plan
+
+    def test_lsh_keys_udf_evaluated_once(self, spark):
+        from convert_spark.operators import ann
+
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        plan = plan_of(ann.with_lsh_keys(e, "embedding"))
+        assert len(udf_evals(plan, "keys")) == 1, plan
+
+    def test_ivf_udfs_evaluated_once(self, spark):
+        from convert_spark.operators import ann
+
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        q = e.filter(F.col("vec_id") % 50 == 0).select(F.col("vec_id").alias("query_id"), "embedding")
+        r = e.select(F.col("vec_id").alias("ref_id"), "embedding")
+        out = ann.ivf_topk(q, r, k=3)  # held: its cached refs live as long as it
+        plan = plan_of(out)
+        assert len(udf_evals(plan, "nearest_centroid")) == 1, plan
+        assert len(udf_evals(plan, "probe_centroids")) == 1, plan
+
+    def test_minhash_lsh_udf_evaluated_once(self, spark):
+        out = Q.q_minhash_lsh(spark, SF)
+        plan = plan_of(out)
+        assert len(udf_evals(plan, "lsh_keys")) == 1, plan
+
+
+def test_one_optimizer_fence():
+    """session.fence is the engine's one optimizer fence: no UDF is marked
+    nondeterministic to stop Catalyst cloning it, and no other code builds
+    the one-element generator (``inline`` in a plan means the fence)."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    marks = ("asNondeterministic(", "F.inline(", "explode(F.array(F.struct(")
+    owners = set()
+    for d in ("convert_spark", "jobs"):
+        for p in sorted((repo / d).rglob("*.py")):
+            src = p.read_text()
+            hits = [i for i, line in enumerate(src.splitlines(), 1) if any(m in line for m in marks)]
+            funcs = [n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)] if hits else []
+            for i in hits:
+                names = [f.name for f in funcs if f.lineno <= i <= f.end_lineno]
+                owners.add((str(p.relative_to(repo)), names[-1] if names else None))
+    assert owners == {("convert_spark/session.py", "fence")}

@@ -68,10 +68,13 @@ class TestExprKernelParity:
         lat = rng.uniform(-85.05, 85.05, 300)
         pdf = pd.DataFrame({"lon": lon, "lat": lat})
         df = spark.createDataFrame(pdf)
-        for zoom in (3, 8, 12, 16, 17, 20, 26):  # >16: 64-bit spread path
+        for zoom in (0, 1, 3, 8, 12, 16, 17, 20, 26, 30):  # >16: bits past int32
             got = tiles.with_tile(df, zoom).select("tile_x", "tile_y", "cell_id").toPandas()
             ktx, kty = quadkey.latlon_to_tile(lat, lon, zoom)
-            kcell = quadkey.cell_id(lat, lon, zoom)
+            # the kernel's cell_id caps at zoom 26; its interleave does not
+            kcell = (np.int64(1) << (2 * zoom)) + quadkey._interleave(ktx, kty, zoom)
+            if zoom <= quadkey.MAX_ZOOM:
+                np.testing.assert_array_equal(quadkey.cell_id(lat, lon, zoom), kcell)
             np.testing.assert_array_equal(got["tile_x"], ktx)
             np.testing.assert_array_equal(got["tile_y"], kty)
             np.testing.assert_array_equal(got["cell_id"], kcell)
@@ -95,6 +98,57 @@ class TestExprKernelParity:
             np.testing.assert_array_equal(got["z"], kz)
             np.testing.assert_array_equal(got["tx"], ktx)
             np.testing.assert_array_equal(got["ty"], kty)
+
+
+class TestFencedSchemas:
+    """with_tile, extract_mentions and normalize_points route their
+    computed columns through session.fence: names, order, types and
+    nullability are those of the plain withColumn chain they replaced,
+    and so are the rows."""
+
+    @staticmethod
+    def fields(df):
+        return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+    def test_with_tile_equals_withcolumn_chain(self, spark):
+        plain = spark.createDataFrame([(1.5, -2.25, "a"), (None, 170.0, "b")], "lat double, lon double, k string")
+        # carries the output names already: the chain replaced them in place
+        carried = spark.createDataFrame(
+            [(1, 1.5, -2.25, 4, "5", 6.0, "a")],
+            "zoom int, lat double, lon double, tile_x int, cell_id string, tile_y double, k string",
+        )
+        for df in (plain, carried):
+            got = tiles.with_tile(df, 12)
+            want = (
+                df.withColumn("zoom", F.lit(12))
+                .withColumn("tile_x", exprs.tile_x(F.col("lon").cast("double"), 12))
+                .withColumn("tile_y", exprs.tile_y(F.col("lat").cast("double"), 12))
+                .withColumn("cell_id", exprs.morton_cell(F.col("tile_x"), F.col("tile_y"), 12))
+            )
+            assert self.fields(got) == self.fields(want)
+            assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+        assert [n for n, _, _ in self.fields(tiles.with_tile(carried, 12))] == [
+            "zoom", "lat", "lon", "tile_x", "cell_id", "tile_y", "k"
+        ]
+
+    def test_extract_and_normalize_schemas(self, spark, pages):
+        head = [
+            ("url", "string", True),
+            ("warc_ts", "timestamp", True),
+            ("lang", "string", True),
+            ("page_id", "bigint", True),
+            ("mention_idx", "int", False),
+            ("lat", "double", True),
+            ("lon", "double", True),
+        ]
+        xy = [("x", "double", True), ("y", "double", True)]
+        m = extract.extract_mentions(pages)
+        assert self.fields(m) == head
+        assert self.fields(extract.normalize_points(m)) == head + xy + [("z", "double", True)]
+        assert self.fields(extract.normalize_points(m, fill_z_from_dem=False)) == head + xy + [("z", "double", False)]
+        # a z column already present is replaced in place, ahead of x/y
+        zin = m.withColumn("z", F.lit(1.0))
+        assert self.fields(extract.normalize_points(zin, z_col="z")) == head + [("z", "double", False)] + xy
 
 
 class TestExtraction:
