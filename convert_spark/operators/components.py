@@ -71,8 +71,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
     return (
         nbrs.withColumn("m", m)
-        .select(F.explode(both).alias("e"))
-        .select("e.u", "e.v")
+        .select(F.inline(both))
         .filter(F.col("u") != F.col("v"))  # m <= s < n: only (m, s) can be a self-loop
         .distinct()
     )

@@ -92,17 +92,16 @@ def normalize_points(
     """CheckCoords semantics (convert.go:1200-1230) as a DataFrame stage:
 
     * rows with NULL/NaN x or y are dropped (F1, convert.go:574-581),
-    * x,y projected to 3857 (cm-rounded, CRS-inferred; they leave through
-      ``session.fence``),
+    * x,y projected to 3857 (cm-rounded, CRS-inferred),
     * z kept if provided, else DEM-filled (NaN lookup -> 0.0).
     """
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     valid = x.isNotNull() & y.isNotNull() & ~F.isnan(x) & ~F.isnan(y)
-    out = fence(
-        df.filter(valid).withColumn("x", exprs.to3857_x(x, y)).withColumn("y", exprs.to3857_y(x, y)),
-        "x",
-        "y",
+    out = (
+        df.filter(valid)
+        .withColumn("x", exprs.to3857_x(x, y))
+        .withColumn("y", exprs.to3857_y(x, y))
     )
     if z_col is not None:
         z = F.col(z_col).cast("double")

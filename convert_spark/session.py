@@ -54,10 +54,10 @@ def fence(df: DataFrame, *names: str) -> DataFrame:
 
     The rule: a column computed by a costly expression (a Python UDF, a
     regex or trig chain) leaves the operator that computes it through
-    this fence whenever a predicate may sit above it. Catalyst pushes a
-    predicate below the Project that computes a column by pasting in the
-    column's whole expression, so the filter re-derives the value per row
-    (a deterministic Python UDF plans a second ArrowEvalPython). The
+    this fence when a filter or join above it reads the column. Catalyst
+    pushes a predicate below the Project that computes a column by pasting
+    in the column's whole expression, so the filter re-derives the value
+    per row (a deterministic Python UDF plans a second ArrowEvalPython). The
     implicit ``size > 0`` / ``isnotnull`` filter of an explode, a join's
     ``isnotnull`` and a per-group ``cell_bucket IN (...)`` filter all do
     this. A Generate's output is opaque to pushdown, so every consumer

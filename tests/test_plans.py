@@ -466,20 +466,16 @@ class TestOptimizerFence:
 
 def test_one_optimizer_fence():
     """session.fence is the engine's one optimizer fence: no UDF is marked
-    nondeterministic to stop Catalyst cloning it, and no other code builds
-    the one-element generator (``inline`` in a plan means the fence)."""
-    import ast
+    nondeterministic to stop Catalyst cloning it, and the old
+    ``_gen_barrier`` helper is gone."""
     from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
-    marks = ("asNondeterministic(", "F.inline(", "explode(F.array(F.struct(")
-    owners = set()
-    for d in ("convert_spark", "jobs"):
-        for p in sorted((repo / d).rglob("*.py")):
-            src = p.read_text()
-            hits = [i for i, line in enumerate(src.splitlines(), 1) if any(m in line for m in marks)]
-            funcs = [n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)] if hits else []
-            for i in hits:
-                names = [f.name for f in funcs if f.lineno <= i <= f.end_lineno]
-                owners.add((str(p.relative_to(repo)), names[-1] if names else None))
-    assert owners == {("convert_spark/session.py", "fence")}
+    hits = [
+        f"{p.relative_to(repo)}:{i}"
+        for d in ("convert_spark", "jobs")
+        for p in sorted((repo / d).rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "asNondeterministic(" in line or "_gen_barrier" in line
+    ]
+    assert hits == []

@@ -101,10 +101,10 @@ class TestExprKernelParity:
 
 
 class TestFencedSchemas:
-    """with_tile, extract_mentions and normalize_points route their
-    computed columns through session.fence: names, order, types and
-    nullability are those of the plain withColumn chain they replaced,
-    and so are the rows."""
+    """with_tile and extract_mentions route their computed columns through
+    session.fence: names, order, types and nullability are those of the
+    plain withColumn chain they replaced, and so are the rows; the
+    normalize_points schema over a fenced extract is unchanged too."""
 
     @staticmethod
     def fields(df):
